@@ -708,7 +708,7 @@ def _q_flatten_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_workers_can_import(spark)
     docs = assemble_documents(transcripts_from_events(spark, sf_dir))
-    return flatten_corpus_stats(docs)
+    return split_quarantine(flatten_corpus_stats(docs))[0]
 
 
 def _q_html_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,7 +990,9 @@ def _q_compact_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "idx": {"@id": _V + "turnIndex", "@type": _X + "integer"},
         "who": {"@id": _V + "role"},
     }
-    return compact_corpus_stats(docs, target_ctx, "turns", ["idx", "who"])
+    return split_quarantine(
+        compact_corpus_stats(docs, target_ctx, "turns", ["idx", "who"])
+    )[0]
 
 
 def _q_list_chain_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1056,7 +1058,7 @@ def _q_framed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "@context": {"@vocab": _V},
         "@type": "Conversation",
     }
-    return frame_corpus_stats(docs, triples, frame_doc)
+    return split_quarantine(frame_corpus_stats(docs, triples, frame_doc))[0]
 
 
 def _q_framed_tool_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,10 +1074,10 @@ def _q_framed_tool_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = assemble_documents(transcripts_from_events(spark, sf_dir))
     triples, _ = split_quarantine(docs_to_triples(docs))
     frame_doc = {"@context": {"@vocab": _V}, "@type": "Turn", "tool": {}}
-    return frame_match_stats(
+    return split_quarantine(frame_match_stats(
         docs, triples, frame_doc, value_prop="tool",
         options={"requireAll": True},
-    )
+    ))[0]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -7,8 +7,9 @@ as idiomatic Spark dataflow over tables of multi-turn agent transcripts.
 
 Design (see SURVEY.md):
   - the parallel axis is *documents* (conversations): the recursive, dynamically
-    shaped JSON-LD tree algorithms run as pure functions inside Arrow-batched
-    ``applyInPandas`` / ``mapInPandas`` stages (no per-row Python UDFs);
+    shaped JSON-LD tree algorithms run as pure functions inside one
+    Arrow-batched per-document runner (``operators/doc_runner.py``:
+    ``mapInArrow`` / ``applyInArrow``; no per-row Python UDFs);
   - everything relational (assembly windows, triple projection, dedup,
     hash aggregation, canonicalization fixpoint) is DataFrame/SQL so Catalyst
     gets pushdown/pruning/AQE for free;

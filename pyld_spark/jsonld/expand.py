@@ -5,7 +5,8 @@ _expand/_expand_object/_expand_value (/root/reference/lib/pyld/jsonld.py:
 1984-2786, 3746-3818) verified in tests against the reference oracle.
 
 Spark role (SURVEY.md §2.3): this whole module is a pure function of
-(document, processed context) and runs inside `applyInPandas` batches —
+(document, processed context) and runs inside the per-document runner's
+Arrow batches (`operators/doc_runner.py`) —
 the parallel axis is documents, never tree nodes. Dropped (non-expandable)
 keys are reported through the optional ``on_dropped`` callback, which the
 Spark stage wires to per-partition metric counters.

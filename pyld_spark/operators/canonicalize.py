@@ -11,7 +11,7 @@ Re-expresses URDNA2015's control flow (reference:
    path (labels are issued in sorted-hash order when every hash is unique);
 3. documents with colliding hashes (automorphic gadgets — rare: transcript
    bnodes come from @list chains, which hash uniquely) fall back to the exact
-   per-document URDNA2015 in a grouped Arrow UDF.
+   per-document URDNA2015 in a grouped Arrow UDF (``applyInArrow``).
 
 Everything partitions by ``doc_id``: bnodes are doc-namespaced, so no
 canonicalization component ever spans documents, and the groupBys shuffle on
@@ -20,18 +20,17 @@ the same key the triples table is already clustered by.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pyld_spark.operators.doc_runner import rows_to_quads
 
 _LABEL_SCHEMA = StructType(
     [
@@ -132,7 +131,7 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
     """Deterministic WL-style hash refinement for OVERSIZED ambiguous docs.
 
     The exact per-doc URDNA2015 fallback puts a whole document into one
-    ``applyInPandas`` group and, on large automorphic structures (e.g. a
+    ``applyInArrow`` group and, on large automorphic structures (e.g. a
     symmetric cycle of 10^6 bnodes where every first-degree hash collides),
     hash-n-degree explores permutations — unbounded CPU *and* one-executor
     memory. Docs whose quad count exceeds the guard route here instead:
@@ -280,39 +279,23 @@ def canonical_labels(
 
     hard_triples = triples.join(F.broadcast(small_docs), "doc_id", "left_semi")
 
-    def exact(pdf: pd.DataFrame) -> pd.DataFrame:
+    label_arrow = to_arrow_schema(_LABEL_SCHEMA)
+
+    def exact(key, table):
+        import pyarrow as pa
+
         from pyld_spark.jsonld.canon import URDNA2015
 
-        out = []
-        doc_id = pdf["doc_id"].iloc[0]
-        # sort for run-to-run determinism: partition arrival order must never
-        # influence tie-breaks between automorphic bnodes
-        pdf = pdf.sort_values(
-            ["graph", "subj", "pred", "obj_kind", "obj_value"], kind="mergesort"
+        doc_id = key[0].as_py()
+        mapping = URDNA2015().main(rows_to_quads(table))
+        return pa.Table.from_pylist(
+            [{"doc_id": doc_id, "bnode": old, "label": new}
+             for old, new in mapping.items()],
+            schema=label_arrow,
         )
-        quads = []
-        for r in pdf.itertuples(index=False):
-            subj = (
-                {"type": "blank node", "value": r.subj}
-                if r.subj.startswith("_:")
-                else {"type": "IRI", "value": r.subj}
-            )
-            pred = {"type": "IRI", "value": r.pred}
-            if r.obj_kind == "literal":
-                obj = {"type": "literal", "value": r.obj_value,
-                       "datatype": r.obj_datatype}
-                if isinstance(r.obj_language, str):
-                    obj["language"] = r.obj_language
-            else:
-                obj = {"type": r.obj_kind, "value": r.obj_value}
-            quads.append((subj, pred, obj, r.graph))
-        mapping = URDNA2015().main(quads)
-        for old, new in mapping.items():
-            out.append((doc_id, old, new))
-        return pd.DataFrame(out, columns=["doc_id", "bnode", "label"])
 
-    # applyInPandas guarantees each UDF call sees one whole document
-    hard = hard_triples.groupBy("doc_id").applyInPandas(exact, _LABEL_SCHEMA)
+    # applyInArrow guarantees each UDF call sees one whole document
+    hard = hard_triples.groupBy("doc_id").applyInArrow(exact, _LABEL_SCHEMA)
     oversized = _wl_refined_labels(
         triples.join(F.broadcast(big_docs), "doc_id", "left_semi"),
         fd.join(F.broadcast(big_docs), "doc_id", "left_semi"),

@@ -1,56 +1,42 @@
 """Corpus-scale compaction (SURVEY.md §2.7): the ``compact`` API
 (reference semantics: /root/reference/lib/pyld/jsonld.py:577-670 API entry,
-1414-1982 algorithm) applied per document in an Arrow-batched UDF — the
-distributed path a user compacting a whole corpus takes.
+1414-1982 algorithm) applied per document — the distributed path a user
+compacting a whole corpus takes.
 
-Like the other document stages this is a narrow ``mapInPandas`` (no
-shuffle, pipelined with the scan); target contexts are processed once per
-executor via the library's context machinery, and spec errors become
-quarantine rows instead of task failures.
+Like the other document stages each function here is one kernel call run by
+:func:`pyld_spark.operators.doc_runner.map_docs` (narrow ``mapInArrow``, no
+shuffle, pipelined with the scan); spec errors become quarantine rows
+instead of task failures.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField
 
-COMPACTED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("compacted", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
-)
+from pyld_spark.operators.doc_runner import doc_schema, map_docs
+
+COMPACTED_SCHEMA = doc_schema(StructField("compacted", StringType(), True))
+
+
+def _md5(values) -> str:
+    return hashlib.md5(",".join(values).encode("utf-8")).hexdigest()
 
 
 def compact_documents(docs: DataFrame, target_ctx: dict,
                       id_col: str = "conv_id", doc_col: str = "doc") -> DataFrame:
     """(doc_id, doc json) → (doc_id, compacted json, error_code)."""
-    ctx_json = json.dumps(target_ctx)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compacted(_doc_id, doc_json):
         from pyld_spark.jsonld import api
-        from pyld_spark.jsonld.errors import JsonLdError
 
-        ctx = json.loads(ctx_json)
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    compacted = api.compact(json.loads(doc_json), ctx)
-                    rows.append((doc_id, json.dumps(compacted, sort_keys=True), None))
-                except JsonLdError as e:
-                    rows.append((doc_id, None, e.code))
-                except Exception as e:  # noqa: BLE001 — quarantine, never crash
-                    rows.append((doc_id, None, f"internal error: {type(e).__name__}"))
-            yield pd.DataFrame(rows, columns=["doc_id", "compacted", "error_code"])
+        return [(json.dumps(api.compact(json.loads(doc_json), target_ctx),
+                            sort_keys=True),)]
 
-    return docs.mapInPandas(run, COMPACTED_SCHEMA)
+    return map_docs(docs, compacted, COMPACTED_SCHEMA, id_col, doc_col)
 
 
 def flatten_corpus_stats(
@@ -62,39 +48,23 @@ def flatten_corpus_stats(
     number of flattened top-level nodes and an md5 over the sorted node
     @ids (IRIs and the deterministic ``_:bN`` relabeled blank nodes) —
     certifying node-map construction and bnode issuance order relationally.
-    Returns (doc_id, n_nodes, ids_md5)."""
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("n_nodes", LongType(), True),
-            StructField("ids_md5", StringType(), True),
-        ]
+    Returns (doc_id, n_nodes, ids_md5, error_code)."""
+    schema = doc_schema(
+        StructField("n_nodes", LongType(), True),
+        StructField("ids_md5", StringType(), True),
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
+    def stats(_doc_id, doc_json):
         from pyld_spark.jsonld import api
 
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    flattened = api.flatten(json.loads(doc_json))
-                except Exception:  # noqa: BLE001 — quarantine, never crash
-                    rows.append((doc_id, None, None))
-                    continue
-                ids = sorted(
-                    n.get("@id", "") for n in flattened if isinstance(n, dict)
-                )
-                rows.append((
-                    doc_id,
-                    len(ids),
-                    hashlib.md5(",".join(ids).encode("utf-8")).hexdigest(),
-                ))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_nodes", "ids_md5"])
+        ids = sorted(
+            n.get("@id", "")
+            for n in api.flatten(json.loads(doc_json))
+            if isinstance(n, dict)
+        )
+        return [(len(ids), _md5(ids))]
 
-    return docs.mapInPandas(run, schema)
+    return map_docs(docs, stats, schema, id_col, doc_col)
 
 
 def compact_corpus_stats(
@@ -111,43 +81,24 @@ def compact_corpus_stats(
     compacted ``list_term`` array to verifiable columns: item count plus an
     md5 over the ordered comma-joined values of each ``item_keys`` entry —
     certifying term selection, container compaction, and list order against
-    a relational oracle. Returns (doc_id, n_items, <key>_md5 ...).
+    a relational oracle. Returns (doc_id, n_items, <key>_md5 ..., error_code).
     """
-    ctx_json = json.dumps(target_ctx)
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("n_items", LongType(), True),
-            *[StructField(f"{k}_md5", StringType(), True) for k in item_keys],
-        ]
+    schema = doc_schema(
+        StructField("n_items", LongType(), True),
+        *[StructField(f"{k}_md5", StringType(), True) for k in item_keys],
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
+    def stats(_doc_id, doc_json):
         from pyld_spark.jsonld import api
 
-        ctx = json.loads(ctx_json)
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    compacted = api.compact(json.loads(doc_json), ctx)
-                except Exception:  # noqa: BLE001 — quarantine, never crash
-                    rows.append(tuple([doc_id, None] + [None] * len(item_keys)))
-                    continue
-                items = compacted.get(list_term)
-                if isinstance(items, dict):
-                    items = items.get("@list", [])
-                if not isinstance(items, list):
-                    items = []
-                row = [doc_id, len(items)]
-                for key in item_keys:
-                    joined = ",".join(
-                        str(it.get(key)) for it in items if isinstance(it, dict)
-                    )
-                    row.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
-                rows.append(tuple(row))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        items = api.compact(json.loads(doc_json), target_ctx).get(list_term)
+        if isinstance(items, dict):
+            items = items.get("@list", [])
+        if not isinstance(items, list):
+            items = []
+        return [(len(items), *(
+            _md5(str(it.get(key)) for it in items if isinstance(it, dict))
+            for key in item_keys
+        ))]
 
-    return docs.mapInPandas(run, schema)
+    return map_docs(docs, stats, schema, id_col, doc_col)

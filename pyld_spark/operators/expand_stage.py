@@ -1,11 +1,11 @@
 """Spark stages: JSON-LD documents → expanded form → RDF triples / canonical
-N-Quads, as Arrow-batched transforms (``mapInArrow`` for the fat triples
-stage — no pandas round-trip; ``mapInPandas`` for the thin per-doc outputs).
+N-Quads.
 
 Scale design (SURVEY.md §3.1):
 - the only shuffle in the whole doc path is the assembly ``groupBy(conv_id)``;
-  expansion/toRDF/canonicalization are per-row ``mapInPandas`` (narrow, no
-  exchange, pipelined with the scan);
+  expansion/toRDF/canonicalization run per document in the narrow
+  ``mapInArrow`` runner of :mod:`pyld_spark.operators.doc_runner` (no
+  exchange, pipelined with the scan, no pandas round-trip);
 - contexts: static pipeline contexts are processed once per *executor process*
   (module-level cache keyed by canonical JSON of the inline @context), not per
   document;
@@ -17,39 +17,26 @@ Scale design (SURVEY.md §3.1):
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 from collections import OrderedDict
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-TRIPLE_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("subj", StringType(), True),
-        StructField("pred", StringType(), True),
-        StructField("obj_kind", StringType(), True),
-        StructField("obj_value", StringType(), True),
-        StructField("obj_datatype", StringType(), True),
-        StructField("obj_language", StringType(), True),
-        StructField("graph", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
+from pyld_spark.operators.doc_runner import (
+    NULL_DOC_CODE,
+    TRIPLE_COLUMNS,
+    doc_bnode_namespace,
+    doc_schema,
+    map_docs,
+    quads_to_rows,
 )
+from pyld_spark.transcripts import DOC_SHAPE_META_KEY, TRANSCRIPT_SHAPE_V1
 
-NQUADS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("nquads", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
-)
+TRIPLE_SCHEMA = doc_schema(*(StructField(c, StringType(), True) for c in TRIPLE_COLUMNS))
+
+NQUADS_SCHEMA = doc_schema(StructField("nquads", StringType(), True))
 
 # executor-process-level LRU cache of processed contexts (keyed by canonical
 # JSON); OrderedDict move-to-end on hit, evict oldest single entry at capacity
@@ -79,12 +66,6 @@ def _processed_context(ctx_value, base_url):
         )
         _CTX_CACHE[key] = cached
     return cached
-
-
-def _doc_bnode_namespace(doc_id: str) -> str:
-    # sha256 (not sha1): reproducible in both Spark SQL (sha2(x,256)) and
-    # DuckDB (sha256(x)), so the oracle can reconstruct namespaced bnode ids
-    return "_:d" + hashlib.sha256(doc_id.encode("utf-8")).hexdigest()[:16]
 
 
 def _doc_to_quads(doc_json: str, base_url: str | None):
@@ -149,7 +130,7 @@ def _compiled_transcript_triples(
             StructField("ts", StringType()),
         ]
     )
-    doc_schema = StructType(
+    parsed_schema = StructType(
         [
             StructField("@id", StringType()),
             StructField(
@@ -182,18 +163,21 @@ def _compiled_transcript_triples(
     # multi-referenced aliases un-inlined.
     parsed_docs = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.from_json(F.col(doc_col), doc_schema).alias("_p"),
+        F.from_json(F.col(doc_col), parsed_schema).alias("_p"),
+        F.col(doc_col).isNull().alias("_null"),
     ).select(
         "doc_id",
+        "_null",
         F.col("_p")["@id"].alias("_conv"),
         F.col("_p")["turns"]["@list"].alias("_turns"),
         # doc-namespaced cons-cell labels: identical bytes to
-        # _doc_bnode_namespace(doc_id) + "_b" + list position
+        # doc_bnode_namespace(doc_id) + "_b" + list position
         F.concat(
             F.lit("_:d"), F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 16)
         ).alias("_ns"),
     ).select(
-        "doc_id", "_conv", "_turns", "_ns", F.size(F.col("_turns")).alias("_n")
+        "doc_id", "_null", "_conv", "_turns", "_ns",
+        F.size(F.col("_turns")).alias("_n"),
     )
     conv = F.col("_conv")
     turns = F.col("_turns")
@@ -227,17 +211,25 @@ def _compiled_transcript_triples(
         F.when(n > 0, t(conv, VOCAB + "turns", "blank node", cell(F.lit(0))))
         .otherwise(t(conv, VOCAB + "turns", "IRI", F.lit(rdf_ns + "nil"))),
     )
-    all_triples = F.concat(conv_triples, F.coalesce(F.flatten(per_turn), F.array()))
+    # a null doc (null conv_id upstream) is one quarantine row, with the
+    # code the kernel gives it
+    is_null = F.col("_null")
+    quarantine = F.array(F.struct(*(
+        F.lit(None).cast("string").alias(c) for c in TRIPLE_COLUMNS[:-1]
+    )))
+    all_triples = F.when(is_null, quarantine).otherwise(
+        F.concat(conv_triples, F.coalesce(F.flatten(per_turn), F.array()))
+    )
 
     return (
-        parsed_docs.select("doc_id", F.explode(all_triples).alias("t"))
+        parsed_docs.select("doc_id", "_null", F.explode(all_triples).alias("t"))
         .where(F.col("t").isNotNull())
         .select(
             "doc_id",
             "t.subj", "t.pred", "t.obj_kind", "t.obj_value",
             "t.obj_datatype", "t.obj_language",
-            F.lit("@default").alias("graph"),
-            F.lit(None).cast("string").alias("error_code"),
+            F.when(~is_null, F.lit("@default")).alias("graph"),
+            F.when(is_null, F.lit(NULL_DOC_CODE)).alias("error_code"),
         )
     )
 
@@ -252,12 +244,11 @@ def docs_to_triples(
 ) -> DataFrame:
     """(doc_id, doc json) → flat triples table (+ quarantine rows).
 
-    Narrow ``mapInArrow`` — scales linearly with input partitions; no
-    shuffle, and no pandas round-trip: input strings come straight off the
-    Arrow batch (``to_pylist``) and output columns are built as plain Python
-    lists converted once to Arrow arrays. On the 2M-turn scaling corpus the
-    pandas conversion both ways was the largest non-kernel cost of the
-    stage (JVM→Python transport share), so this is the scale path.
+    Runs the expand → toRDF kernel once per document in the
+    :func:`~pyld_spark.operators.doc_runner.map_docs` runner (narrow
+    ``mapInArrow``, no pandas round-trip — on the 2M-turn scaling corpus
+    the pandas conversion both ways was the largest non-kernel cost of this
+    stage).
 
     ``base_col`` names an optional per-document base-IRI column (e.g. the
     ``<base href>`` extracted by the HTML ingestion source); it overrides
@@ -266,105 +257,24 @@ def docs_to_triples(
     Docs whose ``doc_col`` carries the ``transcript-v1`` shape tag (set only
     by :func:`pyld_spark.transcripts.assemble_documents`, which constructs
     the JSON itself) compile to an equivalent pure-JVM projection instead —
-    see :func:`_compiled_transcript_triples`. Set
-    ``PYLD_SPARK_COMPILED_DOCS=0`` to force the general kernel.
+    see :func:`_compiled_transcript_triples`.
     """
-    if (
-        base_url is None
-        and base_col is None
-        and namespace_bnodes
-        and os.environ.get("PYLD_SPARK_COMPILED_DOCS", "1") != "0"
-    ):
+    if base_url is None and base_col is None and namespace_bnodes:
         try:
             meta = docs.schema[doc_col].metadata
         except Exception:  # noqa: BLE001 — missing column surfaces later
             meta = None
-        if meta and meta.get("pyld_spark.doc_shape") == "transcript-v1":
+        if meta and meta.get(DOC_SHAPE_META_KEY) == TRANSCRIPT_SHAPE_V1:
             return _compiled_transcript_triples(docs, id_col, doc_col)
 
-    def run(batches) -> Iterator:
-        import pyarrow as pa
+    def triples(doc_id, doc_json, base=None):
+        quads = _doc_to_quads(doc_json, base_url if base is None else base)
+        return quads_to_rows(
+            quads, doc_bnode_namespace(doc_id) if namespace_bnodes else None
+        )
 
-        from pyld_spark.jsonld.errors import JsonLdError
-
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index(id_col)).to_pylist()
-            djs = batch.column(batch.schema.get_field_index(doc_col)).to_pylist()
-            if base_col is not None:
-                bases = batch.column(
-                    batch.schema.get_field_index(base_col)
-                ).to_pylist()
-            else:
-                bases = None
-            c_doc: list = []
-            c_subj: list = []
-            c_pred: list = []
-            c_okind: list = []
-            c_oval: list = []
-            c_odt: list = []
-            c_olang: list = []
-            c_graph: list = []
-            c_err: list = []
-            for row_idx, (doc_id, doc_json) in enumerate(zip(ids, djs)):
-                row_base = base_url
-                if bases is not None and bases[row_idx] is not None:
-                    row_base = bases[row_idx]
-                try:
-                    quads = _doc_to_quads(doc_json, row_base)
-                except JsonLdError as e:
-                    c_doc.append(doc_id)
-                    for col in (c_subj, c_pred, c_okind, c_oval, c_odt,
-                                c_olang, c_graph):
-                        col.append(None)
-                    c_err.append(e.code)
-                    continue
-                except Exception as e:  # noqa: BLE001 — quarantine, never crash
-                    c_doc.append(doc_id)
-                    for col in (c_subj, c_pred, c_okind, c_oval, c_odt,
-                                c_olang, c_graph):
-                        col.append(None)
-                    c_err.append(f"internal error: {type(e).__name__}")
-                    continue
-                ns = _doc_bnode_namespace(doc_id) if namespace_bnodes else None
-
-                def fix(v: str) -> str:
-                    if ns is not None and v.startswith("_:"):
-                        return ns + "_" + v[2:]
-                    return v
-
-                for subj, pred, obj, graph in quads:
-                    sv = subj["value"]
-                    if subj["type"] == "blank node":
-                        sv = fix(sv)
-                    pv = pred["value"]
-                    if pred["type"] == "blank node":
-                        pv = fix(pv)
-                    ok = obj["type"]
-                    if ok == "literal":
-                        c_odt.append(obj.get("datatype"))
-                        c_olang.append(obj.get("language"))
-                        c_oval.append(obj["value"])
-                    else:
-                        c_odt.append(None)
-                        c_olang.append(None)
-                        c_oval.append(fix(obj["value"]) if ok == "blank node"
-                                      else obj["value"])
-                    c_doc.append(doc_id)
-                    c_subj.append(sv)
-                    c_pred.append(pv)
-                    c_okind.append(ok)
-                    c_graph.append(graph if graph == "@default" else fix(graph))
-                    c_err.append(None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c, type=pa.string())
-                    for c in (c_doc, c_subj, c_pred, c_okind, c_oval,
-                              c_odt, c_olang, c_graph, c_err)
-                ],
-                names=[f.name for f in TRIPLE_SCHEMA.fields],
-            )
-
-    return docs.mapInArrow(run, TRIPLE_SCHEMA)
+    extra = (base_col,) if base_col is not None else ()
+    return map_docs(docs, triples, TRIPLE_SCHEMA, id_col, doc_col, extra)
 
 
 def docs_to_canonical_nquads(
@@ -381,23 +291,12 @@ def docs_to_canonical_nquads(
     independently and in parallel.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def nquads(_doc_id, doc_json):
         from pyld_spark.jsonld.canon import canonize_quads
-        from pyld_spark.jsonld.errors import JsonLdError
 
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    quads = _doc_to_quads(doc_json, base_url)
-                    rows.append((doc_id, canonize_quads(quads, algorithm), None))
-                except JsonLdError as e:
-                    rows.append((doc_id, None, e.code))
-                except Exception as e:  # noqa: BLE001
-                    rows.append((doc_id, None, f"internal error: {type(e).__name__}"))
-            yield pd.DataFrame(rows, columns=["doc_id", "nquads", "error_code"])
+        return [(canonize_quads(_doc_to_quads(doc_json, base_url), algorithm),)]
 
-    return docs.mapInPandas(run, NQUADS_SCHEMA)
+    return map_docs(docs, nquads, NQUADS_SCHEMA, id_col, doc_col)
 
 
 def canonical_nquads_stats(canonical: DataFrame) -> DataFrame:

@@ -2,19 +2,19 @@
 "query by example". The frame's top-level constraints become *relational
 predicates on the triples table* (filter/semi-join — Catalyst prunes and
 pushes them down) to select matching documents; full recursive embedding
-then runs per document in an Arrow-batched UDF.
+then runs per document in the :mod:`pyld_spark.operators.doc_runner` runner.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField
+
+from pyld_spark.operators.doc_runner import doc_schema, map_docs
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -215,40 +215,26 @@ def frame_subject_filter(
     return out
 
 
-FRAMED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("framed", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
-)
+FRAMED_SCHEMA = doc_schema(StructField("framed", StringType(), True))
+
+
+def _md5(values) -> str:
+    return hashlib.md5(",".join(values).encode("utf-8")).hexdigest()
 
 
 def frame_documents(docs: DataFrame, frame_doc: dict,
                     id_col: str = "conv_id", doc_col: str = "doc") -> DataFrame:
-    """Apply the full framing algorithm per document (Arrow-batched).
+    """Apply the full framing algorithm per document.
 
     Returns (doc_id, framed json, error_code)."""
-    frame_json = json.dumps(frame_doc)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def framed(_doc_id, doc_json):
         from pyld_spark.jsonld import api
-        from pyld_spark.jsonld.errors import JsonLdError
 
-        frame = json.loads(frame_json)
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    framed = api.frame(json.loads(doc_json), frame)
-                    rows.append((doc_id, json.dumps(framed, sort_keys=True), None))
-                except JsonLdError as e:
-                    rows.append((doc_id, None, e.code))
-                except Exception as e:  # noqa: BLE001
-                    rows.append((doc_id, None, f"internal error: {type(e).__name__}"))
-            yield pd.DataFrame(rows, columns=["doc_id", "framed", "error_code"])
+        return [(json.dumps(api.frame(json.loads(doc_json), frame_doc),
+                            sort_keys=True),)]
 
-    return docs.mapInPandas(run, FRAMED_SCHEMA)
+    return map_docs(docs, framed, FRAMED_SCHEMA, id_col, doc_col)
 
 
 def frame_corpus(docs: DataFrame, triples: DataFrame, frame_doc: dict,
@@ -274,13 +260,25 @@ def _frame_candidates(docs: DataFrame, triples: DataFrame, frame_doc: dict,
     )
 
 
-FRAME_MATCH_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("n_matched", LongType(), True),
-        StructField("ids_md5", StringType(), True),
-        StructField("vals_md5", StringType(), True),
-    ]
+def _frame_each_candidate(docs, triples, frame_doc, id_col, options, reduce,
+                          schema) -> DataFrame:
+    """Frame every candidate document and ``reduce(framed)`` it to payload
+    rows."""
+    frame_opts = options or {}
+
+    def run(_doc_id, doc_json):
+        from pyld_spark.jsonld import api
+
+        return reduce(api.frame(json.loads(doc_json), frame_doc, dict(frame_opts)))
+
+    candidate_docs = _frame_candidates(docs, triples, frame_doc, id_col, options)
+    return map_docs(candidate_docs, run, schema, id_col, "doc")
+
+
+FRAME_MATCH_SCHEMA = doc_schema(
+    StructField("n_matched", LongType(), True),
+    StructField("ids_md5", StringType(), True),
+    StructField("vals_md5", StringType(), True),
 )
 
 
@@ -294,64 +292,35 @@ def frame_match_stats(docs: DataFrame, triples: DataFrame, frame_doc: dict,
     certifies the relational pre-filter's document pruning AND the exact
     matcher's per-node decisions (reference _filter_subject semantics,
     jsonld.py:4737-4861) in one query."""
-    import hashlib
 
-    frame_json = json.dumps(frame_doc)
-    opts_json = json.dumps(options or {})
-    candidate_docs = _frame_candidates(docs, triples, frame_doc, id_col, options)
+    def reduce(framed):
+        nodes = framed.get("@graph")
+        if nodes is None:
+            nodes = [framed]
+        matched = [
+            n for n in nodes
+            if isinstance(n, dict) and isinstance(n.get("@id"), str)
+        ]
+        if not matched:
+            return []
+        vals = []
+        for n in matched:
+            v = n.get(value_prop)
+            if isinstance(v, list):
+                v = v[0] if v else None
+            if isinstance(v, dict):
+                v = v.get("@value")
+            vals.append("" if v is None else str(v))
+        return [(len(matched), _md5(n["@id"] for n in matched), _md5(vals))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyld_spark.jsonld import api
-
-        frame = json.loads(frame_json)
-        frame_opts = json.loads(opts_json)
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf["doc"]):
-                try:
-                    framed = api.frame(json.loads(doc_json), frame,
-                                       dict(frame_opts))
-                except Exception:  # noqa: BLE001 — quarantine, never crash
-                    rows.append((doc_id, None, None, None))
-                    continue
-                nodes = framed.get("@graph")
-                if nodes is None:
-                    nodes = [framed]
-                matched = [
-                    n for n in nodes
-                    if isinstance(n, dict) and isinstance(n.get("@id"), str)
-                ]
-                if not matched:
-                    continue
-                ids = [n["@id"] for n in matched]
-                vals = []
-                for n in matched:
-                    v = n.get(value_prop)
-                    if isinstance(v, list):
-                        v = v[0] if v else None
-                    if isinstance(v, dict):
-                        v = v.get("@value")
-                    vals.append("" if v is None else str(v))
-                rows.append((
-                    doc_id,
-                    len(matched),
-                    hashlib.md5(",".join(ids).encode("utf-8")).hexdigest(),
-                    hashlib.md5(",".join(vals).encode("utf-8")).hexdigest(),
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_matched", "ids_md5", "vals_md5"]
-            )
-
-    return candidate_docs.mapInPandas(run, FRAME_MATCH_SCHEMA)
+    return _frame_each_candidate(docs, triples, frame_doc, id_col, options,
+                                 reduce, FRAME_MATCH_SCHEMA)
 
 
-FRAMED_STATS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("matched_type", StringType(), True),
-        StructField("n_embedded_turns", LongType(), True),
-        StructField("turns_md5", StringType(), True),
-    ]
+FRAMED_STATS_SCHEMA = doc_schema(
+    StructField("matched_type", StringType(), True),
+    StructField("n_embedded_turns", LongType(), True),
+    StructField("turns_md5", StringType(), True),
 )
 
 
@@ -364,45 +333,23 @@ def frame_corpus_stats(docs: DataFrame, triples: DataFrame, frame_doc: dict,
     the DuckDB oracle certifies both the frame match set and the embedding
     order (the full framing algorithm runs; only the emitted columns are
     reduced to verifiable form)."""
-    import hashlib
 
-    frame_json = json.dumps(frame_doc)
-    candidate_docs = _frame_candidates(docs, triples, frame_doc, id_col, options)
+    def reduce(framed):
+        nodes = framed.get("@graph", [framed])
+        node = nodes[0] if nodes else {}
+        t = node.get("@type")
+        matched_type = t[0] if isinstance(t, list) and t else t
+        items = node.get(list_prop)
+        if isinstance(items, dict):
+            items = items.get("@list", [])
+        if not isinstance(items, list):
+            items = []
+        ids = [it.get("@id", "") for it in items if isinstance(it, dict)]
+        return [(
+            matched_type if isinstance(matched_type, str) else None,
+            len(ids),
+            _md5(ids),
+        )]
 
-    opts_json = json.dumps(options or {})
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyld_spark.jsonld import api
-
-        frame = json.loads(frame_json)
-        frame_opts = json.loads(opts_json)
-        for pdf in batches:
-            rows = []
-            for doc_id, doc_json in zip(pdf[id_col], pdf["doc"]):
-                try:
-                    framed = api.frame(json.loads(doc_json), frame, dict(frame_opts))
-                except Exception:  # noqa: BLE001 — quarantine, never crash
-                    rows.append((doc_id, None, None, None))
-                    continue
-                nodes = framed.get("@graph", [framed])
-                node = nodes[0] if nodes else {}
-                t = node.get("@type")
-                matched_type = t[0] if isinstance(t, list) and t else t
-                items = node.get(list_prop)
-                if isinstance(items, dict):
-                    items = items.get("@list", [])
-                if not isinstance(items, list):
-                    items = []
-                ids = [it.get("@id", "") for it in items if isinstance(it, dict)]
-                rows.append((
-                    doc_id,
-                    matched_type if isinstance(matched_type, str) else None,
-                    len(ids),
-                    hashlib.md5(",".join(ids).encode("utf-8")).hexdigest(),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "matched_type", "n_embedded_turns", "turns_md5"],
-            )
-
-    return candidate_docs.mapInPandas(run, FRAMED_STATS_SCHEMA)
+    return _frame_each_candidate(docs, triples, frame_doc, id_col, options,
+                                 reduce, FRAMED_STATS_SCHEMA)

@@ -4,7 +4,8 @@ Two layers:
 
 - :func:`triples_to_documents` — group the flat triples by ``doc_id``
   (documents are independent; one shuffle) and run the exact fromRDF
-  algorithm per group in applyInPandas;
+  algorithm per group (:func:`pyld_spark.operators.doc_runner.map_doc_groups`,
+  ``applyInArrow``);
 - :func:`list_chain_lengths` — the *relational* analogue of list
   reconstruction: rdf:first/rdf:rest chains measured by bounded-iteration
   self-joins (the pattern that would replace the in-UDF walk if single
@@ -15,65 +16,31 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField
+
+from pyld_spark.operators.doc_runner import doc_schema, map_doc_groups
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_FIRST = RDF_NS + "first"
 RDF_REST = RDF_NS + "rest"
 RDF_NIL = RDF_NS + "nil"
 
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("expanded", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
-)
+DOC_SCHEMA = doc_schema(StructField("expanded", StringType(), True))
 
 
 def triples_to_documents(triples: DataFrame, use_native_types: bool = False) -> DataFrame:
-    """(doc_id, flat triple cols) → (doc_id, expanded JSON-LD array json)."""
+    """(doc_id, flat triple cols) → (doc_id, expanded JSON-LD array json,
+    error_code)."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from pyld_spark.jsonld.errors import JsonLdError
+    def expanded(quads):
         from pyld_spark.jsonld.fromrdf import from_rdf
 
-        doc_id = pdf["doc_id"].iloc[0]
-        pdf = pdf.sort_values(
-            ["graph", "subj", "pred", "obj_kind", "obj_value"], kind="mergesort"
-        )
-        quads = []
-        for r in pdf.itertuples(index=False):
-            subj = (
-                {"type": "blank node", "value": r.subj}
-                if r.subj.startswith("_:")
-                else {"type": "IRI", "value": r.subj}
-            )
-            pred = {"type": "IRI", "value": r.pred}
-            if r.obj_kind == "literal":
-                obj = {"type": "literal", "value": r.obj_value,
-                       "datatype": r.obj_datatype}
-                if isinstance(r.obj_language, str):
-                    obj["language"] = r.obj_language
-            else:
-                obj = {"type": r.obj_kind, "value": r.obj_value}
-            quads.append((subj, pred, obj, r.graph))
-        try:
-            expanded = from_rdf(quads, use_native_types=use_native_types)
-            return pd.DataFrame(
-                [(doc_id, json.dumps(expanded, sort_keys=True), None)],
-                columns=["doc_id", "expanded", "error_code"],
-            )
-        except JsonLdError as e:
-            return pd.DataFrame(
-                [(doc_id, None, e.code)], columns=["doc_id", "expanded", "error_code"]
-            )
+        return [(json.dumps(from_rdf(quads, use_native_types=use_native_types),
+                            sort_keys=True),)]
 
-    return triples.groupBy("doc_id").applyInPandas(run, DOC_SCHEMA)
+    return map_doc_groups(triples, expanded, DOC_SCHEMA)
 
 
 def list_chain_lengths(triples: DataFrame, max_iters: int = 64) -> DataFrame:

@@ -12,23 +12,21 @@ Semantics mirrored from the reference/spec:
 - honor ``<base href>`` for the document base when present;
 - invalid JSON in a script → spec error ``invalid script element``.
 
-Spark surface: :func:`html_to_documents` — a vectorized mapInPandas stage
-over an HTML column, emitting one JSON-LD document string per page (+
-quarantine rows).
+Spark surface: :func:`html_to_documents` — a per-page stage over an HTML
+column (run by :func:`pyld_spark.operators.doc_runner.map_docs`), emitting
+one JSON-LD document string per page (+ quarantine rows).
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField
 
 from pyld_spark.jsonld.errors import JsonLdError
+from pyld_spark.operators.doc_runner import doc_schema, map_docs
 
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
 _SCRIPT_RE = re.compile(
@@ -165,13 +163,9 @@ def load_html(html: str, url: str | None = None,
     return merged
 
 
-HTML_DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("doc", StringType(), True),
-        StructField("base", StringType(), True),
-        StructField("error_code", StringType(), True),
-    ]
+HTML_DOC_SCHEMA = doc_schema(
+    StructField("doc", StringType(), True),
+    StructField("base", StringType(), True),
 )
 
 
@@ -184,25 +178,12 @@ def html_to_documents(
 ) -> DataFrame:
     """(page_id, html[, url]) → (doc_id, JSON-LD doc json, base, error_code).
 
-    Vectorized mapInPandas; output feeds directly into
+    Narrow ``mapInArrow`` per page; output feeds directly into
     ``expand_stage.docs_to_triples``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            urls = pdf[url_col] if url_col else [None] * len(pdf)
-            for doc_id, html, url in zip(pdf[id_col], pdf[html_col], urls):
-                try:
-                    doc = load_html(html, url, extract_all_scripts)
-                    base = html_base(html, url)
-                    rows.append((str(doc_id), json.dumps(doc), base, None))
-                except JsonLdError as e:
-                    rows.append((str(doc_id), None, None, e.code))
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        (str(doc_id), None, None,
-                         f"internal error: {type(e).__name__}")
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "doc", "base", "error_code"])
+    def extract(_doc_id, html, url=None):
+        doc = load_html(html, url, extract_all_scripts)
+        return [(json.dumps(doc), html_base(html, url))]
 
-    return pages.mapInPandas(run, HTML_DOC_SCHEMA)
+    extra = (url_col,) if url_col else ()
+    return map_docs(pages, extract, HTML_DOC_SCHEMA, id_col, html_col, extra)

@@ -9,7 +9,8 @@ implementation tool here, the reference has no streaming surface):
   ``sort_array(collect_list(struct(...)))`` aggregation (append mode emits a
   conversation only once its watermark passes — late turns within the
   watermark still make it in);
-- the same ``docs_to_triples`` mapInPandas stage runs on the streaming
+- the same ``docs_to_triples`` stage (its ``mapInArrow`` runner or the
+  compiled projection) runs on the streaming
   DataFrame unchanged — Spark plans it incrementally.
 """
 

@@ -89,3 +89,25 @@ def test_compiled_matches_kernel_adversarial(spark, case):
         assert _rows(direct.where(F.col("error_code").isNull()).drop("error_code")) == _rows(general)
     finally:
         docs.unpersist()
+
+
+def test_null_doc_quarantines_on_both_routes(spark):
+    """A null conv_id assembles to a null (still tagged) doc. Both routes
+    must turn it into the same single quarantine row — never into triples
+    with null subjects, and never into a failed task."""
+    ts0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    t = spark.createDataFrame(
+        [(None, 0, "user", "x", None, ts0), ("c-1", 0, "user", "y", None, ts0)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    docs = assemble_documents(t).cache()
+    try:
+        assert docs.schema["doc"].metadata.get(DOC_SHAPE_META_KEY) == TRANSCRIPT_SHAPE_V1
+        assert docs.where(F.col("doc").isNull()).count() == 1
+        compiled, cq = split_quarantine(docs_to_triples(docs))
+        general, gq = split_quarantine(docs_to_triples(_strip_tag(docs)))
+        assert _rows(cq) == _rows(gq) == [(None, "internal error: TypeError")]
+        assert compiled.where(F.col("subj").isNull()).count() == 0
+        assert _rows(compiled) == _rows(general)
+    finally:
+        docs.unpersist()

@@ -53,7 +53,7 @@ def main() -> int:
     import __spark_entry__ as e
     from pyld_spark.session import get_spark
 
-    spark = get_spark("check_oracle", cpus=8)
+    spark = get_spark("check_oracle")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
