@@ -23,14 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pyld_spark.operators.doc_runner import rows_to_quads
+from pyld_spark.session import cut_lineage, repartition_by
 
 _LABEL_SCHEMA = StructType(
     [
@@ -195,7 +191,7 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
             .select("doc_id", "bnode", "h")
         )
         # cut the 6-round lineage so the plan doesn't re-derive every round
-        h = h.localCheckpoint(eager=False)
+        h = cut_lineage(h, eager=False)
 
     w_rank = Window.partitionBy("doc_id").orderBy("h", "bnode")
     return h.withColumn(
@@ -216,13 +212,12 @@ def _doc_partitioned(triples: DataFrame) -> DataFrame:
     so none of them re-shuffle. Before this, the plan exchanged the
     exploded masked-quad rows (the fattest intermediate, ~1.5× the quad
     table with ~300-byte strings) AND the quad table itself for the
-    relabel join; now only the quad table moves, once. Partition count is
-    pinned to ``spark.sql.shuffle.partitions`` so the label-map side of
-    the relabel join (which re-shuffles after the three-way label union —
-    cheap: one row per bnode, not per quad) lands co-partitioned.
+    relabel join; now only the quad table moves, once. The width is the
+    session's (:func:`~pyld_spark.session.repartition_by`) so the label-map
+    side of the relabel join (which re-shuffles after the three-way label
+    union — cheap: one row per bnode, not per quad) lands co-partitioned.
     """
-    n = int(triples.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return triples.repartition(n, "doc_id")
+    return repartition_by(triples, "doc_id")
 
 
 def canonical_labels(
@@ -256,8 +251,7 @@ def canonical_labels(
     # own sake: under AQE the checkpointed plan reports UnknownPartitioning
     # until executed, so without it every downstream window/groupBy would
     # re-shuffle fd anyway — this way it happens once, on the small table.
-    n = int(triples.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    fd = fd.localCheckpoint(eager=False).repartition(n, "doc_id")
+    fd = repartition_by(cut_lineage(fd, eager=False), "doc_id")
     w_doc = Window.partitionBy("doc_id", "fd_hash")
     fd = fd.withColumn("n_same", F.count("*").over(w_doc))
     ambiguous_docs = fd.filter(F.col("n_same") > 1).select("doc_id").distinct()

@@ -640,6 +640,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if data[pos] != 0xFF:
             pos += 1
             continue
+        if pos + 1 >= len(data):
+            raise ValueError("truncated JPEG")
         marker = data[pos + 1]
         if marker == 0xFF:  # 0xFF fill byte(s) before a marker (B.1.1.2)
             pos += 1
@@ -649,6 +651,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             continue
         if marker == 0xD9:  # EOI
             break
+        if pos + 2 > len(data):
+            raise ValueError("truncated JPEG")
         (seglen,) = struct.unpack(">H", data[pos:pos + 2])
         payload = data[pos + 2:pos + seglen]
         if marker == 0xDB:  # DQT (possibly several tables per segment)

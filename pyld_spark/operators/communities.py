@@ -22,8 +22,8 @@ Why SYNCHRONOUS label propagation and not the classic async variant:
 Scale design: each iteration is one shuffled hash join (labels ⋈ edges,
 keyed on the neighbor id) plus one two-key groupBy count and one min-struct
 aggregation per node — all map-side-combinable, no windows, no driver-side
-data. Lineage is truncated per iteration (``localCheckpoint``; pass
-``reliable=True`` on a real cluster) exactly like the connected-components
+data. Lineage is truncated per iteration (``session.cut_lineage``; reliable
+once a checkpoint directory is set) exactly like the connected-components
 fixpoint (components.py). Hot labels (a viral community) concentrate on the
 (node, label) count key, which is fine — the key includes the node, so the
 aggregation never collapses onto a single reducer; the labels ⋈ edges join
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyld_spark.session import cut_lineage
 
 
 def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -51,7 +53,6 @@ def label_propagation(
     iters: int = 5,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """Synchronous label propagation over an undirected edge list.
@@ -66,10 +67,7 @@ def label_propagation(
     if iters < 0:
         raise ValueError("iters must be >= 0")
 
-    def _cut(df: DataFrame) -> DataFrame:
-        if not truncate_lineage:
-            return df
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+    _cut = cut_lineage if truncate_lineage else (lambda df: df)
 
     sym = _cut(_symmetric_edges(edges, src, dst))
     nodes = _cut(sym.select(F.col("src").alias("node")).distinct())

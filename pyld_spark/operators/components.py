@@ -15,10 +15,10 @@ Scale design (the reason this shape and not GraphFrames/Pregel):
 - Every round is plain DataFrame groupBy/join on the node id — AQE handles
   the hot-key skew of a giant component's root the same way it handles any
   hot aggregation key.
-- Lineage is truncated every round (``localCheckpoint`` on local mode;
-  set a reliable checkpoint dir via ``spark.sparkContext.setCheckpointDir``
-  and ``reliable=True`` on a real cluster so a 40-round job survives
-  executor loss).
+- Lineage is truncated every round (``session.cut_lineage``): local
+  checkpoints, or reliable ones once a checkpoint directory is set
+  (``SparkContext.setCheckpointDir``) so a 40-round job survives executor
+  loss.
 - Convergence is detected from a constant-size signature
   ``(count, bit_xor(xxhash64(u, v)))`` computed in the same action that
   materializes the round — no exceptAll() anti-join over two full edge
@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyld_spark.session import cut_lineage
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -97,7 +99,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    reliable: bool = False,
 ) -> DataFrame:
     """(node, component) for every node that appears in ``edges``; the
     component id is the lexicographically-smallest node id in the component
@@ -107,13 +108,10 @@ def connected_components(
     coverage left-join this result and coalesce to the node's own id (see
     :func:`dedup_clusters`).
     """
-    spark = edges.sparkSession
-    e = _canonical_edges(edges, src, dst)
-    e = e.localCheckpoint(eager=True) if not reliable else e.checkpoint(eager=True)
+    e = cut_lineage(_canonical_edges(edges, src, dst))
     sig = _signature(e)
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e))
-        e2 = e2.localCheckpoint(eager=True) if not reliable else e2.checkpoint(eager=True)
+        e2 = cut_lineage(_small_star(_large_star(e)))
         sig2 = _signature(e2)
         e = e2
         if sig2 == sig:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage, repartition_by
+
 
 def shingle_expr(col_name: str, k: int = 5):
     """array_distinct of character k-shingles, as a SQL expression (usable
@@ -69,14 +71,9 @@ def ngram_jaccard_pairs(
     sizes = sh.groupBy("doc").agg(F.count("*").cast("bigint").alias("size"))
     df_counts = sh.groupBy("sh").agg(F.count("*").alias("df"))
     sh_f = sh.join(df_counts.filter(F.col("df") <= max_shingle_df), "sh")
-    # explicit conf-driven width on the probe side: the filtered posting
-    # list is small, so AQE coalesces it to a couple of partitions — but the
-    # self-join OUTPUT is sum(df^2) rows (285M at sf0.1), invisible to AQE,
-    # and would grind through one or two tasks (guide §2.5). The partial
-    # aggregation below still runs map-side, so the (doc_a, doc_b) shuffle
-    # stays bounded by the candidate-pair count.
-    n = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    a = sh_f.select(F.col("doc").alias("doc_a"), "sh").repartition(n, "sh")
+    # explicit width on the probe side: the self-join OUTPUT is sum(df^2)
+    # rows (285M at sf0.1); the partial aggregation below runs map-side
+    a = repartition_by(sh_f.select(F.col("doc").alias("doc_a"), "sh"), "sh")
     b = sh_f.select(F.col("doc").alias("doc_b"), "sh")
     inter = (
         a.join(b, "sh")
@@ -105,7 +102,9 @@ def minhash_signatures(
     """(doc_id, sig array<long>): MinHash signature from k-shingles.
 
     Permutation i = xxhash64(shingle, seed_i); the signature entry is the
-    minimum over shingles — all inside one JVM projection, no shuffle.
+    minimum over shingles. One row per distinct ``id_col``: rows sharing an
+    id (all null ids among them) collapse into one signature of their pooled
+    shingles.
     """
     return _exploded_signatures(
         documents, text_col, id_col, k, num_hashes,
@@ -125,9 +124,7 @@ def _exploded_signatures(documents, text_col, id_col, k, num_hashes, perm_hash):
     permutation and evaluated every hash through the interpreter
     (optimization guide §4.1: built-ins/codegen over per-element interpreted
     work; §2.3: the (doc, perm, min) shuffle is tiny because partial
-    aggregation runs map-side). Requires ``id_col`` to identify rows (the
-    established contract of every dedup operator here): duplicate ids
-    collapse to one signature row.
+    aggregation runs map-side). Rows collapse per distinct ``id_col``.
     """
     sh = documents.select(
         F.col(id_col), F.explode(shingle_expr(text_col, k)).alias("_s")
@@ -202,7 +199,7 @@ def minhash_dedup_pairs(
     # table instead of re-running the whole shingle+hash pipeline each —
     # the plan had FOUR full signature computations and zero exchange reuse
     sigs = minhash_signatures(documents, text_col, id_col, k, num_hashes)
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = cut_lineage(sigs, eager=False)
     cands = minhash_lsh_pairs(sigs, id_col, bands, num_hashes // bands)
     sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -238,7 +235,8 @@ def minhash_signatures_md5(
     permutation minimum regardless of representation). This is the
     oracle-checkable variant — md5 exists in every engine; the xxhash64
     basis (:func:`minhash_signatures`) stays the production scale path
-    (8-byte entries instead of 32-char strings).
+    (8-byte entries instead of 32-char strings). Rows sharing an id collapse
+    exactly as in :func:`minhash_signatures`.
     """
     return _exploded_signatures(
         documents, text_col, id_col, k, num_hashes,
@@ -266,7 +264,7 @@ def minhash_dedup_pairs_md5(
     rows_per_band = num_hashes // bands
     # lazy checkpoint: same 4x-recompute fix as minhash_dedup_pairs
     sigs = minhash_signatures_md5(documents, text_col, id_col, k, num_hashes)
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = cut_lineage(sigs, eager=False)
     banded = sigs.select(
         F.col(id_col).alias("doc"),
         F.posexplode(
@@ -358,21 +356,17 @@ def embedding_cosine_pairs(
         .withColumn("bucket", signature(F.col("vq")))
         .withColumn("_nrm", lsum(F.transform(F.col("vq"), lambda x: x * x)))
     )
-    n = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # explicit width: the bucketed table is small, so AQE would run the whole
-    # quadratic per-bucket join output in one task (the candidate volume is
-    # in the join OUTPUT, invisible to AQE)
     # co-partitioned on the bucket key (no forced-broadcast hint: the
     # bucketed table is corpus-sized; the optimizer may still auto-broadcast
     # one side when it genuinely fits)
-    a = q.select(
+    a = repartition_by(q.select(
         F.col("vid").alias("id_a"), F.col("vq").alias("vq_a"),
         F.col("_nrm").alias("_na"), "bucket",
-    ).repartition(n, "bucket")
-    b = q.select(
+    ), "bucket")
+    b = repartition_by(q.select(
         F.col("vid").alias("id_b"), F.col("vq").alias("vq_b"),
         F.col("_nrm").alias("_nb"), "bucket",
-    ).repartition(n, "bucket")
+    ), "bucket")
     dot = lsum(F.zip_with(F.col("vq_a"), F.col("vq_b"), lambda x, y: x * y))
     cos = dot.cast("double") / F.sqrt(F.col("_na").cast("double") * F.col("_nb").cast("double"))
     return (
@@ -495,31 +489,23 @@ def simhash_near_pairs_md5(
     # bit_count of the xor of the parsed halves.
     hi = F.conv(F.substring("simbits", 1, 32), 2, 10).cast("long")
     lo = F.conv(F.substring("simbits", 33, 32), 2, 10).cast("long")
-    n = int(signatures.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # both join sides derive from the signature table — checkpoint it lazily
     # so the (groupBy-heavy) signature computation runs once, not per side
-    signatures = signatures.localCheckpoint(eager=False)
+    signatures = cut_lineage(signatures, eager=False)
     blocked = signatures.select(
         F.col(id_col).alias("doc"), hi.alias("_hi"), lo.alias("_lo"),
         F.posexplode(blocks).alias("block_idx", "block_val"),
     )
-    # explicit width on the probe side: the blocked table is tiny (17 rows
-    # per doc) so AQE would coalesce it to one partition and run the whole
-    # quadratic join output in a single task; the candidate volume lives in
-    # the join OUTPUT, which AQE cannot see (guide §2.5)
-    # co-partition BOTH sides with an explicit count (REPARTITION_BY_NUM is
-    # exempt from AQE coalescing): the join runs wide at any scale, and the
-    # optimizer remains free to auto-broadcast one side when it actually
-    # fits — no forced-broadcast hint, because the blocked table is
-    # 17 rows/doc and grows with the corpus
-    a = blocked.select(
+    # co-partition BOTH sides; no forced-broadcast hint, because the blocked
+    # table is 17 rows/doc and grows with the corpus
+    a = repartition_by(blocked.select(
         F.col("doc").alias("doc_a"), F.col("_hi").alias("_hi_a"),
         F.col("_lo").alias("_lo_a"), "block_idx", "block_val",
-    ).repartition(n, "block_idx", "block_val")
-    b = blocked.select(
+    ), "block_idx", "block_val")
+    b = repartition_by(blocked.select(
         F.col("doc").alias("doc_b"), F.col("_hi").alias("_hi_b"),
         F.col("_lo").alias("_lo_b"), "block_idx", "block_val",
-    ).repartition(n, "block_idx", "block_val")
+    ), "block_idx", "block_val")
     hamming = (
         F.bit_count(F.col("_hi_a").bitwiseXOR(F.col("_hi_b")))
         + F.bit_count(F.col("_lo_a").bitwiseXOR(F.col("_lo_b")))
@@ -729,13 +715,9 @@ def semantic_dedup(
     lsum = lambda arr: F.aggregate(  # noqa: E731
         arr, F.lit(0).cast("long"), lambda x, v: x + v
     )
-    n = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ranked = (
-        # explicit partition count: with the column-only form AQE coalesces
-        # the small ranked table to one partition and the quadratic pairwise
-        # join below runs in a single task (its output volume is invisible
-        # to AQE); the count is conf-driven, not a local constant
-        assign.repartition(n, "cell_id")
+    ranked = cut_lineage(
+        # explicit width: the pairwise join below is quadratic per cell
+        repartition_by(assign, "cell_id")
         .withColumn(
             "centroid_rank",
             F.row_number()
@@ -748,8 +730,8 @@ def semantic_dedup(
         )
         # per-vector squared norm once per row, NOT per candidate pair in
         # the join below (exact integer — cosine bits unchanged)
-        .withColumn("_nrm", lsum(F.transform(F.col("_vq"), lambda x: x * x)))
-        .localCheckpoint(eager=False)
+        .withColumn("_nrm", lsum(F.transform(F.col("_vq"), lambda x: x * x))),
+        eager=False,
     )
     a = ranked.select(
         "cell_id",

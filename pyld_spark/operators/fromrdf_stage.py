@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField
 
 from pyld_spark.operators.doc_runner import doc_schema, map_doc_groups
+from pyld_spark.session import cut_lineage
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_FIRST = RDF_NS + "first"
@@ -78,7 +79,7 @@ def list_chain_lengths(triples: DataFrame, max_iters: int = 64) -> DataFrame:
             )
         )
         finished = hops.filter(F.col("dst") == RDF_NIL)
-        hops = finished.unionByName(advanced).localCheckpoint()
+        hops = cut_lineage(finished.unionByName(advanced))
     heads = rest.join(
         rest.select("doc_id", F.col("dst").alias("src")).distinct(),
         ["doc_id", "src"], "left_anti",

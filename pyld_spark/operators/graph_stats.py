@@ -25,7 +25,7 @@ Why FIXED-POINT (integer) PageRank and not doubles:
 Scale design: each iteration is one broadcast-or-shuffle hash join
 (ranks ⋈ edges, both keyed on the node id) plus one groupBy(dst) sum with
 map-side partial aggregation; lineage is truncated per iteration
-(``localCheckpoint``; pass ``reliable=True`` on a real cluster) exactly like
+(``session.cut_lineage``; reliable once a checkpoint dir is set) exactly like
 the connected-components fixpoint (components.py). Dangling-node mass is
 dropped (documented choice — keeps the recurrence purely local; ranking
 order is unaffected for connected corpora).
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyld_spark.session import cut_lineage
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -64,7 +66,6 @@ def pagerank_fixed_point(
     scale: int = 10**9,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list in exact integer arithmetic.
 
@@ -87,13 +88,11 @@ def pagerank_fixed_point(
         F.col(dst).cast("string").alias("dst"),
     ).distinct()
     out_deg = e.groupBy("src").agg(F.count("*").cast("bigint").alias("out_degree"))
-    ej = e.join(out_deg, "src")  # (src, dst, out_degree), static across iters
-    ej = ej.localCheckpoint(eager=True) if not reliable else ej.checkpoint(eager=True)
-    nodes = (
+    ej = cut_lineage(e.join(out_deg, "src"))  # (src, dst, out_degree), static across iters
+    nodes = cut_lineage(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     teleport = (scale * (damping_den - damping_num)) // damping_den
     ranks = nodes.withColumn("rank_fp", F.lit(scale).cast("bigint"))
@@ -108,7 +107,7 @@ def pagerank_fixed_point(
             .groupBy("dst")
             .agg(F.sum("c").cast("bigint").alias("in_mass"))
         )
-        ranks = (
+        ranks = cut_lineage(
             nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .select(
                 "node",
@@ -116,11 +115,6 @@ def pagerank_fixed_point(
                 .cast("bigint")
                 .alias("rank_fp"),
             )
-        )
-        ranks = (
-            ranks.localCheckpoint(eager=True)
-            if not reliable
-            else ranks.checkpoint(eager=True)
         )
     return ranks
 

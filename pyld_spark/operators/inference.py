@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage
+
 
 def transitive_closure(
     edges: DataFrame,
@@ -58,28 +60,26 @@ def transitive_closure(
     hierarchy of depth 2^64 via the length-1 extension) is a backstop
     against adversarial inputs, raising rather than silently truncating.
     """
-    base = (
+    base = cut_lineage(
         edges.select(F.col(src).cast("string").alias("src"),
                      F.col(dst).cast("string").alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     hop = base.select(F.col("src").alias("_m"), F.col("dst").alias("_d"))
     closure = base
     delta = base
     for _ in range(max_rounds):
-        new = (
+        new = cut_lineage(  # also the action that observes convergence
             delta.join(hop, delta["dst"] == hop["_m"])
             .select("src", F.col("_d").alias("dst"))
             .distinct()
             .join(closure, ["src", "dst"], "left_anti")
-            .localCheckpoint()  # truncate per-round lineage; also the
-        )  # action that lets us observe convergence without a second job
+        )
         if not new.take(1):
             return closure
-        closure = closure.unionByName(new).localCheckpoint()
+        closure = cut_lineage(closure.unionByName(new))
         delta = new
     raise RuntimeError(
         f"transitive_closure did not converge within {max_rounds} rounds"

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage
+
 _POSITIONS = (("subj", 0), ("pred", 1), ("obj_value", 2))
 
 
@@ -171,26 +173,22 @@ def khop_neighborhood(
     if not directed:
         edges = edges.union(edges.select(F.col("dst").alias("src"),
                                          F.col("src").alias("dst")))
-    edges = (
-        edges.repartition("src").sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
+    edges = cut_lineage(edges.repartition("src").sortWithinPartitions("src"))
 
-    visited = seeds.select(F.col("node")).distinct().withColumn(
+    visited = cut_lineage(seeds.select(F.col("node")).distinct().withColumn(
         "hops", F.lit(0).cast("int")
-    ).localCheckpoint(eager=True)
+    ))
     frontier = visited
     for depth in range(1, k + 1):
-        nxt = (
+        nxt = cut_lineage(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(depth).cast("int"))
         )
-        nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = cut_lineage(visited.unionByName(nxt))
         frontier = nxt
     return visited

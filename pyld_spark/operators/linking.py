@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyld_spark.session import cut_lineage
 from pyld_spark.transcripts import VOCAB, turn_iri
 
 HANDLE_RE = r"@[A-Za-z0-9_]+"
@@ -186,9 +187,7 @@ def pmi_pairs(linked: DataFrame, min_pair_count: int = 2) -> DataFrame:
     # N) — without it Catalyst re-derives the upstream mention extraction
     # in every branch (verified in the plan audit: 3 extra MapInPandas
     # subtrees; same hazard semantic_dedup fixed)
-    ce = linked.select("conv_id", "entity_iri").distinct().localCheckpoint(
-        eager=False
-    )
+    ce = cut_lineage(linked.select("conv_id", "entity_iri").distinct(), eager=False)
     n_rows = ce.select(
         F.countDistinct("conv_id").alias("n_convs")
     )

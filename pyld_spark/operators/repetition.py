@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage
+
 #: word-n-gram sizes scored as "top coverage" (paper: fraction of chars in
 #: the most frequent n-gram) and as "duplicate share" (chars in n-grams
 #: occurring more than once).
@@ -101,7 +103,7 @@ def repetition_stats(
     # four consumers (line stats, para stats, the 9-way gram explode, and the
     # final doc spine) would each re-scan the input and re-evaluate the three
     # interpreted split/filter arrays; the lazy checkpoint computes them once
-    base = base.localCheckpoint(eager=False)
+    base = cut_lineage(base, eager=False)
 
     line_stats = _unit_stats(
         base.select("doc_id", F.explode("lines").alias("unit")), "doc_id", "line"

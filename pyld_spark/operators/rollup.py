@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage
+
 #: supported grains, finest → coarsest (each must truncate-nest into the next)
 GRAINS = ("minute", "hour", "day", "week", "month", "year")
 
@@ -62,9 +64,9 @@ def time_rollup(
         # truncation Catalyst re-derives the finest aggregate from the
         # source inside every union branch (verified: 3 FileScans for 3
         # grains, zero exchange reuse). The finest level is bucket-grain
-        # sized — tiny next to the corpus — so a lazy localCheckpoint is
+        # sized — tiny next to the corpus — so a lazy checkpoint is
         # cheap and every coarser level re-aggregates it.
-        level = level.localCheckpoint(eager=False)
+        level = cut_lineage(level, eager=False)
     out = [level.select(F.lit(finest).alias("grain"), "*")]
     for grain in grains[1:]:
         level = (

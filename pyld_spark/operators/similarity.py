@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -469,12 +471,12 @@ def kmeans_centroids(
     oracle-replayable (iterative float means) and is certified by the
     differential numpy test instead (tests/test_ivf_ann.py).
     """
-    # persist (not localCheckpoint) for the training corpus: it is read
+    # persist (not a checkpoint) for the training corpus: it is read
     # once per iteration and must be RELEASED when training ends — a
     # checkpoint would pin ~0.5 KB/vector of executor storage for the
     # session lifetime (measured: repeated trainings in one session
     # degraded 2x from the accumulated leak + GC pressure). The per-
-    # iteration centroid table below still localCheckpoints: nlist rows
+    # iteration centroid table below is still checkpointed: nlist rows
     # (tiny), and the truncated lineage is what keeps the iterative plan
     # from nesting.
     c = embeddings.select(
@@ -530,11 +532,10 @@ def kmeans_centroids(
             )
         )
         # empty cells keep their previous centroid
-        cent = (
+        cent = cut_lineage(
             cent.select("cell_id", F.col("_c").alias("_prev"))
             .join(sums, "cell_id", "left")
             .select("cell_id", F.coalesce("_c", "_prev").alias("_c"))
-            .localCheckpoint()
         )
     c.unpersist()
     return cent.select(

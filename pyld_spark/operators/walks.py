@@ -27,8 +27,8 @@ step is TWO equi-joins, both keyed: state ⋈ degrees on the node id to
 compute the choice index (no fan-out), then state ⋈ adjacency on
 (src, idx) — a two-column equi-join that lands on exactly one row per
 walk, so a hub with 10^6 neighbors costs one lookup, not a 10^6-row
-fan-out. Lineage truncated per step (``localCheckpoint``; pass
-``reliable=True`` on a real cluster). Output size is exactly
+fan-out. Lineage truncated per step (``session.cut_lineage``; reliable
+once a checkpoint directory is set). Output size is exactly
 ``n_start_nodes * walks_per_node * length`` rows — linear, never
 degree-dependent.
 """
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyld_spark.session import cut_lineage
 
 _LCG_A = 1103515245
 _LCG_C = 12345
@@ -80,7 +82,6 @@ def random_walks(
     walks_per_node: int = 1,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
     truncate_lineage: bool = True,
 ) -> DataFrame:
     """Deterministic LCG-driven walks over the symmetric closure of ``edges``.
@@ -106,10 +107,7 @@ def random_walks(
         (F.row_number().over(w) - F.lit(1)).cast("bigint").alias("idx"),
     )
 
-    def _cut(df: DataFrame) -> DataFrame:
-        if not truncate_lineage:
-            return df
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+    _cut = cut_lineage if truncate_lineage else (lambda df: df)
 
     adj = _cut(adj)
     deg = _cut(adj.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg")))

@@ -24,14 +24,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyld_spark.session import cut_lineage, ensure_workers_can_import
+
 
 class Pipeline:
     def __init__(self, spark: SparkSession, workdir: str, run_id: str = "run"):
         self.spark = spark
         self.workdir = workdir
         self.run_id = run_id
-        from pyld_spark.session import ensure_workers_can_import
-
         ensure_workers_can_import(spark)
 
     # -- checkpoint plumbing ------------------------------------------------
@@ -190,10 +190,10 @@ class Pipeline:
                 existing = existing.union(
                     self.spark.read.parquet(qpath).select(F.col(id_col))
                 ).distinct()
-        todo = (
+        # materialize BEFORE appending to the same path the diff was read from
+        todo = cut_lineage(
             new_ids.join(existing, new_ids[id_col] == existing[id_col], "left_anti")
-            .localCheckpoint(eager=True)  # materialize BEFORE appending to the
-        )                                 # same path the diff was read from
+        )
         if todo.isEmpty():
             return 0
         df = build(todo)
@@ -311,9 +311,7 @@ class Pipeline:
             labels = labels.join(existing_labels, ["subj", "obj_value"], "left_anti")
             # materialize BEFORE the append: `labels` reads the same path
             # the caller is about to append to
-            return canon.unionByName(edges).unionByName(labels).localCheckpoint(
-                eager=True
-            )
+            return cut_lineage(canon.unionByName(edges).unionByName(labels))
 
         self._append_stage(
             "materialize", build_mat,

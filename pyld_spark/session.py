@@ -1,4 +1,4 @@
-"""SparkSession construction with scale-appropriate defaults."""
+"""SparkSession construction, and the session-wide lineage and shuffle-width policies."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import hashlib
 import os
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def package_zip() -> str:
@@ -82,3 +82,31 @@ def get_spark(app_name: str = "pyld_spark", cpus: int | None = None,
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
     return builder.getOrCreate()
+
+
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """The one lineage-truncation policy: ``df.checkpoint`` when the
+    SparkContext has a checkpoint directory (``SparkContext.setCheckpointDir``
+    or ``spark.checkpoint.dir``, a deployment setting), else
+    ``df.localCheckpoint``, whose blocks live in executor storage and are
+    lost with the executor.
+
+    Spark's contract for the reliable branch: a lazy (``eager=False``)
+    checkpoint recomputes its input once more to write the files; the files
+    are only cleaned up under ``spark.cleaner.referenceTracking.cleanCheckpoints``.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
+def repartition_by(df: DataFrame, *cols) -> DataFrame:
+    """Hash-partition ``df`` on ``cols`` to the session's shuffle width.
+
+    The width is explicit because AQE cannot see a join's output volume: it
+    would coalesce the small input of a quadratic join into one or two
+    tasks. An explicit count is exempt from AQE coalescing, and two sides
+    repartitioned here land co-partitioned.
+    """
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)

@@ -401,6 +401,17 @@ def test_jpeg_eoi_before_sos_clean_error():
         decode_jpeg(b"\xFF\xD8\xFF\xD9")
 
 
+@pytest.mark.parametrize("data", [
+    b"\xFF\xD8\xFF",      # stream ends on a marker's 0xFF
+    b"\xFF\xD8\xFF\xDB",  # stream ends before a segment length
+])
+def test_jpeg_truncated_clean_error(data):
+    from pyld_spark.operators.codecs import decode_jpeg
+
+    with pytest.raises(ValueError, match="truncated JPEG"):
+        decode_jpeg(data)
+
+
 def test_jpeg_non_interleaved_scan_raises():
     """A baseline stream whose first SOS covers fewer components than the
     frame (non-interleaved / multi-scan) must raise, not decode one plane and

@@ -186,6 +186,30 @@ def test_minhash_signatures_match_round5_formulation(spark):
         docs.unpersist()
 
 
+@pytest.mark.parametrize("shared_id", [9100, None], ids=["duplicate-id", "null-id"])
+def test_minhash_signatures_collapse_rows_sharing_an_id(spark, shared_id):
+    """Rows sharing an id (a duplicate id, or null ids) become ONE signature
+    row: the element-wise minimum of the round-5 per-row signatures, i.e.
+    the signature of their pooled shingles."""
+    from pyld_spark.operators.dedup import minhash_signatures, minhash_signatures_md5
+
+    rows = [(1, "the quick brown fox"), (2, "jumps over the lazy dog"),
+            (shared_id, "lorem ipsum dolor"), (shared_id, "sit amet consectetur")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for new_fn, old_fn, nh in (
+        (minhash_signatures_md5, _old_minhash_signatures_md5, 32),
+        (minhash_signatures, _old_minhash_signatures_xx, 64),
+    ):
+        new = [(r["doc_id"], list(r["sig"])) for r in new_fn(docs, num_hashes=nh).collect()]
+        want = {}
+        for r in old_fn(docs, num_hashes=nh).collect():
+            sig = list(r["sig"])
+            prev = want.get(r["doc_id"], sig)
+            want[r["doc_id"]] = [min(a, b) for a, b in zip(prev, sig)]
+        assert len(new) == len(want) == 3  # one row per distinct id
+        assert dict(new) == want
+
+
 @pytest.mark.parametrize("max_hamming", [3, 16])
 def test_simhash_pairs_md5_matches_round5_formulation(spark, max_hamming):
     rnd = random.Random(42)
