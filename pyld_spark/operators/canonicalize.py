@@ -9,9 +9,11 @@ Re-expresses URDNA2015's control flow (reference:
 2. bnodes whose hash is unique *within their document* get canonical labels
    ``_:c14n{n}`` by first-degree-hash sort order — exactly URDNA2015's simple
    path (labels are issued in sorted-hash order when every hash is unique);
-3. documents with colliding hashes (automorphic gadgets — rare: transcript
-   bnodes come from @list chains, which hash uniquely) fall back to the exact
-   per-document URDNA2015 in a grouped Arrow UDF (``applyInArrow``).
+3. documents with colliding hashes (automorphic gadgets) fall back to the
+   exact per-document URDNA2015 in a grouped Arrow UDF (``applyInArrow``).
+   Transcript docs reach this module only as fallback docs: a tagged doc
+   whose turn ``@id`` values are non-null and distinct is labeled inside its
+   own row by the compiled projection (:func:`canonicalize_documents`).
 
 Everything partitions by ``doc_id``: bnodes are doc-namespaced, so no
 canonicalization component ever spans documents, and the groupBys shuffle on
@@ -347,3 +349,34 @@ def canonicalize_triples(triples: DataFrame, max_exact_quads: int = 100_000,
         .withColumn("graph", relabel("graph", F.col("graph").startswith("_:")))
         .drop("_lmap")
     )
+
+
+def canonicalize_documents(docs: DataFrame, triples: DataFrame,
+                           id_col: str = "conv_id", doc_col: str = "doc") -> DataFrame:
+    """Canonical triples of ``triples``, the quarantine-free
+    :func:`~pyld_spark.operators.expand_stage.docs_to_triples` output of
+    ``docs``: the routing the pipeline's canonicalize stage runs.
+
+    Tagged transcript docs whose turn ``@id`` values are all non-null and
+    distinct are labeled in the compiled per-row projection
+    (``_compiled_transcript_triples(canonical=True)``): no exchange and no
+    Python node between the scan and the output. Every other doc — tagged
+    with a null or repeated turn ``@id``, or untagged — goes through
+    :func:`canonicalize_triples` over its rows of ``triples``. Whether any
+    such doc exists is decided on the driver, so a corpus without one never
+    plans the general canonicalization at all.
+    """
+    from pyld_spark.operators.expand_stage import (
+        _compiled_transcript_triples,
+        _transcript_fallback_ids,
+        is_transcript_tagged,
+    )
+
+    if not is_transcript_tagged(docs, doc_col):
+        return canonicalize_triples(triples)
+    in_row = _compiled_transcript_triples(docs, id_col, doc_col, canonical=True)
+    fallback = cut_lineage(_transcript_fallback_ids(docs, id_col, doc_col))
+    if fallback.isEmpty():
+        return in_row
+    return in_row.unionByName(canonicalize_triples(
+        triples.join(F.broadcast(fallback), "doc_id", "left_semi")))

@@ -22,7 +22,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from pyld_spark.operators.doc_runner import (
     NULL_DOC_CODE,
@@ -32,7 +32,7 @@ from pyld_spark.operators.doc_runner import (
     map_docs,
     quads_to_rows,
 )
-from pyld_spark.transcripts import DOC_SHAPE_META_KEY, TRANSCRIPT_SHAPE_V1
+from pyld_spark.transcripts import DOC_SHAPE_META_KEY, TRANSCRIPT_SHAPE_V1, VOCAB
 
 TRIPLE_SCHEMA = doc_schema(*(StructField(c, StringType(), True) for c in TRIPLE_COLUMNS))
 
@@ -87,8 +87,113 @@ def _doc_to_quads(doc_json: str, base_url: str | None):
     return to_rdf(expanded)
 
 
+def is_transcript_tagged(docs: DataFrame, doc_col: str) -> bool:
+    """True when ``doc_col`` carries the ``transcript-v1`` shape tag."""
+    try:
+        meta = docs.schema[doc_col].metadata
+    except Exception:  # noqa: BLE001 — missing column surfaces later
+        return False
+    return meta.get(DOC_SHAPE_META_KEY) == TRANSCRIPT_SHAPE_V1
+
+
+_RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+_TURN_SCHEMA = StructType(
+    [
+        StructField("@id", StringType()),
+        StructField("turnIndex", LongType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", StringType()),
+    ]
+)
+_PARSED_SCHEMA = StructType(
+    [
+        StructField("@id", StringType()),
+        StructField(
+            "turns",
+            StructType([StructField("@list", ArrayType(_TURN_SCHEMA))]),
+        ),
+    ]
+)
+
+
+def _parsed_transcripts(docs: DataFrame, id_col: str, doc_col: str) -> DataFrame:
+    """One row per tagged doc: ``doc_id``, ``_null`` (the doc is null),
+    ``_conv``, ``_turns``, ``_ns`` (the doc's blank-node namespace), ``_n``
+    (turns), ``_k`` (turns without an ``@id``) and ``_exact`` (every turn
+    ``@id`` is non-null and distinct).
+
+    The parsed doc is materialized ONCE per row as an attribute: from_json
+    is referenced from every emitted term, and expression-level references
+    inside a transform() lambda would otherwise re-parse the document per
+    list element (measured 4x slowdown). Aliasing through a projection makes
+    every later use an attribute read; CollapseProject keeps non-cheap
+    multi-referenced aliases un-inlined. For the same reason no caller may
+    filter on these columns: the filter would be pushed below the
+    projection.
+    """
+    parsed = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.from_json(F.col(doc_col), _PARSED_SCHEMA).alias("_p"),
+        F.col(doc_col).isNull().alias("_null"),
+    ).select(
+        "doc_id",
+        "_null",
+        F.col("_p")["@id"].alias("_conv"),
+        F.col("_p")["turns"]["@list"].alias("_turns"),
+        # doc-namespaced labels: identical bytes to doc_bnode_namespace(doc_id)
+        F.concat(
+            F.lit("_:d"), F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 16)
+        ).alias("_ns"),
+    )
+    named = F.array_compact(F.col("_turns")["@id"])
+    return parsed.select(
+        "doc_id", "_null", "_conv", "_turns", "_ns",
+        F.size("_turns").alias("_n"),
+        (F.size("_turns") - F.size(named)).alias("_k"),
+        (F.size(F.array_distinct(named)) == F.size("_turns")).alias("_exact"),
+    )
+
+
+def _ranks(keys):
+    """Each element's position in ``keys`` sorted ascending, ties by index.
+
+    Sorting ``(key, index)`` gives the order and sorting that order back by
+    index gives its inverse: two sorts, no map (``element_at`` on a map
+    scans its keys)."""
+    order = F.array_sort(F.transform(keys, lambda k, i: F.struct(k.alias("k"), i.alias("i"))))
+    back = F.array_sort(
+        F.transform(order, lambda s, r: F.struct(s["i"].alias("i"), r.alias("r")))
+    )
+    return F.transform(back, lambda s: s["r"])
+
+
+def _cell_hash(turn_iri, i, n, conv):
+    """URDNA2015 first-degree hash of cons cell ``i`` of ``n``: its three
+    quads, masked and serialized exactly as ``canonicalize._masked_quad_expr``
+    does (self ``_:a``, other blank nodes ``_:z``), sorted and joined."""
+    first = F.concat(F.lit(f"_:a <{_RDF}first> <"), turn_iri, F.lit("> .\n"))
+    rest = F.when(i < n - 1, F.lit(f"_:a <{_RDF}rest> _:z .\n")).otherwise(
+        F.lit(f"_:a <{_RDF}rest> <{_RDF}nil> .\n"))
+    into = F.when(i > 0, F.lit(f"_:z <{_RDF}rest> _:a .\n")).otherwise(
+        F.concat(F.lit("<"), conv, F.lit(f"> <{VOCAB}turns> _:a .\n")))
+    return F.sha2(F.array_join(F.array_sort(F.array(first, rest, into)), ""), 256)
+
+
+def _transcript_fallback_ids(docs: DataFrame, id_col: str, doc_col: str) -> DataFrame:
+    """``doc_id`` of every non-null tagged doc that ``canonical=True`` of
+    :func:`_compiled_transcript_triples` skips: a turn ``@id`` is null or
+    repeats, so cell hashes may collide and the general canonicalization
+    must label the doc."""
+    p = _parsed_transcripts(docs, id_col, doc_col)
+    fallback = ~F.col("_null") & ~F.col("_exact")
+    return p.select(F.explode(F.when(fallback, F.array("doc_id"))).alias("doc_id"))
+
+
 def _compiled_transcript_triples(
-    docs: DataFrame, id_col: str, doc_col: str
+    docs: DataFrame, id_col: str, doc_col: str, canonical: bool = False
 ) -> DataFrame:
     """Pure-JVM toRDF for documents carrying the ``transcript-v1`` shape tag.
 
@@ -97,49 +202,42 @@ def _compiled_transcript_triples(
 
         {"@context": TRANSCRIPT_CONTEXT, "@id": <absolute IRI>,
          "@type": "Conversation",
-         "turns": {"@list": [ {"@id": <absolute IRI>, "@type": "Turn",
+         "turns": {"@list": [ {"@id": <absolute IRI>?, "@type": "Turn",
                                "turnIndex": int?, "role": str?, "text": str?,
                                "tool": str?, "ts": str?}, ... ]}}
 
     For that shape the full expand → node-map → toRDF pipeline reduces to a
     fixed relational projection (the context is static, so term → IRI and
-    type-coercion decisions are compile-time constants; every blank node is a
-    @list cons cell labeled ``_:bN`` in list order). Emitting it as
+    type-coercion decisions are compile-time constants). Emitting it as
     ``from_json`` + ``transform``/``flatten`` + ``explode`` keeps the whole
-    triples stage in whole-stage codegen — no JVM↔Python boundary, no Arrow
-    transport of ~200 bytes/quad (optimization guide §4.1: built-ins over
-    UDFs). Byte-equivalence with the Python kernel on this shape is pinned by
+    triples stage in the JVM — no JVM↔Python boundary, no Arrow transport of
+    ~200 bytes/quad (optimization guide §4.1: built-ins over UDFs).
+
+    The output is the kernel's, as a set:
+    - a turn without an ``@id`` (null ``turn_idx``) is a blank node; the
+      ``k`` anonymous turns are labeled ``_bN`` in list order before the
+      cons cells, which are ``_bk`` … in list order — the kernel's node-map
+      then toRDF issue order;
+    - a repeated turn ``@id`` is one node, so a doc whose ``@id`` values repeat
+      has its triple array deduplicated (an RDF graph is a set).
+
+    ``canonical=True`` labels the cons cells with their URDNA2015 labels
+    instead, all in the same row: each cell's first-degree hash
+    (:func:`_cell_hash`), its rank in sorted-hash order (:func:`_ranks`),
+    and the label ``{ns}_c14n{rank}`` — the bytes
+    :func:`~pyld_spark.operators.canonicalize.canonicalize_triples` writes.
+    Distinct non-null turn ``@id`` values make every cell hash distinct, so the
+    labels are exact; every other doc emits nothing on this route (its ids
+    are :func:`_transcript_fallback_ids`) and null docs are dropped, so
+    the output has no ``error_code`` column.
+
+    Byte-equivalence with the Python kernel on this shape is pinned by
     tests/test_spark_pipeline.py (reference differential) and
     tests/test_compiled_triples.py (path differential incl. null/unicode
-    edges); any untagged or differently-shaped input takes the general
-    ``mapInArrow`` kernel below.
+    edges, duplicate and anonymous turns); the canonical labels by
+    tests/test_compiled_canonical.py. Any untagged or differently-shaped
+    input takes the general ``mapInArrow`` kernel below.
     """
-    from pyspark.sql.types import ArrayType, LongType
-
-    from pyld_spark.transcripts import VOCAB
-
-    rdf_ns = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-    xsd = "http://www.w3.org/2001/XMLSchema#"
-    turn_schema = StructType(
-        [
-            StructField("@id", StringType()),
-            StructField("turnIndex", LongType()),
-            StructField("role", StringType()),
-            StructField("text", StringType()),
-            StructField("tool", StringType()),
-            StructField("ts", StringType()),
-        ]
-    )
-    parsed_schema = StructType(
-        [
-            StructField("@id", StringType()),
-            StructField(
-                "turns",
-                StructType([StructField("@list", ArrayType(turn_schema))]),
-            ),
-        ]
-    )
-
     def t(subj, pred: str, okind, oval, odt: str | None = None):
         return F.struct(
             subj.alias("subj"),
@@ -155,79 +253,87 @@ def _compiled_transcript_triples(
         # Python path sees no entry and emits no triple; mirror with when()
         return F.when(val.isNotNull(), t(subj, pred, "literal", val, dtype))
 
-    # Materialize the parsed doc ONCE per row as an attribute: from_json is
-    # referenced from every emitted term, and expression-level references
-    # inside the transform() lambda would otherwise re-parse the document per
-    # list element (measured 4x slowdown). Aliasing through a projection makes
-    # every later use an attribute read; CollapseProject keeps non-cheap
-    # multi-referenced aliases un-inlined.
-    parsed_docs = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.from_json(F.col(doc_col), parsed_schema).alias("_p"),
-        F.col(doc_col).isNull().alias("_null"),
-    ).select(
-        "doc_id",
-        "_null",
-        F.col("_p")["@id"].alias("_conv"),
-        F.col("_p")["turns"]["@list"].alias("_turns"),
-        # doc-namespaced cons-cell labels: identical bytes to
-        # doc_bnode_namespace(doc_id) + "_b" + list position
-        F.concat(
-            F.lit("_:d"), F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 16)
-        ).alias("_ns"),
-    ).select(
-        "doc_id", "_null", "_conv", "_turns", "_ns",
-        F.size(F.col("_turns")).alias("_n"),
-    )
+    p = _parsed_transcripts(docs, id_col, doc_col)
     conv = F.col("_conv")
     turns = F.col("_turns")
     n = F.col("_n")
+    k = F.col("_k")
     ns = F.col("_ns")
 
-    def cell(idx):
-        return F.concat(ns, F.lit("_b"), idx.cast("string"))
+    if canonical:
+        p = p.withColumn("_rank", F.when(F.col("_exact"), _ranks(
+            F.transform(turns, lambda x, i: _cell_hash(x["@id"], i, n, conv)))))
 
-    per_turn = F.transform(
-        turns,
-        lambda x, i: F.array(
-            t(cell(i), rdf_ns + "first", "IRI", x["@id"]),
+        def cell(i):
+            return F.concat(ns, F.lit("_c14n"), F.get(F.col("_rank"), i).cast("string"))
+
+        def turn_node(x, i):
+            return x["@id"]
+    else:
+        # anonymous turns rank first (false < true), in list order
+        p = p.withColumn("_anon", F.when(k > 0, _ranks(
+            F.transform(turns, lambda x: x["@id"].isNotNull()))))
+
+        def cell(i):
+            return F.concat(ns, F.lit("_b"), (k + i).cast("string"))
+
+        def turn_node(x, i):
+            anon = F.concat(ns, F.lit("_b"), F.get(F.col("_anon"), i).cast("string"))
+            return F.coalesce(x["@id"], anon)
+
+    def per_turn(x, i):
+        s = turn_node(x, i)
+        return F.array(
+            t(cell(i), _RDF + "first",
+              F.when(x["@id"].isNull(), F.lit("blank node")).otherwise(F.lit("IRI")), s),
             t(
                 cell(i),
-                rdf_ns + "rest",
+                _RDF + "rest",
                 F.when(i < n - 1, F.lit("blank node")).otherwise(F.lit("IRI")),
-                F.when(i < n - 1, cell(i + 1)).otherwise(F.lit(rdf_ns + "nil")),
+                F.when(i < n - 1, cell(i + 1)).otherwise(F.lit(_RDF + "nil")),
             ),
-            t(x["@id"], rdf_ns + "type", "IRI", F.lit(VOCAB + "Turn")),
-            lit_t(x["@id"], VOCAB + "turnIndex", x["turnIndex"].cast("string"),
-                  xsd + "integer"),
-            lit_t(x["@id"], VOCAB + "role", x["role"], xsd + "string"),
-            lit_t(x["@id"], VOCAB + "text", x["text"], xsd + "string"),
-            lit_t(x["@id"], VOCAB + "tool", x["tool"], xsd + "string"),
-            lit_t(x["@id"], VOCAB + "ts", x["ts"], xsd + "dateTime"),
-        ),
-    )
+            t(s, _RDF + "type", "IRI", F.lit(VOCAB + "Turn")),
+            lit_t(s, VOCAB + "turnIndex", x["turnIndex"].cast("string"),
+                  _XSD + "integer"),
+            lit_t(s, VOCAB + "role", x["role"], _XSD + "string"),
+            lit_t(s, VOCAB + "text", x["text"], _XSD + "string"),
+            lit_t(s, VOCAB + "tool", x["tool"], _XSD + "string"),
+            lit_t(s, VOCAB + "ts", x["ts"], _XSD + "dateTime"),
+        )
+
     conv_triples = F.array(
-        t(conv, rdf_ns + "type", "IRI", F.lit(VOCAB + "Conversation")),
+        t(conv, _RDF + "type", "IRI", F.lit(VOCAB + "Conversation")),
         F.when(n > 0, t(conv, VOCAB + "turns", "blank node", cell(F.lit(0))))
-        .otherwise(t(conv, VOCAB + "turns", "IRI", F.lit(rdf_ns + "nil"))),
+        .otherwise(t(conv, VOCAB + "turns", "IRI", F.lit(_RDF + "nil"))),
     )
+    triples = F.concat(conv_triples, F.coalesce(F.flatten(F.transform(turns, per_turn)), F.array()))
+    is_null = F.col("_null")
+    exact = F.col("_exact")
+    cols = ["doc_id", "t.subj", "t.pred", "t.obj_kind", "t.obj_value",
+            "t.obj_datatype", "t.obj_language"]
+
+    if canonical:
+        # the per-doc skip stays inside the explode: a filter here would be
+        # pushed below the projection (see _parsed_transcripts)
+        return (
+            p.select("doc_id", F.explode(F.when(~is_null & exact, triples)).alias("t"))
+            .where(F.col("t").isNotNull())
+            .select(*cols, F.lit("@default").alias("graph"))
+        )
+
     # a null doc (null conv_id upstream) is one quarantine row, with the
     # code the kernel gives it
-    is_null = F.col("_null")
     quarantine = F.array(F.struct(*(
         F.lit(None).cast("string").alias(c) for c in TRIPLE_COLUMNS[:-1]
     )))
-    all_triples = F.when(is_null, quarantine).otherwise(
-        F.concat(conv_triples, F.coalesce(F.flatten(per_turn), F.array()))
-    )
+    all_triples = F.when(is_null, quarantine).when(exact, triples).otherwise(
+        F.array_distinct(triples))
 
     return (
-        parsed_docs.select("doc_id", "_null", F.explode(all_triples).alias("t"))
+        p.select("doc_id", "_null", F.explode(all_triples).alias("t"))
         .where(F.col("t").isNotNull())
         .select(
-            "doc_id",
-            "t.subj", "t.pred", "t.obj_kind", "t.obj_value",
-            "t.obj_datatype", "t.obj_language",
+            *cols,
             F.when(~is_null, F.lit("@default")).alias("graph"),
             F.when(is_null, F.lit(NULL_DOC_CODE)).alias("error_code"),
         )
@@ -259,13 +365,9 @@ def docs_to_triples(
     the JSON itself) compile to an equivalent pure-JVM projection instead —
     see :func:`_compiled_transcript_triples`.
     """
-    if base_url is None and base_col is None and namespace_bnodes:
-        try:
-            meta = docs.schema[doc_col].metadata
-        except Exception:  # noqa: BLE001 — missing column surfaces later
-            meta = None
-        if meta and meta.get(DOC_SHAPE_META_KEY) == TRANSCRIPT_SHAPE_V1:
-            return _compiled_transcript_triples(docs, id_col, doc_col)
+    if (base_url is None and base_col is None and namespace_bnodes
+            and is_transcript_tagged(docs, doc_col)):
+        return _compiled_transcript_triples(docs, id_col, doc_col)
 
     def triples(doc_id, doc_json, base=None):
         quads = _doc_to_quads(doc_json, base_url if base is None else base)

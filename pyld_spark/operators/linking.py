@@ -52,7 +52,10 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, text, tool) → one row per detected mention.
 
     Arrow-vectorized: each batch does three pandas str ops, no Python loop
-    over rows. Narrow (no shuffle)."""
+    over rows. Narrow (no shuffle). A row with a null ``conv_id`` or
+    ``turn_idx`` has no turn IRI for a mention edge to start from (its turn
+    is a blank node in the triples, or its doc is quarantined), so it
+    yields no mentions."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -72,7 +75,8 @@ def extract_mentions(transcripts: DataFrame) -> DataFrame:
             out = pd.concat(frames, ignore_index=True)
             yield out[["conv_id", "turn_idx", "mention_kind", "mention"]]
 
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
+    keyed = F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+    return transcripts.select("conv_id", "turn_idx", "text", "tool").where(keyed).mapInPandas(
         run, MENTION_SCHEMA
     )
 

@@ -5,6 +5,13 @@ Stages (each a checkpointed table write):
     assemble → link → triples (+quarantine) → canonicalize → entities →
     materialize
 
+canonicalize reads the assemble docs as well as the triples
+(:func:`~pyld_spark.operators.canonicalize.canonicalize_documents`): tagged
+transcript docs get their canonical labels in the same compiled per-row
+projection that emits their triples, with no exchange; only docs with a null
+or repeated turn ``@id`` (and untagged docs) are canonicalized from their
+rows of the triples table.
+
 Sandbox note: checkpoints are parquet directories under ``workdir`` — the
 drop-in for Iceberg tables on a real cluster (``writeTo(...).createOrReplace``
 against a catalog; same layout, same resume logic via snapshot existence).
@@ -115,7 +122,7 @@ class Pipeline:
         Bucketed input keeps the fused stage exchange-free end-to-end.
         Trade-off: resume restarts from raw transcripts instead of the
         docs checkpoint, and no 'assemble' lineage row is recorded."""
-        from pyld_spark.operators.canonicalize import canonicalize_triples
+        from pyld_spark.operators.canonicalize import canonicalize_documents
         from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
         from pyld_spark.operators.linking import (
             entity_table,
@@ -143,7 +150,8 @@ class Pipeline:
             error_split=split_quarantine,
         )
 
-        canonical = self._stage("canonicalize", lambda: canonicalize_triples(triples))
+        canonical = self._stage("canonicalize", lambda: canonicalize_documents(
+            assemble_documents(transcripts) if fuse_assembly else docs, triples))
 
         entities = self._stage("entities", lambda: entity_table(linked))
 
@@ -220,7 +228,7 @@ class Pipeline:
         over the grown corpus — asserted by tests/test_pipeline_incremental.
         Appends are gated per stage on an anti-join against that stage's own
         output ids, so re-running after a mid-run crash is idempotent."""
-        from pyld_spark.operators.canonicalize import canonicalize_triples
+        from pyld_spark.operators.canonicalize import canonicalize_documents
         from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
         from pyld_spark.operators.linking import (
             entity_table,
@@ -266,8 +274,12 @@ class Pipeline:
         # every delta run
         self._append_stage(
             "canonicalize",
-            lambda todo: canonicalize_triples(
-                self._read("triples").join(todo, "doc_id", "left_semi")
+            lambda todo: canonicalize_documents(
+                self._read("assemble").join(
+                    todo.withColumnRenamed("doc_id", "conv_id"),
+                    "conv_id", "left_semi",
+                ),
+                self._read("triples").join(todo, "doc_id", "left_semi"),
             ),
             self._read("triples").select("doc_id").distinct(), "doc_id",
         )

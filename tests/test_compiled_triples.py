@@ -57,7 +57,9 @@ def test_compiled_matches_kernel_on_corpus(spark, sf_dir):
         docs.unpersist()
 
 
-@pytest.mark.parametrize("case", ["nulls", "unicode", "single", "hot"])
+@pytest.mark.parametrize(
+    "case", ["nulls", "unicode", "single", "hot", "duplicate_id", "null_turn_idx"]
+)
 def test_compiled_matches_kernel_adversarial(spark, case):
     ts0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
     if case == "nulls":
@@ -73,6 +75,25 @@ def test_compiled_matches_kernel_adversarial(spark, case):
         ]
     elif case == "single":
         rows = [("c-s", 0, "system", "only turn", None, ts0)]
+    elif case == "duplicate_id":
+        # one turn @id twice: the kernel merges the two nodes (a graph is a
+        # set), the second pair also differs in role/text/tool
+        rows = [
+            ("c-d", 0, "user", "a", None, ts0),
+            ("c-d", 1, "user", "b", None, ts0),
+            ("c-d", 1, "user", "b", None, ts0),
+            ("c-d", 2, "user", "x", None, ts0),
+            ("c-d", 2, "tool", "y", "search", ts0),
+        ]
+    elif case == "null_turn_idx":
+        # turns without an @id are blank nodes, numbered before the cells
+        rows = [
+            ("c-n", None, "user", "p", None, ts0),
+            ("c-n", 0, "assistant", "q", None, ts0),
+            ("c-n", None, "tool", "r", "python", ts0),
+            ("c-n", 1, "user", "s", None, ts0),
+            ("c-n", None, "system", "t", None, ts0),
+        ]
     else:  # hot: enough turns to exercise multi-digit cons-cell labels
         rows = [("c-h", i, "user", f"t{i}", None, ts0) for i in range(25)]
     t = spark.createDataFrame(

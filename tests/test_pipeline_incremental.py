@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pyld_spark.operators.canonicalize import canonicalize_triples
 from pyld_spark.plans.pipeline import Pipeline
 from pyld_spark.transcripts import transcripts_from_events
 
@@ -16,10 +17,13 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path):
-    t = transcripts_from_events(spark, sf_dir)
+def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path, odd_convs):
+    # a-dup sorts into the initial half and zz-anon into the delta, so both
+    # the full run and the delta take the general-canonicalization route
+    t = transcripts_from_events(spark, sf_dir).select(*odd_convs.columns).unionByName(odd_convs)
     convs = sorted(r["conv_id"] for r in t.select("conv_id").distinct().collect())
     half = set(convs[: len(convs) // 2])
+    assert "a-dup" in half and "zz-anon" not in half
     t_old = t.where(F.col("conv_id").isin(half))
 
     # 1) initial corpus → full run
@@ -37,6 +41,8 @@ def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path):
 
     for stage in STAGES:
         assert _sorted_rows(out_inc[stage]) == _sorted_rows(out_full[stage]), stage
+    assert _sorted_rows(out_inc["canonicalize"]) == _sorted_rows(
+        canonicalize_triples(out_inc["triples"]))
 
     # 4) idempotency: same input again appends nothing anywhere
     before = {s: out_inc[s].count() for s in STAGES}

@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from pyld_spark.operators.canonicalize import canonicalize_triples
+    from pyld_spark.operators.canonicalize import canonicalize_documents, canonicalize_triples
     from pyld_spark.operators.dedup import minhash_dedup_pairs, ngram_jaccard_pairs
     from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
     from pyld_spark.operators.linking import entity_mention_counts, extract_mentions, link_entities
@@ -49,17 +49,23 @@ def main() -> None:
         synthesize_transcripts(spark, n_convs=50, turns_per_conv=5, hot_convs=0),
         spark, "/tmp/explain_audit_bucketed", buckets=8,
     )
+    bucketed_docs = assemble_documents(bucketed)
 
     plans = {
         "turn_literal_triples (narrow projection — expect zero exchanges)":
             turn_literal_triples(t),
         "assembly (one exchange on conv_id; hash aggregate)": docs,
         "assembly over bucketed transcripts (ZERO exchanges — production layout)":
-            assemble_documents(bucketed),
+            bucketed_docs,
         "docs_to_triples (assembly + one MapInArrow, no extra exchange)":
             triples,
         "canonicalize_triples (fd-hash agg + one relabel join)":
             canonicalize_triples(triples),
+        "canonicalize_documents over bucketed tagged transcript docs (in-row "
+        "fd hashes, ranks and labels — ZERO exchanges, no Python node)":
+            canonicalize_documents(
+                bucketed_docs, split_quarantine(docs_to_triples(bucketed_docs))[0]
+            ),
         "entity_mention_counts (two-phase salted aggregation)":
             entity_mention_counts(link_entities(extract_mentions(t))),
         "ngram_jaccard_pairs (inverted-index join)":
