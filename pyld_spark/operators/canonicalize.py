@@ -351,11 +351,12 @@ def canonicalize_triples(triples: DataFrame, max_exact_quads: int = 100_000,
     )
 
 
-def canonicalize_documents(docs: DataFrame, triples: DataFrame,
-                           id_col: str = "conv_id", doc_col: str = "doc") -> DataFrame:
+def canonicalize_documents(docs: DataFrame, triples: DataFrame) -> DataFrame:
     """Canonical triples of ``triples``, the quarantine-free
     :func:`~pyld_spark.operators.expand_stage.docs_to_triples` output of
-    ``docs``: the routing the pipeline's canonicalize stage runs.
+    ``docs`` (the ``(conv_id, doc)`` rows of
+    :func:`~pyld_spark.transcripts.assemble_documents`): the routing the
+    pipeline's canonicalize stage runs.
 
     Tagged transcript docs whose turn ``@id`` values are all non-null and
     distinct are labeled in the compiled per-row projection
@@ -372,10 +373,10 @@ def canonicalize_documents(docs: DataFrame, triples: DataFrame,
         is_transcript_tagged,
     )
 
-    if not is_transcript_tagged(docs, doc_col):
+    if not is_transcript_tagged(docs, "doc"):
         return canonicalize_triples(triples)
-    in_row = _compiled_transcript_triples(docs, id_col, doc_col, canonical=True)
-    fallback = cut_lineage(_transcript_fallback_ids(docs, id_col, doc_col))
+    in_row = _compiled_transcript_triples(docs, "conv_id", "doc", canonical=True)
+    fallback = cut_lineage(_transcript_fallback_ids(docs, "conv_id", "doc"))
     if fallback.isEmpty():
         return in_row
     return in_row.unionByName(canonicalize_triples(
