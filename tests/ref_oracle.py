@@ -6,14 +6,34 @@ Nothing from the reference is shipped in pyld_spark; tests compare our
 output against its behavior (SURVEY.md §5: the reference's own equality
 oracle for triples is canonicalized-N-Quads comparison,
 /root/reference/tests/runtests.py:455-476).
+
+When ``/root/reference/lib`` is absent, the differential suites skip with
+an ``oracle:`` reason through ``requires_reference``: their only expected
+value is the reference's live output. Tests whose expected values are
+written in this repository still run; they check the reference leg only
+when ``REFERENCE_PRESENT``. Those are the error codes of
+``fixtures_expand.EXPAND_ERROR_FIXTURES``, the literals pinned in
+``test_base_options`` and ``test_fromrdf_vs_reference``, and the
+shared-embed check in ``test_link_api``.
+``get_reference_jsonld()`` itself does not skip, so a reference that is
+present but broken still fails loudly.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_LIB = "/root/reference/lib"
+REFERENCE_PRESENT = os.path.isdir(REFERENCE_LIB)
+
+requires_reference = pytest.mark.skipif(
+    not REFERENCE_PRESENT,
+    reason="oracle: reference pyld at /root/reference/lib is not on this machine",
+)
 
 
 def _stub_modules() -> None:

@@ -3,7 +3,9 @@ ladder quirks it exposed (reference iri_resolver.py:129-233 and the
 option plumbing at jsonld.py:486/632/6100-6119).
 
 Every case here was found by the ``apiopts`` differential axis and
-verified against the reference before pinning.
+verified against the reference before pinning. The pinned literals are
+the expected values; the reference legs run only where the reference is
+installed (``REFERENCE_PRESENT``).
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import pytest
 
 from pyld_spark.jsonld import api
 from pyld_spark.jsonld.iri import remove_dot_segments, resolve_iri
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import REFERENCE_PRESENT, get_reference_jsonld
 
 P = "http://e/p"
 
@@ -139,26 +141,29 @@ def test_relative_context_base_lazily_anchored_on_api_base():
     # non-None active @base) and then resolves it against the API base at
     # EVERY document-relative resolution (jsonld.py:6105-6110:
     # resolved_base = resolve(ctx_base, base)). Found by wave N+23 probes.
-    ref = get_reference_jsonld()
+    ref = get_reference_jsonld() if REFERENCE_PRESENT else None
     doc = {"@context": [{"@base": None}, {"@base": "rel/"}],
            "@id": "doc", "http://e/p": "v"}
     opts = {"base": "http://b/"}
     expected = [{"@id": "http://b/rel/doc",
                  "http://e/p": [{"@value": "v"}]}]
-    assert ref.expand(json.loads(json.dumps(doc)), dict(opts)) == expected
+    if REFERENCE_PRESENT:
+        assert ref.expand(json.loads(json.dumps(doc)), dict(opts)) == expected
     assert api.expand(doc, dict(opts)) == expected
     # type-coerced @id values route through the same lazy anchor
     doc2 = {"@context": [{"@base": None}, {"@base": "r/"},
                          {"k": {"@id": "http://e/k", "@type": "@id"}}],
             "k": "obj"}
     expected2 = [{"http://e/k": [{"@id": "http://b/r/obj"}]}]
-    assert ref.expand(json.loads(json.dumps(doc2)), dict(opts)) == expected2
+    if REFERENCE_PRESENT:
+        assert ref.expand(json.loads(json.dumps(doc2)), dict(opts)) == expected2
     assert api.expand(doc2, dict(opts)) == expected2
     # with an ABSENT API base the reference ValueErrors on the lazy resolve
     # (bare resolve against '') — this engine anchors on its synthetic
     # document base instead: graceful crash-class divergence
-    with pytest.raises(ValueError):
-        ref.expand(json.loads(json.dumps(doc)), {})
+    if REFERENCE_PRESENT:
+        with pytest.raises(ValueError):
+            ref.expand(json.loads(json.dumps(doc)), {})
     out = api.expand(doc, {})
     assert out[0]["@id"].endswith("/rel/doc")
 
@@ -168,19 +173,21 @@ def test_relative_context_base_anchored_in_compaction():
     # against resolve(ctx_base, api_base) on EVERY compaction
     # (jsonld.py:5381), so a RAW relative @base still shortens IRIs when
     # the API base makes it absolute
-    ref = get_reference_jsonld()
+    ref = get_reference_jsonld() if REFERENCE_PRESENT else None
     doc = [{"@id": "http://b/rel/doc", "http://e/p": [{"@value": "v"}]}]
     ctx = [{"@base": None}, {"@base": "rel/"}]
     opts = {"base": "http://b/"}
     expected = {"@context": [{"@base": None}, {"@base": "rel/"}],
                 "@id": "doc", "http://e/p": "v"}
-    assert ref.compact(json.loads(json.dumps(doc)),
-                       json.loads(json.dumps(ctx)), dict(opts)) == expected
+    if REFERENCE_PRESENT:
+        assert ref.compact(json.loads(json.dumps(doc)),
+                           json.loads(json.dumps(ctx)), dict(opts)) == expected
     assert api.compact(doc, ctx, dict(opts)) == expected
     # reference ValueErrors when the API base is absent; graceful here
-    with pytest.raises(ValueError):
-        ref.compact(json.loads(json.dumps(doc)),
-                    json.loads(json.dumps(ctx)), {})
+    if REFERENCE_PRESENT:
+        with pytest.raises(ValueError):
+            ref.compact(json.loads(json.dumps(doc)),
+                        json.loads(json.dumps(ctx)), {})
     out = api.compact(doc, ctx, {})
     assert "@id" in out
 
@@ -192,20 +199,22 @@ def test_property_scoped_relative_base_graceful():
     # TYPE-scoped shape succeeds and lazily anchors on the API base
     # ("tscope/" -> http://b/tscope/). This engine treats both shapes the
     # same way: graceful, anchored on the API base.
-    ref = get_reference_jsonld()
+    ref = get_reference_jsonld() if REFERENCE_PRESENT else None
     opts = {"base": "http://b/"}
     tdoc = {"@context": {"T": {"@id": "http://e/T",
                                "@context": {"@base": "tscope/"}}},
             "@type": "T", "@id": "self", "http://e/p": "v"}
     expected_t = [{"@id": "http://b/tscope/self", "@type": ["http://e/T"],
                    "http://e/p": [{"@value": "v"}]}]
-    assert ref.expand(json.loads(json.dumps(tdoc)), dict(opts)) == expected_t
+    if REFERENCE_PRESENT:
+        assert ref.expand(json.loads(json.dumps(tdoc)), dict(opts)) == expected_t
     assert api.expand(tdoc, dict(opts)) == expected_t
     pdoc = {"@context": {"n": {"@id": "http://e/n",
                                "@context": {"@base": "scope/"}}},
             "n": {"@id": "child", "http://e/p": "v"}}
-    with pytest.raises(ValueError):
-        ref.expand(json.loads(json.dumps(pdoc)), dict(opts))
+    if REFERENCE_PRESENT:
+        with pytest.raises(ValueError):
+            ref.expand(json.loads(json.dumps(pdoc)), dict(opts))
     out = api.expand(pdoc, dict(opts))
     assert out == [{"http://e/n": [{"@id": "http://b/scope/child",
                                     "http://e/p": [{"@value": "v"}]}]}]
@@ -217,7 +226,7 @@ def test_none_document_api_matrix_matches_reference():
     # pass through the remote-doc envelope), EXCEPT compact, whose module
     # wrapper validates the context first and whose processor method then
     # early-returns None (jsonld.py:480-482). Wave N+24 probes.
-    ref = get_reference_jsonld()
+    ref = get_reference_jsonld() if REFERENCE_PRESENT else None
 
     def code(fn, *a):
         try:
@@ -231,7 +240,7 @@ def test_none_document_api_matrix_matches_reference():
                 cd = getattr(c, "code", None) if c else None
             return ("err", cd)
 
-    for f in (ref, api):
+    for f in (ref, api) if REFERENCE_PRESENT else (api,):
         assert code(f.expand, None) == ("err", "loading document failed")
         assert code(f.flatten, None) == ("err", "loading document failed")
         assert code(f.frame, None, {}) == ("err", "loading document failed")
@@ -241,8 +250,9 @@ def test_none_document_api_matrix_matches_reference():
         assert code(f.compact, None, None) == ("err", "invalid local context")
     # non-dataset from_rdf inputs: the reference dies with a bare
     # AttributeError; this engine raises a coded error
-    with pytest.raises(Exception):
-        ref.from_rdf(42, {})
+    if REFERENCE_PRESENT:
+        with pytest.raises(Exception):
+            ref.from_rdf(42, {})
     try:
         api.from_rdf(42, {})
         raise AssertionError("expected coded error")

@@ -11,7 +11,9 @@ from pyld_spark.jsonld.context import initial_context
 from pyld_spark.jsonld.expand import expand
 from pyld_spark.jsonld.rdf import to_rdf
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
+
+pytestmark = requires_reference
 
 EX = "http://example.org/"
 

@@ -10,7 +10,7 @@ from pyld_spark.operators.canonicalize import canonical_labels, canonicalize_tri
 from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
 from pyld_spark.transcripts import assemble_documents, transcripts_from_events
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 
 def _ref_canonical_mapping(doc):
@@ -45,6 +45,7 @@ def test_fast_path_matches_exact_on_transcripts(spark, sf_dir):
             )
 
 
+@requires_reference
 def test_fallback_path_on_symmetric_gadgets(spark):
     """Docs with colliding first-degree hashes exercise the exact
     applyInPandas fallback; a unique-hash doc rides the fast path. Both must

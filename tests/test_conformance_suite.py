@@ -10,6 +10,9 @@ from __future__ import annotations
 import pytest
 
 from tests.conformance_harness import MANIFESTS, run_manifest
+from tests.ref_oracle import requires_reference
+
+pytestmark = requires_reference
 
 
 @pytest.mark.parametrize(("name", "fn"), MANIFESTS)

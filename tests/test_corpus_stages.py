@@ -9,7 +9,7 @@ from pyld_spark.operators.frame_stage import frame_corpus, frame_subject_filter
 from pyld_spark.operators.fromrdf_stage import list_chain_lengths, triples_to_documents
 from pyld_spark.transcripts import VOCAB, assemble_documents, transcripts_from_events
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
 
 
@@ -55,6 +55,7 @@ def test_frame_subject_filter_prunes(spark, sf_dir):
     assert rows_all < rows  # the tool constraint actually prunes
 
 
+@requires_reference
 def test_frame_corpus_matches_reference(spark, sf_dir):
     docs, triples = _triples(spark, sf_dir)
     frame = {"@context": {"@vocab": VOCAB}, "@type": "Conversation"}

@@ -12,7 +12,11 @@ from pyld_spark.jsonld.errors import JsonLdError
 from pyld_spark.jsonld.expand import expand
 
 from tests.fixtures_expand import EXPAND_ERROR_FIXTURES, EXPAND_FIXTURES
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import (
+    REFERENCE_PRESENT,
+    get_reference_jsonld,
+    requires_reference,
+)
 
 
 def equal_unordered(a, b) -> bool:
@@ -38,6 +42,7 @@ def my_expand(doc, base_url=None):
     return expand(doc, context=ctx, base_url=base_url)
 
 
+@requires_reference
 @pytest.mark.parametrize("name", sorted(EXPAND_FIXTURES))
 def test_expand_matches_reference(name):
     doc, base = EXPAND_FIXTURES[name]
@@ -51,14 +56,17 @@ def test_expand_matches_reference(name):
 
 @pytest.mark.parametrize("name", sorted(EXPAND_ERROR_FIXTURES))
 def test_expand_error_codes_match_reference(name):
+    # the expected code is the fixture's JSON-LD 1.1 API error code; the
+    # reference confirms it only where it is installed
     doc, code = EXPAND_ERROR_FIXTURES[name]
-    ref = get_reference_jsonld()
-    ref_code = None
-    try:
-        ref.expand(doc)
-    except Exception as e:  # noqa: BLE001
-        ref_code = getattr(e, "code", None)
-    assert ref_code == code, f"fixture {name}: reference raised {ref_code}, expected {code}"
+    if REFERENCE_PRESENT:
+        ref = get_reference_jsonld()
+        ref_code = None
+        try:
+            ref.expand(doc)
+        except Exception as e:  # noqa: BLE001
+            ref_code = getattr(e, "code", None)
+        assert ref_code == code, f"fixture {name}: reference raised {ref_code}, expected {code}"
     with pytest.raises(JsonLdError) as exc_info:
         my_expand(doc)
     assert exc_info.value.code == code

@@ -7,7 +7,7 @@ import pytest
 
 from pyld_spark.jsonld import api
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
 
 EX = "http://example.org/"
@@ -68,6 +68,7 @@ FIXTURES = {
 }
 
 
+@requires_reference
 @pytest.mark.parametrize("name", sorted(FIXTURES))
 def test_advanced_frame_matches_reference(name):
     doc, frame_doc, opts = FIXTURES[name]

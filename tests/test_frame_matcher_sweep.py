@@ -14,9 +14,12 @@ import json
 import sys
 from pathlib import Path
 
+from tests.ref_oracle import requires_reference
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 
+@requires_reference
 def test_frame_sweep_matches_reference():
     from frame_sweep import sweep
 

@@ -6,8 +6,10 @@ import pytest
 
 from pyld_spark.jsonld import api
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
+
+pytestmark = requires_reference
 
 EX = "http://example.org/"
 

@@ -6,9 +6,11 @@ the term entry's value when present, None for nulled terms."""
 
 import pytest
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 from pyld_spark.jsonld import api
+
+pytestmark = requires_reference
 
 CTX = {
     "@language": "en",

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import json
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 from pyld_spark.jsonld import api
 
@@ -29,6 +29,7 @@ def _round(doc, ctx):
     )
 
 
+@requires_reference
 def test_link_acyclic_matches_reference():
     doc = {
         "@context": CTX,
@@ -50,7 +51,7 @@ def test_link_shares_embedded_objects():
             {"@id": "ex:c", "name": "C"},
         ],
     }
-    _, my_out = _round(doc, CTX)
+    my_out = api.link(json.loads(json.dumps(doc)), json.loads(json.dumps(CTX)))
     nodes = {n["@id"]: n for n in my_out["@graph"]}
     # same linked payload through both references
     assert nodes["ex:a"]["knows"] == nodes["ex:b"]["knows"]

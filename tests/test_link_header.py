@@ -12,7 +12,7 @@ from pyld_spark.sources.link_header import (
     parse_link_header,
 )
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 HEADERS = [
     '<http://a/ctx.jsonld>; rel="http://www.w3.org/ns/json-ld#context"; '
@@ -27,6 +27,7 @@ HEADERS = [
 ]
 
 
+@requires_reference
 @pytest.mark.parametrize("header", HEADERS)
 def test_parse_link_header_matches_reference(header):
     ref = get_reference_jsonld()

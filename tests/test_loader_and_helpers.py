@@ -9,7 +9,7 @@ from pyld_spark.jsonld import api
 from pyld_spark.jsonld.context import DocumentLoader
 from pyld_spark.jsonld.errors import JsonLdError
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
 
 EX = "http://example.org/"
@@ -46,6 +46,7 @@ def _opts():
     return {"documentLoader": DocumentLoader(REMOTE_DOCS)}
 
 
+@requires_reference
 def test_remote_context_url():
     doc = {"@context": "http://ctx.example/v1", "@id": EX + "a", "name": "X"}
     ref = get_reference_jsonld()
@@ -54,6 +55,7 @@ def test_remote_context_url():
     assert equal_unordered(actual, expected)
 
 
+@requires_reference
 def test_chained_remote_contexts():
     doc = {"@context": "http://ctx.example/chained", "@id": EX + "a",
            "name": "X", "extra": "Y"}
@@ -63,6 +65,7 @@ def test_chained_remote_contexts():
     assert equal_unordered(actual, expected)
 
 
+@requires_reference
 def test_context_import():
     doc = {"@context": "http://ctx.example/withimport", "@id": EX + "a",
            "base": "B", "local": "L"}
@@ -119,6 +122,7 @@ REMOTE_JSONLD = {
 }
 
 
+@requires_reference
 def test_string_inputs_are_remote_documents():
     """expand/to_rdf/compact/frame accept document (and frame) IRIs, fetched
     through the frozen loader with the base defaulting to the document URL

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyld_spark.sources.nquads_io import read_nquads, write_nquads
 
+from tests.ref_oracle import requires_reference
+
 NQ = """\
 <http://e/a> <http://e/p> "plain" .
 <http://e/a> <http://e/p> "typed"^^<http://www.w3.org/2001/XMLSchema#integer> .
@@ -142,6 +144,7 @@ def test_parse_nquads_rejects_unknown_escape():
     assert quads[0][2]["value"] == "\t\b\n\r\f\"'\\é\U0001D11E"
 
 
+@requires_reference
 def test_reference_dataset_dialect_functions():
     # the public api layer speaks the reference's dataset-dict dialect:
     # parse_nquads_dataset / serialize_nquads / serialize_nquad mirror the

@@ -7,9 +7,11 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
 from tests.test_property_differential import CONTEXT, documents
+
+pytestmark = requires_reference
 
 
 @settings(

@@ -15,8 +15,10 @@ import json
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_expand_vs_reference import equal_unordered
+
+pytestmark = requires_reference
 
 EX = "http://e/"
 

@@ -10,7 +10,9 @@ import re
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
+
+pytestmark = requires_reference
 
 EX = "http://example.org/"
 XSD = "http://www.w3.org/2001/XMLSchema#"

@@ -8,9 +8,11 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 from pyld_spark.sources.link_header import parse_link_header
+
+pytestmark = requires_reference
 
 targets = st.sampled_from([
     "http://e/ctx.jsonld", "http://e/a,b", "urn:x", "", "http://e/<odd",

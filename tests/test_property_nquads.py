@@ -12,9 +12,11 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 from pyld_spark.jsonld.nquads import parse_nquads
+
+pytestmark = requires_reference
 
 iris = st.sampled_from([
     "http://e/a", "http://e/b#frag", "urn:x:y", "http://e/p?q=1",

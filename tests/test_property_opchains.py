@@ -27,8 +27,10 @@ import json
 
 from hypothesis import HealthCheck, given, settings
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_property_contexts import bodies, contexts, frames
+
+pytestmark = requires_reference
 
 EX = "http://e/"
 

@@ -22,9 +22,11 @@ import json
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 from tests.test_property_contexts import bodies, contexts, frames
 from tests.test_property_fromrdf import _nquads, datasets, rdf_directions
+
+pytestmark = requires_reference
 
 EX = "http://e/"
 

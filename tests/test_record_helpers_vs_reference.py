@@ -11,9 +11,11 @@ import json
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 from pyld_spark.jsonld import nodemap
+
+pytestmark = requires_reference
 
 EX = "http://e/"
 

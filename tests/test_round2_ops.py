@@ -9,6 +9,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from tests.ref_oracle import requires_reference
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, ["doc_id", "text"])
@@ -152,6 +154,7 @@ def test_frame_type_prefilter_avoids_full_distinct(spark):
     }
 
 
+@requires_reference
 def test_compact_corpus_matches_reference(spark):
     """compact_documents output equals the reference processor's compact()
     on the same documents and target context."""

@@ -19,13 +19,14 @@ from pyld_spark.transcripts import (
     transcripts_from_events,
 )
 
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 
 def _denamespace(v):
     return re.sub(r"^_:d[0-9a-f]{16}_", "_:", v) if isinstance(v, str) else v
 
 
+@requires_reference
 def test_docs_to_triples_matches_reference(spark, sf_dir):
     docs = assemble_documents(transcripts_from_events(spark, sf_dir))
     some = docs.limit(5).cache()
@@ -110,6 +111,7 @@ def test_quarantine_rows(spark):
     assert good.count() == 1
 
 
+@requires_reference
 def test_docs_to_canonical_nquads_matches_reference(spark, sf_dir):
     docs = assemble_documents(transcripts_from_events(spark, sf_dir)).limit(3).cache()
     out, quarantine = split_quarantine(docs_to_canonical_nquads(docs))

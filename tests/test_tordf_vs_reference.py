@@ -13,7 +13,7 @@ from pyld_spark.jsonld.nquads import parse_nquads, serialize_quads
 from pyld_spark.jsonld.rdf import canonical_double, to_rdf
 
 from tests.fixtures_expand import EXPAND_FIXTURES
-from tests.ref_oracle import get_reference_jsonld
+from tests.ref_oracle import get_reference_jsonld, requires_reference
 
 EX = "http://example.org/"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -93,6 +93,7 @@ def my_nquads(doc, base=None):
     return serialize_quads(quads)
 
 
+@requires_reference
 @pytest.mark.parametrize("name", sorted(EXPAND_FIXTURES))
 def test_tordf_matches_reference_on_expand_fixtures(name):
     doc, base = EXPAND_FIXTURES[name]
@@ -105,6 +106,7 @@ def test_tordf_matches_reference_on_expand_fixtures(name):
     assert actual == expected, f"{name}:\nmine:\n{actual}\nref:\n{expected}"
 
 
+@requires_reference
 @pytest.mark.parametrize("name", sorted(TORDF_EXTRA))
 def test_tordf_matches_reference_extra(name):
     doc = TORDF_EXTRA[name]
@@ -114,6 +116,7 @@ def test_tordf_matches_reference_extra(name):
     assert actual == expected, f"{name}:\nmine:\n{actual}\nref:\n{expected}"
 
 
+@requires_reference
 def test_canonical_double_forms():
     ref = get_reference_jsonld()
     for v in [1.1, 0.000001, 1e21, -1e21, 123456789.123456789, 5.0, -0.0, 1.0 / 3.0]:
@@ -133,6 +136,7 @@ def test_nquads_roundtrip():
     assert serialize_quads(quads) == nq
 
 
+@requires_reference
 def test_transcript_docs_tordf_matches_reference(spark, sf_dir):
     """Flagship path parity: assembled conversation docs → triples must match
     the reference's to_rdf byte-for-byte (labels included)."""
@@ -148,6 +152,7 @@ def test_transcript_docs_tordf_matches_reference(spark, sf_dir):
         assert actual == expected, f"conv {row.conv_id} mismatch"
 
 
+@requires_reference
 def test_to_rdf_without_format_returns_dataset_dict():
     # no-format to_rdf returns the reference's RDF-dataset dict shape
     # ({graph: [{subject, predicate, object}]}), with the default graph
