@@ -6,10 +6,9 @@ implementation from the RDF-canon spec).
 
 Spark role (SURVEY.md §2.9): transcript-derived graphs have *document-local*
 blank nodes, so canonicalization components never span conversations — this
-exact algorithm runs per document inside the pandas UDF. The corpus-scale
-DataFrame fixpoint (first-degree hash aggregation + WL refinement) lives in
-pyld_spark.operators.canonicalize and falls back to this implementation for
-residual ambiguous components.
+exact algorithm runs per document in one ``applyInArrow`` group
+(pyld_spark.operators.canonicalize), for every document up to
+``max_exact_quads`` quads; larger ones take that module's WL refinement.
 """
 
 from __future__ import annotations
@@ -19,12 +18,6 @@ from itertools import permutations
 
 from pyld_spark.jsonld.nodemap import IdentifierIssuer
 from pyld_spark.jsonld.nquads import serialize_quad
-
-
-def _term_key(term: dict | None):
-    if term is None:
-        return None
-    return (term["type"], term["value"], term.get("datatype"), term.get("language"))
 
 
 class _NDegreeResult:

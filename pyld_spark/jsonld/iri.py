@@ -11,9 +11,6 @@ import re
 from functools import lru_cache
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-_PARTS_RE = re.compile(
-    r"^(?:([A-Za-z][A-Za-z0-9+.\-]*):)?(?://([^/?#]*))?([^?#]*)(?:\?([^#]*))?(?:#(.*))?$"
-)
 
 # exact mirror of the reference's `_is_absolute_iri` regex
 # (jsonld.py:6530) including its quirk: the class `[A-Za-z0-9+-.]` spells
@@ -33,11 +30,6 @@ def is_absolute_iri(value: str) -> bool:
     heavily across a corpus, so the regex result is LRU-cached per worker
     process."""
     return isinstance(value, str) and _abs_iri_match(value)
-
-
-def parse_iri(iri: str):
-    m = _PARTS_RE.match(iri)
-    return m.groups()  # scheme, authority, path, query, fragment
 
 
 def rooted_remove_dot_segments(path: str) -> str:

@@ -54,10 +54,6 @@ def _is_value(v) -> bool:
     return isinstance(v, dict) and "@value" in v
 
 
-def _is_list(v) -> bool:
-    return isinstance(v, dict) and "@list" in v
-
-
 def compare_values(v1, v2) -> bool:
     """JSON-LD equality (reference: jsonld.py:1279-1326): strict primitives
     (bool is not int), value-object tuples, @id equality."""

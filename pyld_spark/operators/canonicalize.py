@@ -1,19 +1,19 @@
-"""Corpus-scale blank-node canonicalization as a DataFrame fixpoint.
+"""Corpus-scale blank-node canonicalization, one route per document.
 
-Re-expresses URDNA2015's control flow (reference:
-/root/reference/lib/pyld/canon.py:21-180) as Spark aggregations
-(SURVEY.md §2.9, §4.2):
+Re-expresses URDNA2015 (reference: pyld's ``canon.py``) over a corpus-wide
+quad table (SURVEY.md §2.9, §4.2). Each document takes exactly one route,
+picked by its quad count:
 
-1. **first-degree hash** = per-bnode ``sha2(concat(sorted masked quads))`` —
-   one explode + one groupBy, fully parallel, whole-stage codegen;
-2. bnodes whose hash is unique *within their document* get canonical labels
-   ``_:c14n{n}`` by first-degree-hash sort order — exactly URDNA2015's simple
-   path (labels are issued in sorted-hash order when every hash is unique);
-3. documents with colliding hashes (automorphic gadgets) fall back to the
-   exact per-document URDNA2015 in a grouped Arrow UDF (``applyInArrow``).
-   Transcript docs reach this module only as fallback docs: a tagged doc
-   whose turn ``@id`` values are non-null and distinct is labeled inside its
-   own row by the compiled projection (:func:`canonicalize_documents`).
+1. **at or under** ``max_exact_quads``: the exact per-document URDNA2015 in
+   a grouped Arrow UDF (``groupBy(doc_id).applyInArrow``);
+2. **over the bound**: distributed WL hash refinement
+   (:func:`_wl_refined_labels`) seeded with each bnode's first-degree hash
+   (:func:`first_degree_hashes`, one explode + one groupBy, whole-stage
+   codegen). It is planned only when such a document exists.
+
+Transcript docs reach this module only as fallback docs: a tagged doc whose
+turn ``@id`` values are non-null and distinct is labeled inside its own row
+by the compiled projection (:func:`canonicalize_documents`).
 
 Everything partitions by ``doc_id``: bnodes are doc-namespaced, so no
 canonicalization component ever spans documents, and the groupBys shuffle on
@@ -126,9 +126,9 @@ def first_degree_hashes(triples: DataFrame) -> DataFrame:
 
 
 def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> DataFrame:
-    """Deterministic WL-style hash refinement for OVERSIZED ambiguous docs.
+    """Deterministic WL-style hash refinement for OVERSIZED docs.
 
-    The exact per-doc URDNA2015 fallback puts a whole document into one
+    The exact per-doc URDNA2015 puts a whole document into one
     ``applyInArrow`` group and, on large automorphic structures (e.g. a
     symmetric cycle of 10^6 bnodes where every first-degree hash collides),
     hash-n-degree explores permutations — unbounded CPU *and* one-executor
@@ -138,16 +138,19 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
     2. ``n_iters`` rounds of ``h' = sha2(h || sorted multiset of
        (direction:predicate:neighbor_h))`` over the bnode↔bnode adjacency
        edges — one join + one agg per round, fully distributed;
-    3. labels by ``row_number`` over ``(h, bnode)`` per doc.
+    3. labels by ``row_number`` over ``(fd_hash, h, bnode)`` per doc.
 
-    For bnodes WL cannot distinguish (true automorphic orbits) the original
-    bnode id breaks the tie — deterministic given deterministic input labels
-    (ours are ``_:b{n}`` in node-map order). Labels on this path are
-    deterministic but NOT URDNA2015-order-identical (URDNA2015 issues labels
-    in its own hash-n-degree processing order). This is the documented
-    degradation the guard buys: bounded memory and polynomial work at 100-TB
-    scale on oversized ambiguous docs, where reference pyld either OOMs or
-    explores permutations without bound and completes neither.
+    Ranking by the first-degree hash first makes a doc whose first-degree
+    hashes are all distinct get exactly URDNA2015's labels (its simple path
+    issues them in sorted-hash order). Where hashes collide, the refined
+    hash orders each collision class, and for bnodes WL cannot distinguish
+    (true automorphic orbits) the original bnode id breaks the tie —
+    deterministic given deterministic input labels (ours are ``_:b{n}`` in
+    node-map order). Those labels are NOT URDNA2015-order-identical
+    (URDNA2015 issues them in its own hash-n-degree processing order). This
+    is the documented degradation the guard buys: bounded memory and
+    polynomial work on oversized ambiguous docs, where reference pyld either
+    OOMs or explores permutations without bound and completes neither.
     """
     # bnode↔bnode adjacency: one row per directed bnode pair per quad
     bsub = F.col("subj").startswith("_:")
@@ -170,7 +173,7 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
     )
     edges = out_e.unionByName(in_e)
 
-    h = fd.select("doc_id", "bnode", F.col("fd_hash").alias("h"))
+    h = fd.select("doc_id", "bnode", "fd_hash", F.col("fd_hash").alias("h"))
     for _ in range(n_iters):
         nbr_h = h.select(
             F.col("doc_id").alias("_nd"), F.col("bnode").alias("_nb"),
@@ -190,12 +193,12 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
         h = (
             h.join(sigs, ["doc_id", "bnode"], "left")
             .withColumn("h", F.sha2(F.concat_ws("#", F.col("h"), F.coalesce(F.col("sig"), F.lit(""))), 256))
-            .select("doc_id", "bnode", "h")
+            .select("doc_id", "bnode", "fd_hash", "h")
         )
         # cut the 6-round lineage so the plan doesn't re-derive every round
         h = cut_lineage(h, eager=False)
 
-    w_rank = Window.partitionBy("doc_id").orderBy("h", "bnode")
+    w_rank = Window.partitionBy("doc_id").orderBy("fd_hash", "h", "bnode")
     return h.withColumn(
         "label",
         F.concat(F.lit("_:c14n"), (F.row_number().over(w_rank) - 1).cast("string")),
@@ -207,19 +210,29 @@ def _doc_partitioned(triples: DataFrame) -> DataFrame:
     whole canonicalization shares.
 
     Every downstream distribution requirement is a superset of
-    ``doc_id`` — ``groupBy(doc_id, bnode)``, the ``(doc_id, fd_hash)``
-    and ``(doc_id)`` windows, ``groupBy(doc_id)`` label maps, and the
-    final relabel equi-join — and ``HashPartitioning(doc_id)`` satisfies
-    a ``ClusteredDistribution`` over any key list containing ``doc_id``,
-    so none of them re-shuffle. Before this, the plan exchanged the
-    exploded masked-quad rows (the fattest intermediate, ~1.5× the quad
-    table with ~300-byte strings) AND the quad table itself for the
-    relabel join; now only the quad table moves, once. The width is the
-    session's (:func:`~pyld_spark.session.repartition_by`) so the label-map
-    side of the relabel join (which re-shuffles after the three-way label
-    union — cheap: one row per bnode, not per quad) lands co-partitioned.
+    ``doc_id`` — the per-doc ``applyInArrow`` groups, ``groupBy(doc_id)``
+    label maps and the final relabel equi-join — and
+    ``HashPartitioning(doc_id)`` satisfies a ``ClusteredDistribution`` over
+    any key list containing ``doc_id``, so none of them re-shuffle. The
+    width is the session's (:func:`~pyld_spark.session.repartition_by`) so
+    the label-map side of the relabel join lands co-partitioned.
     """
     return repartition_by(triples, "doc_id")
+
+
+def _exact_labels(key, table):
+    """URDNA2015 labels of one whole document (one ``applyInArrow`` group)."""
+    import pyarrow as pa
+
+    from pyld_spark.jsonld.canon import URDNA2015
+
+    doc_id = key[0].as_py()
+    mapping = URDNA2015().main(rows_to_quads(table))
+    return pa.Table.from_pylist(
+        [{"doc_id": doc_id, "bnode": old, "label": new}
+         for old, new in mapping.items()],
+        schema=to_arrow_schema(_LABEL_SCHEMA),
+    )
 
 
 def canonical_labels(
@@ -229,74 +242,31 @@ def canonical_labels(
 ) -> DataFrame:
     """(doc_id, bnode) → canonical label ``_:c14nN`` (doc-local numbering).
 
-    Fast path: unique first-degree hashes → row_number over sorted hashes.
-    Slow path (per-doc exact URDNA2015 fallback): only for docs where any
-    hash collides — grouped Arrow UDF over just those docs' quads, guarded
-    by ``max_exact_quads``: ambiguous docs with more quads than the bound
-    never enter the single-group UDF (executor-memory / permutation-blowup
-    hazard) and take the distributed WL-refinement path instead
-    (:func:`_wl_refined_labels`).
+    A doc with at most ``max_exact_quads`` quads gets the exact URDNA2015
+    labels, one ``applyInArrow`` group per doc. A doc over the bound would
+    be one executor's single group (memory, and permutation blowup when its
+    hashes collide), so it takes the distributed WL refinement
+    (:func:`_wl_refined_labels`) instead. Such docs are looked for first, in
+    a job of its own over ``triples``; a corpus without one plans the exact
+    route alone.
 
     ``pre_partitioned=True`` promises the caller already ran
     :func:`_doc_partitioned` (avoids a second exchange of the quad table).
     """
     if not pre_partitioned:
         triples = _doc_partitioned(triples)
-    fd = first_degree_hashes(triples)
-    # materialize the per-bnode hash table once (one small row per bnode):
-    # with the shared doc_id partitioning there is no aggregate exchange
-    # left for ReuseExchange to dedup on, so without this checkpoint every
-    # consumer branch (easy labels, ambiguity probe, doc sizes, fallback
-    # routing) would re-run the masked-quad explode+hash — the most
-    # CPU-expensive part of the stage. The explicit repartition AFTER the
-    # checkpoint is partitioning-metadata repair, not data movement for its
-    # own sake: under AQE the checkpointed plan reports UnknownPartitioning
-    # until executed, so without it every downstream window/groupBy would
-    # re-shuffle fd anyway — this way it happens once, on the small table.
-    fd = repartition_by(cut_lineage(fd, eager=False), "doc_id")
-    w_doc = Window.partitionBy("doc_id", "fd_hash")
-    fd = fd.withColumn("n_same", F.count("*").over(w_doc))
-    ambiguous_docs = fd.filter(F.col("n_same") > 1).select("doc_id").distinct()
-
-    w_rank = Window.partitionBy("doc_id").orderBy("fd_hash")
-    easy = (
-        fd.join(F.broadcast(ambiguous_docs), "doc_id", "left_anti")
-        .withColumn("label", F.concat(F.lit("_:c14n"), (F.row_number().over(w_rank) - 1).cast("string")))
-        .select("doc_id", "bnode", "label")
+    big_docs = cut_lineage(
+        triples.groupBy("doc_id").count()
+        .filter(F.col("count") > max_exact_quads).select("doc_id")
     )
-
-    # giant-document guard: split ambiguous docs by quad count
-    doc_sizes = (
-        triples.join(F.broadcast(ambiguous_docs), "doc_id", "left_semi")
-        .groupBy("doc_id").agg(F.count("*").alias("_nq"))
+    if big_docs.isEmpty():
+        return triples.groupBy("doc_id").applyInArrow(_exact_labels, _LABEL_SCHEMA)
+    big = triples.join(F.broadcast(big_docs), "doc_id", "left_semi")
+    return (
+        triples.join(F.broadcast(big_docs), "doc_id", "left_anti")
+        .groupBy("doc_id").applyInArrow(_exact_labels, _LABEL_SCHEMA)
+        .unionByName(_wl_refined_labels(big, first_degree_hashes(big)))
     )
-    small_docs = doc_sizes.filter(F.col("_nq") <= max_exact_quads).select("doc_id")
-    big_docs = doc_sizes.filter(F.col("_nq") > max_exact_quads).select("doc_id")
-
-    hard_triples = triples.join(F.broadcast(small_docs), "doc_id", "left_semi")
-
-    label_arrow = to_arrow_schema(_LABEL_SCHEMA)
-
-    def exact(key, table):
-        import pyarrow as pa
-
-        from pyld_spark.jsonld.canon import URDNA2015
-
-        doc_id = key[0].as_py()
-        mapping = URDNA2015().main(rows_to_quads(table))
-        return pa.Table.from_pylist(
-            [{"doc_id": doc_id, "bnode": old, "label": new}
-             for old, new in mapping.items()],
-            schema=label_arrow,
-        )
-
-    # applyInArrow guarantees each UDF call sees one whole document
-    hard = hard_triples.groupBy("doc_id").applyInArrow(exact, _LABEL_SCHEMA)
-    oversized = _wl_refined_labels(
-        triples.join(F.broadcast(big_docs), "doc_id", "left_semi"),
-        fd.join(F.broadcast(big_docs), "doc_id", "left_semi"),
-    )
-    return easy.unionByName(hard).unionByName(oversized)
 
 
 def canonicalize_triples(triples: DataFrame, max_exact_quads: int = 100_000,

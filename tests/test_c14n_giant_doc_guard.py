@@ -92,8 +92,8 @@ def test_small_ambiguous_docs_still_exact(spark):
 
 
 def _path_triples(spark, n, doc_id="easy"):
-    """n-quad bnode PATH _:b0 → … → _:bn (asymmetric: every fd hash is
-    unique, so the doc rides the relational fast path)."""
+    """n-quad bnode PATH _:b0 → … → _:bn. Not automorphic, but its interior
+    nodes share one first-degree hash, so URDNA2015 needs hash-n-degree."""
     return (
         spark.range(n)
         .select(
@@ -109,26 +109,56 @@ def _path_triples(spark, n, doc_id="easy"):
     )
 
 
+def _anchored_path_quads(n):
+    """:func:`_path_triples` plus one distinct IRI object per path node, so
+    every first-degree hash is distinct (2n quads, as URDNA2015 input)."""
+    def bnode(i):
+        return {"type": "blank node", "value": f"_:b{i}"}
+
+    pred = {"type": "IRI", "value": PRED}
+    quads = [(bnode(i), pred, bnode(i + 1), "@default") for i in range(n)]
+    quads += [(bnode(i), pred, {"type": "IRI", "value": f"http://example.org/o{i}"},
+               "@default") for i in range(n)]
+    return quads
+
+
 def test_guard_split_keeps_all_docs(spark):
-    """Easy + small-ambiguous + big-ambiguous docs in ONE table: all three
-    routing branches (row_number fast path, exact applyInPandas fallback,
-    WL refinement) are simultaneously non-empty in a single
-    canonicalize_triples plan, and every doc comes out fully labeled."""
+    """Small docs (exact per-doc URDNA2015) and big docs (WL refinement) in
+    ONE table: both routes are non-empty in a single canonicalize_triples
+    plan, and every doc comes out fully labeled. The big doc whose
+    first-degree hashes are all distinct gets URDNA2015's labels."""
+    from pyld_spark.jsonld.canon import URDNA2015
+
+    quads = _anchored_path_quads(60)
+    distinct = spark.createDataFrame(
+        [("distinct", s["value"], p["value"], o["type"], o["value"], None, None, g)
+         for s, p, o, g in quads],
+        _cycle_triples(spark, 1).schema,
+    )
     t = (
         _cycle_triples(spark, 4, doc_id="small")
         .unionByName(_cycle_triples(spark, 2_000, doc_id="big"))
         .unionByName(_path_triples(spark, 5, doc_id="easy"))
+        .unionByName(distinct)
     )
-    out = canonicalize_triples_counts(t)
-    # path doc: 5 quads → subjects _:b0.._:b4 (b5 is object-only)
-    assert out == {"small": 4, "big": 2_000, "easy": 5}
-
-
-def canonicalize_triples_counts(t):
-    # bound of 100: "small" (4 quads) stays exact, "big" (2000) routes to WL
-    relabeled = canonicalize_triples(t, max_exact_quads=100)
+    # bound of 100: "small" (4 quads) and "easy" (5) stay exact, "big"
+    # (2000) and "distinct" (120) route to WL
+    relabeled = canonicalize_triples(t, max_exact_quads=100).cache()
     rows = (
         relabeled.filter(F.col("subj").startswith("_:d"))
         .groupBy("doc_id").agg(F.count_distinct("subj").alias("n")).collect()
     )
-    return {r["doc_id"]: r["n"] for r in rows}
+    # path docs: n quads → subjects _:b0.._:b{n-1} (_:bn is object-only)
+    assert {r["doc_id"]: r["n"] for r in rows} == {
+        "small": 4, "big": 2_000, "easy": 5, "distinct": 60}
+
+    def local(v):  # _:d{doc hash}_c14nN → _:c14nN
+        return "_:" + v.split("_", 2)[2] if v.startswith("_:d") else v
+
+    got = {
+        (local(r["subj"]), local(r["obj_value"]))
+        for r in relabeled.filter(F.col("doc_id") == "distinct").collect()
+    }
+    mapping = URDNA2015().main(quads)
+    assert got == {(mapping[s["value"]], mapping.get(o["value"], o["value"]))
+                   for s, _, o, _ in quads}

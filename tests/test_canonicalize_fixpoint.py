@@ -1,6 +1,7 @@
-"""Corpus-scale canonicalization (DataFrame fixpoint) vs exact per-doc
-URDNA2015: the relational fast path and the applyInPandas fallback must
-together reproduce the reference labels for every document."""
+"""Corpus-scale canonicalization vs exact per-doc URDNA2015: both label
+routes of canonical_labels (per-doc exact URDNA2015 under
+``max_exact_quads``, WL refinement above it) must reproduce the reference
+labels on transcript documents, whose first-degree hashes are distinct."""
 
 from __future__ import annotations
 
@@ -24,19 +25,19 @@ def _ref_canonical_mapping(doc):
     return URDNA2015().main(quads)
 
 
-def test_fast_path_matches_exact_on_transcripts(spark, sf_dir):
+def _check_transcript_labels(spark, sf_dir, max_exact_quads):
+    import hashlib
+
     docs = assemble_documents(transcripts_from_events(spark, sf_dir)).limit(10).cache()
     triples, _ = split_quarantine(docs_to_triples(docs))
     labels = {
-        (r.doc_id, r.bnode): r.label for r in canonical_labels(triples).collect()
+        (r.doc_id, r.bnode): r.label
+        for r in canonical_labels(triples, max_exact_quads=max_exact_quads).collect()
     }
     assert labels
     for row in docs.collect():
-        ns = None
         mapping = _ref_canonical_mapping(json.loads(row.doc))
         # bnodes in the spark table are namespaced _:dHASH_bN
-        import hashlib
-
         ns = "_:d" + hashlib.sha256(row.conv_id.encode()).hexdigest()[:16] + "_"
         for old, new in mapping.items():
             spark_bnode = ns + old[2:]
@@ -45,10 +46,21 @@ def test_fast_path_matches_exact_on_transcripts(spark, sf_dir):
             )
 
 
+def test_fast_path_matches_exact_on_transcripts(spark, sf_dir):
+    """Default bound: every doc takes the exact per-doc route."""
+    _check_transcript_labels(spark, sf_dir, max_exact_quads=100_000)
+
+
+def test_wl_route_matches_exact_on_transcripts(spark, sf_dir):
+    """Every doc over a bound of 0: the WL route ranks by first-degree hash
+    first, so on these distinct-hash docs it issues URDNA2015's labels."""
+    _check_transcript_labels(spark, sf_dir, max_exact_quads=0)
+
+
 @requires_reference
 def test_fallback_path_on_symmetric_gadgets(spark):
-    """Docs with colliding first-degree hashes exercise the exact
-    applyInPandas fallback; a unique-hash doc rides the fast path. Both must
+    """Docs with colliding first-degree hashes exercise hash-n-degree in the
+    exact per-doc route; a unique-hash doc takes its simple path. Both must
     match the reference."""
     ref = get_reference_jsonld()
     gadget_docs = {

@@ -29,14 +29,14 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "pyld_spark"
 EDGES = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "f"), ("f", "g")]
 
 DOCS = {
-    # distinct first-degree hashes: fast path only
+    # distinct first-degree hashes: URDNA2015's simple path on either route
     "chain": {
         "@context": {"@vocab": "http://v/"},
         "@id": "http://x/1",
         "knows": {"name": "a", "knows": {"name": "b"}},
     },
-    # colliding first-degree hashes: exact fallback, or WL refinement when
-    # the doc is over max_exact_quads
+    # colliding first-degree hashes: hash-n-degree in the exact route, or
+    # WL refinement when the doc is over max_exact_quads
     "sym-pair": {
         "@context": {"@vocab": "http://v/"},
         "@graph": [

@@ -6,11 +6,12 @@ scaling probe).
 
 Times, each from cold parquet scan to count():
   A. fd-hash aggregation alone                (first_degree_hashes)
-  B. labels (fd + windows + fallback routing) (canonical_labels)
+  B. labels (size probe + per-doc URDNA2015)  (canonical_labels)
   C. full relabel join                        (canonicalize_triples)
 
-B-A isolates the window/ambiguity routing; C-B isolates the fat-table
-relabel join. Run AFTER any benchmark finishes (never concurrently):
+A times the fd hashes alone (B plans them only for a doc over
+``max_exact_quads``); C-B isolates the fat-table relabel join. Run AFTER
+any benchmark finishes (never concurrently):
 
     python tools/profile_canonicalize.py [n_convs] [turns] [cores_max]
 """
