@@ -18,27 +18,73 @@ against a catalog; same layout, same resume logic via snapshot existence).
 Resume: a stage whose output already exists (with ``_SUCCESS``) is skipped —
 re-running the job after a failure re-executes only missing stages.
 
-Lineage: every stage appends ``(run_id, stage, rows_out, error_rows, wall_ms)``
-to ``workdir/lineage`` — the per-partition row counts live in the stage
-outputs themselves (``doc_id`` is the partition witness).
+Lineage: every stage a run builds records ``(run_id, stage, rows_out,
+error_rows, wall_ms)``, and :meth:`Pipeline.run` / :meth:`Pipeline.run_incremental`
+append a run's rows to ``workdir/lineage`` as one parquet file when the run
+returns or raises, so a failed run still records the stages it finished.
+``rows_out`` and ``error_rows`` are counted by the write that produces the
+stage table and its quarantine table (an ``Observation``), not by reading them
+back; ``wall_ms`` covers building and writing the stage. The per-partition
+row counts live in the stage outputs themselves (``doc_id`` is the partition
+witness).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pyld_spark.session import cut_lineage, ensure_workers_can_import
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter that the action writing it fills in."""
+    seen = Observation()
+    return df.observe(seen, F.count(F.lit(1)).alias("rows")), seen
+
+
+def _write(df: DataFrame, path: str, mode: str) -> int:
+    """Write ``df`` as parquet to ``path``; returns the rows written."""
+    counted, seen = _counted(df)
+    counted.write.mode(mode).parquet(path)
+    return seen.get["rows"]
+
+
+def _writes_lineage(run):
+    """Append the lineage rows ``run`` recorded, once, when it returns or
+    raises. When a failed run's lineage write fails too, the stage's error
+    is the one raised, with the lineage error added as a note."""
+
+    @functools.wraps(run)
+    def wrapper(self, *args, **kwargs):
+        try:
+            out = run(self, *args, **kwargs)
+        except BaseException as err:
+            try:
+                self._write_lineage()
+            except Exception as lineage_err:
+                err.add_note(f"lineage not written: {lineage_err!r}")
+            raise
+        self._write_lineage()
+        return out
+
+    return wrapper
+
+
 class Pipeline:
+    LINEAGE_DDL = (
+        "run_id string, stage string, rows_out long, error_rows long, wall_ms long"
+    )
+
     def __init__(self, spark: SparkSession, workdir: str, run_id: str = "run"):
         self.spark = spark
         self.workdir = workdir
         self.run_id = run_id
+        self._lineage: list[tuple] = []
         ensure_workers_can_import(spark)
 
     # -- checkpoint plumbing ------------------------------------------------
@@ -52,32 +98,33 @@ class Pipeline:
     def _read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._path(stage))
 
-    def _write_lineage(self, stage: str, rows_out: int, error_rows: int, wall_ms: int):
-        df = self.spark.createDataFrame(
-            [(self.run_id, stage, rows_out, error_rows, wall_ms)],
-            "run_id string, stage string, rows_out long, error_rows long, wall_ms long",
-        )
-        df.write.mode("append").parquet(os.path.join(self.workdir, "lineage"))
+    def _record_lineage(self, stage: str, rows_out: int, error_rows: int, t0: float):
+        wall_ms = int((time.perf_counter() - t0) * 1000)
+        self._lineage.append((self.run_id, stage, rows_out, error_rows, wall_ms))
+
+    def _write_lineage(self):
+        rows, self._lineage = self._lineage, []
+        if rows:
+            self.spark.createDataFrame(rows, self.LINEAGE_DDL).coalesce(1).write.mode(
+                "append"
+            ).parquet(os.path.join(self.workdir, "lineage"))
 
     def _stage(self, name: str, build, error_split=None) -> DataFrame:
         """Run one stage with resume + lineage. ``build()`` returns the stage
-        DataFrame; ``error_split`` optionally splits (good, quarantine)."""
+        DataFrame; ``error_split`` optionally splits (good, quarantine).
+        The lineage row's ``rows_out`` and ``error_rows`` are the rows the two
+        writes wrote; ``wall_ms`` spans ``build()`` and both writes."""
         if self._done(name):
             return self._read(name)
         t0 = time.perf_counter()
         df = build()
         err_rows = 0
         if error_split is not None:
-            good, bad = error_split(df)
-            bad.write.mode("overwrite").parquet(self._path(name + "_quarantine"))
-            err_rows = self.spark.read.parquet(self._path(name + "_quarantine")).count()
-            df = good
-        df.write.mode("overwrite").parquet(self._path(name))
-        out = self._read(name)
-        self._write_lineage(
-            name, out.count(), err_rows, int((time.perf_counter() - t0) * 1000)
-        )
-        return out
+            df, bad = error_split(df)
+            err_rows = _write(bad, self._path(name + "_quarantine"), "overwrite")
+        rows = _write(df, self._path(name), "overwrite")
+        self._record_lineage(name, rows, err_rows, t0)
+        return self._read(name)
 
     # -- stages -------------------------------------------------------------
 
@@ -104,14 +151,14 @@ class Pipeline:
         from pyld_spark.transcripts import write_bucketed_transcripts
 
         t0 = time.perf_counter()
+        counted, seen = _counted(transcripts)
         out = write_bucketed_transcripts(
-            transcripts, self.spark, path, table=table, buckets=buckets
+            counted, self.spark, path, table=table, buckets=buckets
         )
-        self._write_lineage(
-            stage, out.count(), 0, int((time.perf_counter() - t0) * 1000)
-        )
+        self._record_lineage(stage, seen.get["rows"], 0, t0)
         return out
 
+    @_writes_lineage
     def run(self, transcripts: DataFrame, bucket_input: bool = False,
             buckets: int = 64, fuse_assembly: bool = False) -> dict[str, DataFrame]:
         """``fuse_assembly=True`` runs assembly INSIDE the triples stage
@@ -193,7 +240,9 @@ class Pipeline:
         """Append ``build()`` rows to an existing stage output; returns rows
         appended. Idempotent per stage: ``new_ids`` is diffed against the ids
         ALREADY in the stage output, so a crashed incremental run re-executes
-        only the stages that did not append yet."""
+        only the stages that did not append yet. The ``<name>+delta`` lineage
+        row's ``rows_out`` and ``error_rows`` are the rows the two appends
+        wrote (rows, not ids); no row is recorded when no id is new."""
         t0 = time.perf_counter()
         existing = self._read(name).select(F.col(id_col)).distinct()
         if error_split is not None:
@@ -209,17 +258,15 @@ class Pipeline:
         if todo.isEmpty():
             return 0
         df = build(todo)
+        err_rows = 0
         if error_split is not None:
-            good, bad = error_split(df)
-            bad.write.mode("append").parquet(self._path(name + "_quarantine"))
-            df = good
-        df.write.mode("append").parquet(self._path(name))
-        n = todo.count()
-        self._write_lineage(
-            name + "+delta", n, 0, int((time.perf_counter() - t0) * 1000)
-        )
-        return n
+            df, bad = error_split(df)
+            err_rows = _write(bad, self._path(name + "_quarantine"), "append")
+        rows = _write(df, self._path(name), "append")
+        self._record_lineage(name + "+delta", rows, err_rows, t0)
+        return rows
 
+    @_writes_lineage
     def run_incremental(self, transcripts: DataFrame) -> dict[str, DataFrame]:
         """Process ONLY conversations not yet in the pipeline outputs and
         append them; aggregate stages (entities) are re-derived from the

@@ -29,7 +29,8 @@ def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path, odd_convs):
     # 1) initial corpus → full run
     inc_wd = str(tmp_path / "inc")
     p = Pipeline(spark, inc_wd, run_id="base")
-    p.run(t_old)
+    out_old = p.run(t_old)
+    rows_old = {s: out_old[s].count() for s in STAGES}
 
     # 2) corpus grows → incremental run over the FULL input
     p2 = Pipeline(spark, inc_wd, run_id="delta")
@@ -55,6 +56,14 @@ def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path, odd_convs):
         r.stage for r in p2.lineage().collect() if r.run_id == "delta"
     }
     assert "assemble+delta" in delta_rows and "triples+delta" in delta_rows
+
+    # a +delta row counts the rows its stage appended, not the new ids
+    delta = {r.stage: r for r in p2.lineage().collect() if r.run_id == "delta"}
+    for stage in ("assemble", "link", "triples", "canonicalize", "materialize"):
+        appended = before[stage] - rows_old[stage]
+        assert delta[stage + "+delta"].rows_out == appended, stage
+        assert delta[stage + "+delta"].error_rows == 0, stage
+    assert delta["triples+delta"].rows_out > len(convs) - len(half)
 
 
 def test_incremental_on_empty_workdir_is_full_run(spark, sf_dir, tmp_path):
