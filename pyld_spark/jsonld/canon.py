@@ -179,6 +179,22 @@ class URDNA2015:
             yield graph, "g"
 
     def hash_n_degree(self, identifier: str, issuer: IdentifierIssuer) -> _NDegreeResult:
+        """Hash N-Degree Quads. It recurses once per node of a chain of
+        colliding blank nodes, so its calls run as :meth:`_hash_n_degree_steps`
+        generators on an explicit stack, not on the Python stack: each yields
+        ``(related, issuer)`` to recurse and is sent back that call's result."""
+        stack, result = [self._hash_n_degree_steps(identifier, issuer)], None
+        while True:
+            try:
+                stack.append(self._hash_n_degree_steps(*stack[-1].send(result)))
+                result = None
+            except StopIteration as done:
+                stack.pop()
+                if not stack:
+                    return done.value
+                result = done.value
+
+    def _hash_n_degree_steps(self, identifier: str, issuer: IdentifierIssuer):
         hash_to_related: dict[str, list] = {}
         for quad in self.bnode_to_quads[identifier]:
             for related, position in self._related_bnodes(identifier, quad):
@@ -208,7 +224,7 @@ class URDNA2015:
                 if skip:
                     continue
                 for related in recursion_list:
-                    result = self.hash_n_degree(related, issuer_copy)
+                    result = yield related, issuer_copy
                     path += issuer_copy.get_id(related)
                     path += "<" + result.hash + ">"
                     issuer_copy = result.issuer

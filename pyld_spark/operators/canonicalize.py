@@ -5,56 +5,58 @@ quad table (SURVEY.md §2.9, §4.2). Each document takes exactly one route,
 picked by its quad count:
 
 1. **at or under** ``max_exact_quads``: the exact per-document URDNA2015 in
-   a grouped Arrow UDF (``groupBy(doc_id).applyInArrow``);
+   a grouped Arrow UDF (``groupBy(doc_id).applyInArrow``), which for
+   :func:`canonicalize_triples` also relabels the doc's rows;
 2. **over the bound**: distributed WL hash refinement
    (:func:`_wl_refined_labels`) seeded with each bnode's first-degree hash
    (:func:`first_degree_hashes`, one explode + one groupBy, whole-stage
-   codegen). It is planned only when such a document exists.
+   codegen), relabeled by equi-joins on ``(doc_id, bnode)``. It is planned
+   only when such a document exists.
 
 Transcript docs reach this module only as fallback docs: a tagged doc whose
 turn ``@id`` values are non-null and distinct is labeled inside its own row
 by the compiled projection (:func:`canonicalize_documents`).
 
-Everything partitions by ``doc_id``: bnodes are doc-namespaced, so no
-canonicalization component ever spans documents, and the groupBys shuffle on
-the same key the triples table is already clustered by.
+Bnodes are doc-namespaced, so no canonicalization component ever spans
+documents: the exact route needs only the doc's own rows, in one Python task
+per slot (:func:`~pyld_spark.session.repartition_per_slot`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StringType, StructField, StructType
 
-from pyld_spark.operators.doc_runner import rows_to_quads
-from pyld_spark.session import cut_lineage, repartition_by
+from pyld_spark.operators.doc_runner import doc_bnode_namespace, rows_to_quads
+from pyld_spark.session import cut_lineage, repartition_per_slot
 
-_LABEL_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("bnode", StringType(), False),
-        StructField("label", StringType(), False),
-    ]
-)
+_LABEL_SCHEMA = "doc_id string not null, bnode string not null, label string not null"
+
+
+def _bnode_positions():
+    """``(column, condition)`` for each position of a triple row that can
+    hold a blank node, the condition being true when it does."""
+    return (
+        ("subj", F.col("subj").startswith("_:")),
+        ("obj_value", F.col("obj_kind") == "blank node"),
+        ("graph", F.col("graph").startswith("_:")),
+    )
 
 
 def _masked_quad_expr(self_col):
     """Serialized N-Quad with `self` bnode → _:a, other bnodes → _:z —
     the first-degree-hash masking, as a pure column expression."""
 
-    def mask(kind_col, value_col):
+    def mask(col, is_bnode):
         return (
-            F.when(kind_col == "blank node",
-                   F.when(value_col == self_col, F.lit("_:a")).otherwise(F.lit("_:z")))
-            .otherwise(F.concat(F.lit("<"), value_col, F.lit(">")))
+            F.when(is_bnode, F.when(F.col(col) == self_col, F.lit("_:a")).otherwise(F.lit("_:z")))
+            .otherwise(F.concat(F.lit("<"), F.col(col), F.lit(">")))
         )
 
-    subj = F.when(F.col("subj").startswith("_:"),
-                  F.when(F.col("subj") == self_col, F.lit("_:a")).otherwise(F.lit("_:z"))
-                  ).otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">")))
+    is_bnode = dict(_bnode_positions())
+    subj = mask("subj", is_bnode["subj"])
     pred = F.concat(F.lit("<"), F.col("pred"), F.lit(">"))
-    obj = mask(F.col("obj_kind"), F.col("obj_value"))
+    obj = mask("obj_value", is_bnode["obj_value"])
     # literal objects: canonical N-Quads literal form
     xsd_string = "http://www.w3.org/2001/XMLSchema#string"
     langstring = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -101,13 +103,7 @@ def _bnode_quad_index(triples: DataFrame) -> DataFrame:
     sorted-hash label order (caught by the random-graph differential
     fuzz, tests/test_canonicalize_random_graphs.py — transcript and
     gadget corpora never exercise multi-position bnodes)."""
-    bnodes = F.array_compact(
-        F.array(
-            F.when(F.col("subj").startswith("_:"), F.col("subj")),
-            F.when((F.col("obj_kind") == "blank node"), F.col("obj_value")),
-            F.when(F.col("graph").startswith("_:"), F.col("graph")),
-        )
-    )
+    bnodes = F.array_compact(F.array(*(F.when(b, F.col(c)) for c, b in _bnode_positions())))
     return triples.withColumn("bnode", F.explode(bnodes))
 
 
@@ -125,7 +121,7 @@ def first_degree_hashes(triples: DataFrame) -> DataFrame:
     )
 
 
-def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> DataFrame:
+def _wl_refined_labels(triples: DataFrame, n_iters: int = 6) -> DataFrame:
     """Deterministic WL-style hash refinement for OVERSIZED docs.
 
     The exact per-doc URDNA2015 puts a whole document into one
@@ -153,27 +149,18 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
     OOMs or explores permutations without bound and completes neither.
     """
     # bnode↔bnode adjacency: one row per directed bnode pair per quad
-    bsub = F.col("subj").startswith("_:")
-    bobj = F.col("obj_kind") == "blank node"
-    pairs = triples.select(
-        "doc_id", "subj", "pred", "obj_value",
-        bsub.alias("_bs"), bobj.alias("_bo"),
-    )
-    out_e = (
-        pairs.filter(F.col("_bs") & F.col("_bo"))
-        .select("doc_id", F.col("subj").alias("bnode"),
-                F.concat(F.lit("o:"), F.col("pred")).alias("edge"),
-                F.col("obj_value").alias("nbr"))
-    )
-    in_e = (
-        pairs.filter(F.col("_bs") & F.col("_bo"))
-        .select("doc_id", F.col("obj_value").alias("bnode"),
-                F.concat(F.lit("i:"), F.col("pred")).alias("edge"),
-                F.col("subj").alias("nbr"))
-    )
+    is_bnode = dict(_bnode_positions())
+    pairs = triples.filter(is_bnode["subj"] & is_bnode["obj_value"])
+    out_e = pairs.select("doc_id", F.col("subj").alias("bnode"),
+                         F.concat(F.lit("o:"), F.col("pred")).alias("edge"),
+                         F.col("obj_value").alias("nbr"))
+    in_e = pairs.select("doc_id", F.col("obj_value").alias("bnode"),
+                        F.concat(F.lit("i:"), F.col("pred")).alias("edge"),
+                        F.col("subj").alias("nbr"))
     edges = out_e.unionByName(in_e)
 
-    h = fd.select("doc_id", "bnode", "fd_hash", F.col("fd_hash").alias("h"))
+    h = first_degree_hashes(triples).select(
+        "doc_id", "bnode", "fd_hash", F.col("fd_hash").alias("h"))
     for _ in range(n_iters):
         nbr_h = h.select(
             F.col("doc_id").alias("_nd"), F.col("bnode").alias("_nb"),
@@ -205,119 +192,102 @@ def _wl_refined_labels(triples: DataFrame, fd: DataFrame, n_iters: int = 6) -> D
     ).select("doc_id", "bnode", "label")
 
 
-def _doc_partitioned(triples: DataFrame) -> DataFrame:
-    """Hash-partition the quad table by ``doc_id`` — the ONE exchange the
-    whole canonicalization shares.
+def _urdna2015(table) -> dict:
+    """URDNA2015 ``{bnode: "_:c14nN"}`` of one whole document's triple rows
+    (an Arrow table): the one call of the algorithm in this module."""
+    from pyld_spark.jsonld.canon import URDNA2015
 
-    Every downstream distribution requirement is a superset of
-    ``doc_id`` — the per-doc ``applyInArrow`` groups, ``groupBy(doc_id)``
-    label maps and the final relabel equi-join — and
-    ``HashPartitioning(doc_id)`` satisfies a ``ClusteredDistribution`` over
-    any key list containing ``doc_id``, so none of them re-shuffle. The
-    width is the session's (:func:`~pyld_spark.session.repartition_by`) so
-    the label-map side of the relabel join lands co-partitioned.
-    """
-    return repartition_by(triples, "doc_id")
+    return URDNA2015().main(rows_to_quads(table))
 
 
 def _exact_labels(key, table):
-    """URDNA2015 labels of one whole document (one ``applyInArrow`` group)."""
+    """One document's label rows (one ``applyInArrow`` group)."""
     import pyarrow as pa
 
-    from pyld_spark.jsonld.canon import URDNA2015
-
-    doc_id = key[0].as_py()
-    mapping = URDNA2015().main(rows_to_quads(table))
-    return pa.Table.from_pylist(
-        [{"doc_id": doc_id, "bnode": old, "label": new}
-         for old, new in mapping.items()],
-        schema=to_arrow_schema(_LABEL_SCHEMA),
-    )
+    labels = _urdna2015(table)
+    columns = ([key[0].as_py()] * len(labels), list(labels), list(labels.values()))
+    return pa.table([pa.array(c, pa.string()) for c in columns],
+                    names=["doc_id", "bnode", "label"])
 
 
-def canonical_labels(
-    triples: DataFrame,
-    max_exact_quads: int = 100_000,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """(doc_id, bnode) → canonical label ``_:c14nN`` (doc-local numbering).
+def _exact_relabeled(key, table):
+    """One document's own rows (one ``applyInArrow`` group), every blank
+    node relabeled ``{doc namespace}_c14nN`` by one dict lookup."""
+    import pyarrow as pa
 
-    A doc with at most ``max_exact_quads`` quads gets the exact URDNA2015
-    labels, one ``applyInArrow`` group per doc. A doc over the bound would
-    be one executor's single group (memory, and permutation blowup when its
-    hashes collide), so it takes the distributed WL refinement
-    (:func:`_wl_refined_labels`) instead. Such docs are looked for first, in
-    a job of its own over ``triples``; a corpus without one plans the exact
-    route alone.
+    ns = doc_bnode_namespace(key[0].as_py()) + "_"
+    relabel = {old: ns + new[2:] for old, new in _urdna2015(table).items()}
+    kinds = table.column("obj_kind").to_pylist()
+    for name in ("subj", "obj_value", "graph"):
+        values = table.column(name).to_pylist()
+        flags = ([k == "blank node" for k in kinds] if name == "obj_value"
+                 else [v is not None and v.startswith("_:") for v in values])
+        i = table.schema.get_field_index(name)
+        table = table.set_column(i, table.field(i), pa.array(
+            [relabel.get(v, v) if b else v for v, b in zip(values, flags)], table.field(i).type))
+    return table
 
-    ``pre_partitioned=True`` promises the caller already ran
-    :func:`_doc_partitioned` (avoids a second exchange of the quad table).
-    """
-    if not pre_partitioned:
-        triples = _doc_partitioned(triples)
+
+def _relabeled_by_join(triples: DataFrame, labels: DataFrame) -> DataFrame:
+    """``triples`` relabeled from ``(doc_id, bnode, label)`` rows as
+    :func:`_exact_relabeled` does: one left equi-join on ``(doc_id, bnode)``
+    per blank-node position."""
+    side = cut_lineage(labels.select(
+        F.col("doc_id").alias("_d"), F.col("bnode").alias("_b"),
+        F.concat(F.lit("_:d"), F.substring(F.sha2(F.col("doc_id"), 256), 1, 16),
+                 F.lit("_"), F.substring(F.col("label"), 3, 1000)).alias("_g"),
+    ))
+    for col, is_bnode in _bnode_positions():
+        triples = (
+            triples.join(side, (F.col("doc_id") == F.col("_d")) & (F.col(col) == F.col("_b"))
+                         & is_bnode, "left")
+            .withColumn(col, F.coalesce(F.col("_g"), F.col(col)))
+            .drop("_d", "_b", "_g")
+        )
+    return triples
+
+
+def _by_route(triples: DataFrame, max_exact_quads: int, exact, schema, wl) -> DataFrame:
+    """``applyInArrow(exact, schema)`` per doc of at most ``max_exact_quads``
+    quads, one Python task per slot; ``wl`` over the rest, planned only when
+    a first job over ``triples`` finds such a doc."""
+
+    def per_doc(t):
+        return repartition_per_slot(t, "doc_id").groupBy("doc_id").applyInArrow(exact, schema)
+
     big_docs = cut_lineage(
         triples.groupBy("doc_id").count()
         .filter(F.col("count") > max_exact_quads).select("doc_id")
     )
     if big_docs.isEmpty():
-        return triples.groupBy("doc_id").applyInArrow(_exact_labels, _LABEL_SCHEMA)
-    big = triples.join(F.broadcast(big_docs), "doc_id", "left_semi")
-    return (
-        triples.join(F.broadcast(big_docs), "doc_id", "left_anti")
-        .groupBy("doc_id").applyInArrow(_exact_labels, _LABEL_SCHEMA)
-        .unionByName(_wl_refined_labels(big, first_degree_hashes(big)))
-    )
+        return per_doc(triples)
+    return per_doc(triples.join(F.broadcast(big_docs), "doc_id", "left_anti")).unionByName(
+        wl(triples.join(F.broadcast(big_docs), "doc_id", "left_semi")))
 
 
-def canonicalize_triples(triples: DataFrame, max_exact_quads: int = 100_000,
-                         input_partitioned: bool = False) -> DataFrame:
+def canonical_labels(triples: DataFrame, max_exact_quads: int = 100_000) -> DataFrame:
+    """(doc_id, bnode) → canonical label ``_:c14nN`` (doc-local numbering).
+
+    A doc with at most ``max_exact_quads`` quads gets the exact URDNA2015
+    labels. A doc over the bound would be one executor's single group
+    (memory, and permutation blowup when its hashes collide), so it takes
+    the distributed WL refinement (:func:`_wl_refined_labels`) instead."""
+    return _by_route(triples, max_exact_quads, _exact_labels, _LABEL_SCHEMA,
+                     _wl_refined_labels)
+
+
+def canonicalize_triples(triples: DataFrame, max_exact_quads: int = 100_000) -> DataFrame:
     """Relabel every blank node in the triples table with its canonical
-    per-document label (prefixed with the doc namespace for corpus-global
-    uniqueness).
+    per-document label, prefixed with the doc namespace for corpus-global
+    uniqueness. The output schema is the input schema.
 
-    Single shuffle join: the per-document label mappings are collected into
-    one small map per doc_id and joined once on doc_id (all three bnode
-    positions relabel via ``element_at`` on that map). The quad table is
-    exchanged exactly once (:func:`_doc_partitioned`) and that partitioning
-    feeds BOTH the label computation and the left side of the relabel
-    join.
-
-    ``input_partitioned=True``: the caller promises the input is ALREADY
-    hash-partitioned by ``doc_id`` (a bucketed triples table — the
-    production Iceberg layout where the triples stage writes bucketed by
-    doc_id). The explicit repartition is skipped and every downstream
-    doc_id-clustered requirement is satisfied straight off the scan —
-    the stage's only full-corpus exchange disappears (round-5 verdict
-    item 3: canonicalize is the N→4N laggard, and its cross-executor
-    shuffle is the scaling tax)."""
-    if not input_partitioned:
-        triples = _doc_partitioned(triples)
-    labels = canonical_labels(
-        triples, max_exact_quads=max_exact_quads, pre_partitioned=True
-    ).withColumn(
-        "global_label",
-        F.concat(F.lit("_:d"), F.substring(F.sha2(F.col("doc_id"), 256), 1, 16),
-                 F.lit("_"), F.substring(F.col("label"), 3, 1000)),
-    )
-    label_maps = labels.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("bnode"), F.col("global_label")))
-        ).alias("_lmap")
-    )
-
-    t = triples.join(label_maps, "doc_id", "left")
-
-    def relabel(col, is_bnode):
-        return F.when(
-            is_bnode & F.col("_lmap").isNotNull(),
-            F.coalesce(F.element_at(F.col("_lmap"), F.col(col)), F.col(col)),
-        ).otherwise(F.col(col))
-
-    return (
-        t.withColumn("subj", relabel("subj", F.col("subj").startswith("_:")))
-        .withColumn("obj_value", relabel("obj_value", F.col("obj_kind") == "blank node"))
-        .withColumn("graph", relabel("graph", F.col("graph").startswith("_:")))
-        .drop("_lmap")
+    The exact route relabels inside the document's own group, so its plan
+    is one exchange of the quad rows, on ``doc_id``, and no join. A doc over
+    ``max_exact_quads`` takes the WL route, relabeled by equi-joins on
+    ``(doc_id, bnode)``."""
+    return _by_route(
+        triples, max_exact_quads, _exact_relabeled, triples.schema,
+        lambda big: _relabeled_by_join(big, _wl_refined_labels(big)),
     )
 
 

@@ -141,15 +141,13 @@ def doc_bnode_namespace(doc_id: str) -> str:
     return "_:d" + hashlib.sha256(doc_id.encode("utf-8")).hexdigest()[:16]
 
 
-def quads_to_rows(quads: list, ns: str | None) -> list:
-    """Quads → ``TRIPLE_COLUMNS`` rows. With a namespace ``ns``, every
-    doc-local blank node ``_:x`` becomes ``{ns}_x`` so the corpus-global
-    triples table needs no global counter."""
+def quads_to_rows(quads: list, ns: str) -> list:
+    """Quads → ``TRIPLE_COLUMNS`` rows. Every doc-local blank node ``_:x``
+    becomes ``{ns}_x`` (``ns`` is :func:`doc_bnode_namespace`) so the
+    corpus-global triples table needs no global counter."""
 
     def fix(v: str) -> str:
-        if ns is not None and v.startswith("_:"):
-            return ns + "_" + v[2:]
-        return v
+        return ns + "_" + v[2:] if v.startswith("_:") else v
 
     rows = []
     for subj, pred, obj, graph in quads:

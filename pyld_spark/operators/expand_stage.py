@@ -345,7 +345,6 @@ def docs_to_triples(
     id_col: str = "conv_id",
     doc_col: str = "doc",
     base_url: str | None = None,
-    namespace_bnodes: bool = True,
     base_col: str | None = None,
 ) -> DataFrame:
     """(doc_id, doc json) → flat triples table (+ quarantine rows).
@@ -365,15 +364,12 @@ def docs_to_triples(
     the JSON itself) compile to an equivalent pure-JVM projection instead —
     see :func:`_compiled_transcript_triples`.
     """
-    if (base_url is None and base_col is None and namespace_bnodes
-            and is_transcript_tagged(docs, doc_col)):
+    if base_url is None and base_col is None and is_transcript_tagged(docs, doc_col):
         return _compiled_transcript_triples(docs, id_col, doc_col)
 
     def triples(doc_id, doc_json, base=None):
         quads = _doc_to_quads(doc_json, base_url if base is None else base)
-        return quads_to_rows(
-            quads, doc_bnode_namespace(doc_id) if namespace_bnodes else None
-        )
+        return quads_to_rows(quads, doc_bnode_namespace(doc_id))
 
     extra = (base_col,) if base_col is not None else ()
     return map_docs(docs, triples, TRIPLE_SCHEMA, id_col, doc_col, extra)

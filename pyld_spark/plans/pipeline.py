@@ -337,9 +337,9 @@ class Pipeline:
         # entities is a corpus-wide aggregate over the (appended) link
         # table — tiny next to the transcripts — so it is re-derived and
         # overwritten rather than merged.
-        entity_table(self._read("link")).write.mode("overwrite").parquet(
-            self._path("entities")
-        )
+        t0 = time.perf_counter()
+        rows = _write(entity_table(self._read("link")), self._path("entities"), "overwrite")
+        self._record_lineage("entities+delta", rows, 0, t0)
 
         from pyld_spark.transcripts import VOCAB
 

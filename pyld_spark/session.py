@@ -1,4 +1,13 @@
-"""SparkSession construction, and the session-wide lineage and shuffle-width policies."""
+"""SparkSession construction, and the session-wide lineage and shuffle-width policies.
+
+Shuffle width is decided here. JVM joins that AQE cannot size take the
+session's ``spark.sql.shuffle.partitions`` (:func:`repartition_by`); Python
+per-document groups take one task per slot (:func:`repartition_per_slot`),
+because each Python Arrow task costs about 100 ms on 4 cores, against 2 ms
+for a JVM one (``tools/python_task_cost.py``: an identity ``mapInArrow`` of
+32k rows took 0.91 s at 32 partitions, 0.22 s at 4). AQE sizes partitions
+by bytes, so it cannot see Python CPU; it keeps an explicit width.
+"""
 
 from __future__ import annotations
 
@@ -105,8 +114,13 @@ def repartition_by(df: DataFrame, *cols) -> DataFrame:
 
     The width is explicit because AQE cannot see a join's output volume: it
     would coalesce the small input of a quadratic join into one or two
-    tasks. An explicit count is exempt from AQE coalescing, and two sides
-    repartitioned here land co-partitioned.
+    tasks. Two sides repartitioned here land co-partitioned.
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols)
+
+
+def repartition_per_slot(df: DataFrame, *cols) -> DataFrame:
+    """Hash-partition ``df`` on ``cols`` to one partition per task slot,
+    the width for a grouped Python stage: each Python task has a fixed cost."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)

@@ -16,6 +16,7 @@ from pyld_spark.operators.canonicalize import (
     canonical_labels,
     canonicalize_triples,
 )
+from pyld_spark.operators.doc_runner import doc_bnode_namespace
 
 PRED = "http://example.org/next"
 
@@ -162,3 +163,15 @@ def test_guard_split_keeps_all_docs(spark):
     mapping = URDNA2015().main(quads)
     assert got == {(mapping[s["value"]], mapping.get(o["value"], o["value"]))
                    for s, _, o, _ in quads}
+
+
+def test_long_bnode_path_canonicalizes(spark):
+    """A 1,200-quad blank-node path, far under ``max_exact_quads``, takes
+    the exact route. Its hash-n-degree calls nest once per path node, which
+    used to end the job with ``RecursionError`` in the Python worker."""
+    n = 1_200
+    ns = doc_bnode_namespace("long-path") + "_"
+    rows = canonicalize_triples(_path_triples(spark, n, doc_id="long-path")).collect()
+    assert len(rows) == n
+    labels = {v for r in rows for v in (r["subj"], r["obj_value"])}
+    assert labels == {f"{ns}c14n{i}" for i in range(n + 1)}

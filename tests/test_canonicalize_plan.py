@@ -72,3 +72,18 @@ def test_no_fixpoint_without_oversized_docs(triples_parquet):
     plan = canonicalize_triples(triples_parquet)._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan, "masked-quad explode planned without an oversized doc"
     assert "Window" not in plan, "label-ranking window planned without an oversized doc"
+
+
+def test_exact_route_is_one_slot_wide_exchange_and_no_join(spark, triples_parquet):
+    """Without an oversized doc, the quad rows are exchanged once, on
+    ``doc_id``, one partition per task slot, and each doc is relabeled
+    inside its own ``applyInArrow`` group: no join, no label map."""
+    plan = canonicalize_triples(triples_parquet)._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, exchanges
+    kind, args = exchanges[0]
+    cols, width = args.rsplit(",", 1)
+    assert kind == "hashpartitioning" and cols.split("#")[0] == "doc_id", exchanges
+    assert int(width) == spark.sparkContext.defaultParallelism, exchanges
+    assert "Join" not in plan
+    assert "map_from_entries" not in plan

@@ -21,11 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from pyld_spark.jsonld.canon import URDNA2015
+from pyld_spark.jsonld.nodemap import IdentifierIssuer
 from pyld_spark.operators.canonicalize import (
     canonical_labels,
     canonicalize_triples,
     first_degree_hashes,
 )
+from pyld_spark.operators.doc_runner import doc_bnode_namespace
+from tests.recursive_canon import RecursiveURDNA2015
 
 PREDS = ["http://ex.org/p", "http://ex.org/q"]
 _SCHEMA = StructType([
@@ -113,12 +116,16 @@ def _corpus(spark, seed: int, n_docs: int):
     return docs, spark.createDataFrame(rows, _SCHEMA)
 
 
-def _urdna2015_mapping(quads):
-    return URDNA2015().main([
+def _quads(quads):
+    return [
         (_term("blank node" if s.startswith("_:") else "IRI", s, None, None),
          {"type": "IRI", "value": p}, _term(ok, ov, dt, lang), g)
         for s, p, ok, ov, dt, lang, g in quads
-    ])
+    ]
+
+
+def _urdna2015_mapping(quads):
+    return URDNA2015().main(_quads(quads))
 
 
 def _label_mismatches(docs, df, max_exact_quads, only=None):
@@ -205,3 +212,85 @@ def test_random_graphs_relabel_is_complete(spark):
     assert stray == 0
     counts = {r.doc_id: r.n for r in out.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
     assert counts == {d: len(q) for d, q in docs.items()}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _relabeled_through_labels(df, max_exact_quads):
+    """``df``'s rows relabeled, on the driver, from the label rows of
+    :func:`canonical_labels`: the output ``canonicalize_triples`` owes."""
+    labels = {(r.doc_id, r.bnode): r.label
+              for r in canonical_labels(df, max_exact_quads=max_exact_quads).collect()}
+
+    def new(doc_id, v, is_bnode):
+        label = labels.get((doc_id, v)) if is_bnode else None
+        return v if label is None else f"{doc_bnode_namespace(doc_id)}_{label[2:]}"
+
+    return sorted(
+        (r.doc_id, new(r.doc_id, r.subj, r.subj.startswith("_:")), r.pred, r.obj_kind,
+         new(r.doc_id, r.obj_value, r.obj_kind == "blank node"),
+         r.obj_datatype, r.obj_language, new(r.doc_id, r.graph, r.graph.startswith("_:")))
+        for r in df.collect()
+    )
+
+
+def test_canonicalize_triples_equals_relabel_through_labels(spark):
+    """The exact route's in-group relabel writes the labels
+    ``canonical_labels`` issues, prefixed with the doc namespace."""
+    _, df = _corpus(spark, 0xC14, 300)
+    assert _rows(canonicalize_triples(df)) == _relabeled_through_labels(df, 100_000)
+
+
+def test_wl_join_relabel_equals_relabel_through_labels(spark):
+    """The WL route's equi-join relabel, on a doc whose bnodes sit in every
+    position: subject, object (with a self-loop) and graph name. A literal
+    spelled like a bnode id is not relabeled."""
+    quads = [
+        ("_:b0", PREDS[0], "blank node", "_:b1", None, None, "@default"),
+        ("_:b1", PREDS[0], "blank node", "_:b1", None, None, "@default"),
+        ("_:b1", PREDS[1], "blank node", "_:b2", None, None, "_:b2"),
+        ("_:b2", PREDS[0], "IRI", "http://ex.org/anchor", None, None, "_:b0"),
+        ("_:b2", PREDS[1], "literal", "_:b0", None, None, "@default"),
+        ("http://ex.org/s", PREDS[0], "blank node", "_:b0", None, None, "_:b1"),
+    ]
+    df = spark.createDataFrame(
+        [(d, *q) for d in ("wl-a", "wl-b") for q in quads], _SCHEMA)
+    got = _rows(canonicalize_triples(df, max_exact_quads=1))
+    assert got == _relabeled_through_labels(df, max_exact_quads=1)
+    assert not [r for r in got if "_:b" in r[1] + r[7] or (r[3] == "blank node" and "_:b" in r[4])]
+    assert [r[4] for r in got if r[3] == "literal"] == ["_:b0", "_:b0"]
+
+
+def _n_degree_results(cls, quads):
+    """Hash N-Degree Quads of every bnode of ``quads``, each from a fresh
+    temporary issuer and no canonical ids, so each call recurses as far as
+    the graph allows: ``(hash, issued order)`` per bnode."""
+    algo = cls()
+    algo.main(quads)
+    algo.canonical_issuer = IdentifierIssuer("_:c14n")
+    out = {}
+    for bnode in sorted(algo.bnode_to_quads):
+        issuer = IdentifierIssuer("_:b")
+        issuer.get_id(bnode)
+        result = algo.hash_n_degree(bnode, issuer)
+        out[bnode] = (result.hash, result.issuer.order)
+    return out
+
+
+def test_hash_n_degree_matches_recursive_oracle():
+    """The explicit-stack ``hash_n_degree`` gives the recursive
+    formulation's hashes and issuers, bit for bit, on the random-graph
+    corpus and on a blank-node path and cycle."""
+    rng = random.Random(0xC14)
+    docs = [_random_doc(rng) for _ in range(300)]
+    for shape in ("path", "cycle"):
+        n = 40
+        docs.append([(f"_:b{i}", PREDS[0], "blank node",
+                      f"_:b{(i + 1) % n if shape == 'cycle' else i + 1}",
+                      None, None, "@default") for i in range(n)])
+    for quads in docs:
+        q = _quads(quads)
+        assert _n_degree_results(URDNA2015, q) == _n_degree_results(RecursiveURDNA2015, q)
+        assert URDNA2015().main(q) == RecursiveURDNA2015().main(q)

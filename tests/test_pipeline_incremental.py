@@ -64,6 +64,9 @@ def test_incremental_equals_full_recompute(spark, sf_dir, tmp_path, odd_convs):
         assert delta[stage + "+delta"].rows_out == appended, stage
         assert delta[stage + "+delta"].error_rows == 0, stage
     assert delta["triples+delta"].rows_out > len(convs) - len(half)
+    # entities is rewritten whole, so its row counts the whole table
+    assert delta["entities+delta"].rows_out == before["entities"] > 0
+    assert delta["entities+delta"].error_rows == 0
 
 
 def test_incremental_on_empty_workdir_is_full_run(spark, sf_dir, tmp_path):

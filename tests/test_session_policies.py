@@ -5,8 +5,9 @@
   iterative operators must give the same output either way, and with a
   directory set they must actually write checkpoint files there.
 - Both decisions live in ``session.py`` only: no other module in the
-  package calls ``localCheckpoint``/``checkpoint`` or reads the shuffle
-  width itself, and no operator takes a per-call ``reliable`` flag.
+  package calls ``localCheckpoint``/``checkpoint`` or reads either shuffle
+  width (``spark.sql.shuffle.partitions``, ``defaultParallelism``) itself,
+  and no operator takes a per-call ``reliable`` flag.
 """
 
 from __future__ import annotations
@@ -106,6 +107,7 @@ def _package_sources():
 def test_lineage_and_shuffle_width_decided_only_in_session():
     banned = re.compile(
         r"localCheckpoint\(|\.checkpoint\(|[\"']spark\.sql\.shuffle\.partitions[\"']"
+        r"|defaultParallelism"
     )
     offenders = [
         f"{path.relative_to(PACKAGE.parent)}:{lineno}: {line.strip()}"

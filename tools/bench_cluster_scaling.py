@@ -123,7 +123,6 @@ canonicalize_triples(warm).count()
 warm.unpersist(); warm_docs.unpersist()
 
 fused = {fused}
-bucketed_triples = {bucketed_triples}
 if fused:
     # fuse_assembly shape (plans/pipeline.py run(fuse_assembly=True)):
     # assembly runs INSIDE the triples stage off the bucketed scan — no
@@ -132,16 +131,7 @@ if fused:
     t_asm = 0.0
     t0 = time.perf_counter()
     triples, _ = split_quarantine(docs_to_triples(assemble_documents(t)))
-    if bucketed_triples:
-        # production layout hand-off: triples bucketed by doc_id, so the
-        # canonicalize stage's ONE full-corpus exchange disappears
-        # (canonicalize_triples(input_partitioned=True))
-        spark.sql("DROP TABLE IF EXISTS triples_bucketed")
-        (triples.write.format("parquet").bucketBy(64, "doc_id")
-         .mode("overwrite").option("path", base + "/triples_bucketed")
-         .saveAsTable("triples_bucketed"))
-    else:
-        triples.write.mode("overwrite").parquet(base + "/triples")
+    triples.write.mode("overwrite").parquet(base + "/triples")
     t_triples = time.perf_counter() - t0
 else:
     t0 = time.perf_counter()
@@ -167,16 +157,11 @@ else:
     t_triples = time.perf_counter() - t0
 spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
 spark.conf.set("spark.sql.files.openCostInBytes", "4194304")
-if bucketed_triples:
-    triples = spark.table("triples_bucketed")
-else:
-    triples = spark.read.parquet(base + "/triples")
+triples = spark.read.parquet(base + "/triples")
 n_triples = triples.count()
 
 t0 = time.perf_counter()
-n_canon = canonicalize_triples(
-    triples, input_partitioned=bucketed_triples
-).count()
+n_canon = canonicalize_triples(triples).count()
 t_canon = time.perf_counter() - t0
 
 t_total = t_asm + t_triples + t_canon
@@ -203,8 +188,7 @@ def run_level(cores_max: int, n_convs: int, turns: int, exec_cores: int) -> dict
     default 1800 s, far above any legitimate wall) and ONE retry."""
     code = _CHILD.format(repo=REPO, cores_max=cores_max, n_convs=n_convs,
                          turns=turns, exec_cores=exec_cores,
-                         fused=os.environ.get("SCALING_FUSED", "") == "1",
-                         bucketed_triples=os.environ.get("SCALING_BUCKETED", "") == "1")
+                         fused=os.environ.get("SCALING_FUSED", "") == "1")
     level_timeout = int(os.environ.get("LEVEL_TIMEOUT", "1800"))
     last_err = None
     for attempt in range(2):

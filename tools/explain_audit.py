@@ -59,7 +59,8 @@ def main() -> None:
             bucketed_docs,
         "docs_to_triples (assembly + one MapInArrow, no extra exchange)":
             triples,
-        "canonicalize_triples (per-doc URDNA2015 applyInArrow + one relabel join)":
+        "canonicalize_triples (one doc_id exchange, one task per slot; per-doc "
+        "URDNA2015 applyInArrow relabels its own rows — no join)":
             canonicalize_triples(triples),
         "canonicalize_documents over bucketed tagged transcript docs (in-row "
         "fd hashes, ranks and labels — ZERO exchanges, no Python node)":

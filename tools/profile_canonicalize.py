@@ -7,11 +7,13 @@ scaling probe).
 Times, each from cold parquet scan to count():
   A. fd-hash aggregation alone                (first_degree_hashes)
   B. labels (size probe + per-doc URDNA2015)  (canonical_labels)
-  C. full relabel join                        (canonicalize_triples)
+  C. relabeled triples                        (canonicalize_triples)
 
 A times the fd hashes alone (B plans them only for a doc over
-``max_exact_quads``); C-B isolates the fat-table relabel join. Run AFTER
-any benchmark finishes (never concurrently):
+``max_exact_quads``). B and C run the same groups; C returns each doc's
+relabeled rows where B returns its label rows, so C-B is the cost of the
+in-group relabel and of writing out the fat table. Run AFTER any benchmark
+finishes (never concurrently):
 
     python tools/profile_canonicalize.py [n_convs] [turns] [cores_max]
 """
@@ -92,7 +94,7 @@ def main() -> None:
 
     timed("A_fd_hash", first_degree_hashes(triples))
     timed("B_labels", canonical_labels(triples))
-    timed("C_full_relabel", canonicalize_triples(triples))
+    timed("C_relabeled", canonicalize_triples(triples))
     print(json.dumps({"n_triples": n, "cores_max": cores_max}))
     spark.stop()
 
