@@ -35,7 +35,8 @@ _LABEL_SCHEMA = "doc_id string not null, bnode string not null, label string not
 
 def _bnode_positions():
     """``(column, condition)`` for each position of a triple row that can
-    hold a blank node, the condition being true when it does."""
+    hold a blank node, the condition being true when it does.
+    :func:`_exact_relabeled` states the same rule in Python; they must agree."""
     return (
         ("subj", F.col("subj").startswith("_:")),
         ("obj_value", F.col("obj_kind") == "blank node"),

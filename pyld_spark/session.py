@@ -6,7 +6,11 @@ per-document groups take one task per slot (:func:`repartition_per_slot`),
 because each Python Arrow task costs about 100 ms on 4 cores, against 2 ms
 for a JVM one (``tools/python_task_cost.py``: an identity ``mapInArrow`` of
 32k rows took 0.91 s at 32 partitions, 0.22 s at 4). AQE sizes partitions
-by bytes, so it cannot see Python CPU; it keeps an explicit width.
+by bytes, so it cannot see Python CPU; it keeps an explicit width. One task
+per slot against 32 tasks and a label-map join, ``canonicalize_triples`` into
+a noop sink on 4 cores: 74k sf0.01 triples 1.76 -> 0.74 s; 3.0M synthetic
+triples 10.8 -> 9.9-10.9 s on 4 slots, 16.3 -> 16.4-17.1 s on 2. Not
+measured: tens of millions of rows a task.
 """
 
 from __future__ import annotations
