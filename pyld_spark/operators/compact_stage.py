@@ -4,9 +4,8 @@
 compacting a whole corpus takes.
 
 Like the other document stages each function here is one kernel call run by
-:func:`pyld_spark.operators.doc_runner.map_docs` (narrow ``mapInArrow``, no
-shuffle, pipelined with the scan); spec errors become quarantine rows
-instead of task failures.
+:func:`pyld_spark.operators.doc_runner.map_docs` (``mapInArrow``, one task
+per slot); spec errors become quarantine rows instead of task failures.
 """
 
 from __future__ import annotations

@@ -9,11 +9,12 @@ just the kernel call:
    becomes ONE row with a non-null ``error_code`` and null payload columns;
    it never fails the task (SURVEY.md §3.1). ``JsonLdError`` keeps its spec
    code; any other exception is coded by its type name.
-2. **The Arrow loop** — :func:`map_docs` (narrow ``mapInArrow`` over a
-   document column) and :func:`map_doc_groups` (``groupBy(doc_id)
-   .applyInArrow`` over a triples table). Input columns come straight off
-   the Arrow batch (``to_pylist``) and the output batch is built once per
-   input batch from the declared schema — no pandas round-trip either way.
+2. **The Arrow loop** — :func:`map_docs` (``mapInArrow`` over a document
+   column, a batch input hash-partitioned on the id to one task per slot)
+   and :func:`map_doc_groups` (``groupBy(doc_id).applyInArrow`` over a
+   triples table). Input columns come straight off the Arrow batch
+   (``to_pylist``) and the output batch is built once per input batch from
+   the declared schema — no pandas round-trip either way.
 3. **The triple-row codec** — :func:`quads_to_rows` (quads → flat triple
    rows with doc-namespaced blank nodes) and :func:`rows_to_quads` (one
    document's triple rows → quads, in a fixed sort order).
@@ -27,6 +28,8 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
+
+from pyld_spark.session import repartition_per_slot
 
 #: payload columns of a flat triple row, in schema order
 TRIPLE_COLUMNS = ("subj", "pred", "obj_kind", "obj_value",
@@ -94,8 +97,17 @@ def map_docs(
 
     ``fn`` returns zero or more payload tuples (the ``schema`` columns
     between ``doc_id`` and ``error_code``); each becomes one output row.
-    Narrow ``mapInArrow``: no shuffle, pipelined with the scan. Non-string
-    ids are passed and emitted as ``str(id)``.
+    Non-string ids are passed and emitted as ``str(id)``.
+
+    A batch input is hash-partitioned on ``id_col`` to one partition per
+    task slot (:func:`~pyld_spark.session.repartition_per_slot`) before the
+    ``mapInArrow``. So the kernel keeps every slot busy even when its input
+    is one file split, and it runs no more Python tasks than there are
+    slots: each Python task has a fixed cost. A streaming input keeps the
+    partitioning of its micro-batches: Spark's shuffle writer cannot take
+    the rows ``applyInPandasWithState`` emits (a ``ClassCastException`` to
+    ``UnsafeRow``), and the stateful assembly of
+    :mod:`pyld_spark.streaming.stream` feeds this map.
     """
     arrow_schema = to_arrow_schema(schema)
     width = len(schema.fields) - 2
@@ -110,7 +122,10 @@ def map_docs(
                 rows += _run_doc(doc_id, lambda: fn(doc_id, *args), width)
             yield _record_batch(rows, arrow_schema)
 
-    return df.select(*cols).mapInArrow(run, schema)
+    docs = df.select(*cols)
+    if not df.isStreaming:
+        docs = repartition_per_slot(docs, id_col)
+    return docs.mapInArrow(run, schema)
 
 
 def map_doc_groups(

@@ -2,10 +2,11 @@
 N-Quads.
 
 Scale design (SURVEY.md §3.1):
-- the only shuffle in the whole doc path is the assembly ``groupBy(conv_id)``;
-  expansion/toRDF/canonicalization run per document in the narrow
-  ``mapInArrow`` runner of :mod:`pyld_spark.operators.doc_runner` (no
-  exchange, pipelined with the scan, no pandas round-trip);
+- expansion/toRDF/canonicalization run per document in the ``mapInArrow``
+  runner of :mod:`pyld_spark.operators.doc_runner`, after one exchange that
+  hash-partitions batch docs on their id to one task per slot (no pandas
+  round-trip); transcript-tagged docs take a compiled JVM projection
+  instead, with no exchange;
 - contexts: static pipeline contexts are processed once per *executor process*
   (module-level cache keyed by canonical JSON of the inline @context), not per
   document;
@@ -350,8 +351,8 @@ def docs_to_triples(
     """(doc_id, doc json) → flat triples table (+ quarantine rows).
 
     Runs the expand → toRDF kernel once per document in the
-    :func:`~pyld_spark.operators.doc_runner.map_docs` runner (narrow
-    ``mapInArrow``, no pandas round-trip — on the 2M-turn scaling corpus
+    :func:`~pyld_spark.operators.doc_runner.map_docs` runner
+    (``mapInArrow``, no pandas round-trip — on the 2M-turn scaling corpus
     the pandas conversion both ways was the largest non-kernel cost of this
     stage).
 

@@ -26,7 +26,12 @@ returns or raises, so a failed run still records the stages it finished.
 stage table and its quarantine table (an ``Observation``), not by reading them
 back; ``wall_ms`` covers building and writing the stage. The per-partition
 row counts live in the stage outputs themselves (``doc_id`` is the partition
-witness).
+witness). The lineage rows reach Spark as an Arrow table, a local relation,
+so their write starts no Python worker.
+
+Fixed costs: a stage built in this run is read back with the schema of the
+frame it just wrote, so the read runs no schema-inference job; only a stage
+skipped on resume is read with an inferred schema.
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyld_spark.session import cut_lineage, ensure_workers_can_import
 
@@ -105,7 +111,14 @@ class Pipeline:
     def _write_lineage(self):
         rows, self._lineage = self._lineage, []
         if rows:
-            self.spark.createDataFrame(rows, self.LINEAGE_DDL).coalesce(1).write.mode(
+            import pyarrow as pa
+
+            # from an Arrow table the frame is a local relation; from a list
+            # of tuples it would be a pickled Python RDD, and its write would
+            # start a Python worker for a handful of rows
+            schema = StructType.fromDDL(self.LINEAGE_DDL)
+            table = pa.table([pa.array(c) for c in zip(*rows)], names=schema.names)
+            self.spark.createDataFrame(table, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(os.path.join(self.workdir, "lineage"))
 
@@ -124,7 +137,8 @@ class Pipeline:
             err_rows = _write(bad, self._path(name + "_quarantine"), "overwrite")
         rows = _write(df, self._path(name), "overwrite")
         self._record_lineage(name, rows, err_rows, t0)
-        return self._read(name)
+        # the schema just written: reading it back needs no inference job
+        return self.spark.read.schema(df.schema).parquet(self._path(name))
 
     # -- stages -------------------------------------------------------------
 
@@ -160,19 +174,10 @@ class Pipeline:
 
     @_writes_lineage
     def run(self, transcripts: DataFrame, bucket_input: bool = False,
-            buckets: int = 64, fuse_assembly: bool = False) -> dict[str, DataFrame]:
-        """``fuse_assembly=True`` runs assembly INSIDE the triples stage
-        (one stage, no docs-table materialization): at corpus scale the
-        assembled-documents table is corpus-sized JSON, so the separate
-        stage costs a full extra write+read, and its short wall is mostly
-        fixed overhead that drags N→4N scaling (round-5 verdict item 3).
-        Bucketed input keeps the fused stage exchange-free end-to-end.
-        Trade-off: resume restarts from raw transcripts instead of the
-        docs checkpoint, and no 'assemble' lineage row is recorded. The
-        link and canonicalize stages also read the raw transcripts (the
-        canonicalize stage re-assembles them for its in-row labels), so a
-        resume over input that changed since the triples stage was written
-        can leave those stages holding docs the triples table lacks."""
+            buckets: int = 64) -> dict[str, DataFrame]:
+        """Build every stage that is not checkpointed yet; returns each stage
+        table by name. ``bucket_input`` first materializes ``transcripts``
+        bucketed by ``conv_id`` into ``buckets`` buckets."""
         from pyld_spark.operators.canonicalize import canonicalize_documents
         from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
         from pyld_spark.operators.linking import (
@@ -186,24 +191,16 @@ class Pipeline:
         if bucket_input:
             transcripts = self._bucketed_transcripts(transcripts, buckets)
 
-        docs = None
-        if not fuse_assembly:
-            docs = self._stage("assemble", lambda: assemble_documents(transcripts))
-
+        docs = self._stage("assemble", lambda: assemble_documents(transcripts))
         linked = self._stage(
             "link", lambda: link_entities(extract_mentions(transcripts))
         )
-
         triples = self._stage(
-            "triples",
-            (lambda: docs_to_triples(assemble_documents(transcripts)))
-            if fuse_assembly else (lambda: docs_to_triples(docs)),
-            error_split=split_quarantine,
+            "triples", lambda: docs_to_triples(docs), error_split=split_quarantine
         )
-
-        canonical = self._stage("canonicalize", lambda: canonicalize_documents(
-            assemble_documents(transcripts) if fuse_assembly else docs, triples))
-
+        canonical = self._stage(
+            "canonicalize", lambda: canonicalize_documents(docs, triples)
+        )
         entities = self._stage("entities", lambda: entity_table(linked))
 
         def build_materialize():
@@ -216,14 +213,6 @@ class Pipeline:
             return canonical.unionByName(link_trips)
 
         materialized = self._stage("materialize", build_materialize)
-        if fuse_assembly:
-            return {
-                "link": linked,
-                "triples": triples,
-                "canonicalize": canonical,
-                "entities": entities,
-                "materialize": materialized,
-            }
         return {
             "assemble": docs,
             "link": linked,

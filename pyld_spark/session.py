@@ -2,15 +2,26 @@
 
 Shuffle width is decided here. JVM joins that AQE cannot size take the
 session's ``spark.sql.shuffle.partitions`` (:func:`repartition_by`); Python
-per-document groups take one task per slot (:func:`repartition_per_slot`),
-because each Python Arrow task costs about 100 ms on 4 cores, against 2 ms
-for a JVM one (``tools/python_task_cost.py``: an identity ``mapInArrow`` of
-32k rows took 0.91 s at 32 partitions, 0.22 s at 4). AQE sizes partitions
-by bytes, so it cannot see Python CPU; it keeps an explicit width. One task
-per slot against 32 tasks and a label-map join, ``canonicalize_triples`` into
-a noop sink on 4 cores: 74k sf0.01 triples 1.76 -> 0.74 s; 3.0M synthetic
-triples 10.8 -> 9.9-10.9 s on 4 slots, 16.3 -> 16.4-17.1 s on 2. Not
-measured: tens of millions of rows a task.
+per-document stages, the grouped ones and the kernel map
+(``doc_runner.map_docs``) alike, take one task per slot
+(:func:`repartition_per_slot`), because each Python Arrow task costs about
+90-100 ms on 4 cores, against 2 ms for a JVM one
+(``tools/python_task_cost.py``: an identity ``mapInArrow`` of 32k rows took
+0.83-0.91 s at 32 partitions, 0.21-0.22 s at 4). AQE sizes partitions by
+bytes, so it cannot see Python CPU; it keeps an explicit width. Measured on
+4 cores, into a noop sink, median of 3 warm runs:
+
+- groups: one task per slot against 32 tasks and a label-map join,
+  ``canonicalize_triples``: 74k sf0.01 triples 1.76 -> 0.74 s; 3.0M
+  synthetic triples 10.8 -> 9.9-10.9 s on 4 slots, 16.3 -> 16.4-17.1 s
+  on 2;
+- the kernel map: hash-partitioned per slot against the input's own
+  splits, ``docs_to_triples`` over 22,160 untagged docs (40 seeds of the
+  benchmark's mixed documents): one parquet row group, so one kernel task,
+  7.67-7.75 -> 2.55-2.56 s; the same docs in 4 Spark-written splits,
+  2.37-2.39 -> 2.34-2.46 s (the extra exchange is inside the noise).
+
+Not measured: tens of millions of rows a task.
 """
 
 from __future__ import annotations

@@ -178,7 +178,7 @@ def html_to_documents(
 ) -> DataFrame:
     """(page_id, html[, url]) → (doc_id, JSON-LD doc json, base, error_code).
 
-    Narrow ``mapInArrow`` per page; output feeds directly into
+    One kernel call per page; output feeds directly into
     ``expand_stage.docs_to_triples``."""
 
     def extract(_doc_id, html, url=None):

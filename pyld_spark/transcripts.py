@@ -205,8 +205,8 @@ def write_bucketed_transcripts(
     This is the production layout (the 10^12-turn Iceberg table would be
     bucketed by conv key at write time): ``groupBy(conv_id)`` on the
     returned table satisfies its clustering from the scan, so document
-    assembly runs with **no exchange** — the only shuffle in the whole
-    doc→triples path disappears.
+    assembly runs with **no exchange** — the only shuffle on the compiled
+    doc→triples path of tagged transcript docs disappears.
     """
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (

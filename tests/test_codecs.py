@@ -12,13 +12,8 @@ import zlib
 import numpy as np
 import pytest
 
-from pyld_spark.operators.codecs import (
-    decode_png,
-    decode_wav,
-    encode_png,
-    encode_wav,
-    resize_nearest,
-)
+from pyld_spark.operators.codecs import decode_png, decode_wav, resize_nearest
+from tests.codec_encoders import encode_png, encode_wav
 
 
 def _rng(seed=0):
@@ -203,7 +198,8 @@ def test_mp4_real_decode_still_raises(spark):
 # ---------------------------------------------------------------- Y4M
 
 def test_y4m_roundtrip_mono_and_444():
-    from pyld_spark.operators.codecs import decode_y4m, encode_y4m
+    from pyld_spark.operators.codecs import decode_y4m
+    from tests.codec_encoders import encode_y4m
 
     mono = _rng(5).integers(0, 256, size=(4, 6, 8), dtype=np.uint8)
     got, fps = decode_y4m(encode_y4m(mono, fps=(30, 1)))
@@ -250,7 +246,7 @@ def test_sample_frames_real_y4m_path(spark):
 
     import pandas as pd
 
-    from pyld_spark.operators.codecs import encode_y4m
+    from tests.codec_encoders import encode_y4m
     from pyld_spark.operators.multimodal import MEDIA_SCHEMA, sample_frames_stub
 
     stacks = {
@@ -290,7 +286,8 @@ def _test_rgb(h=48, w=64):
 
 @pytest.mark.parametrize("quality,tol", [(95, 6), (75, 14), (40, 30)])
 def test_jpeg_gray_roundtrip(quality, tol):
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     img = np.linspace(0, 255, 56 * 72, dtype=np.uint8).reshape(56, 72)
     out = decode_jpeg(encode_jpeg_baseline(img, quality=quality))
@@ -301,7 +298,8 @@ def test_jpeg_gray_roundtrip(quality, tol):
 
 @pytest.mark.parametrize("subsampling", ["444", "420", "422"])
 def test_jpeg_rgb_roundtrip_subsampling(subsampling):
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     img = _test_rgb(50, 70)  # non-multiple-of-16 dims exercise MCU padding
     out = decode_jpeg(encode_jpeg_baseline(img, quality=90,
@@ -313,14 +311,15 @@ def test_jpeg_rgb_roundtrip_subsampling(subsampling):
 
 
 def test_jpeg_deterministic():
-    from pyld_spark.operators.codecs import encode_jpeg_baseline
+    from tests.codec_encoders import encode_jpeg_baseline
 
     img = _test_rgb()
     assert encode_jpeg_baseline(img) == encode_jpeg_baseline(img)
 
 
 def test_jpeg_rejects_progressive_and_garbage():
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     with pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"not a jpeg")
@@ -336,7 +335,8 @@ def test_jpeg_rejects_progressive_and_garbage():
 
 
 def test_jpeg_1x1_and_extreme_values():
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     for v in (0, 255):
         px = np.full((1, 1), v, np.uint8)
@@ -352,7 +352,8 @@ def test_decode_image_real_jpeg_path(spark):
 
     import pandas as pd
 
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
     from pyld_spark.operators.multimodal import MEDIA_SCHEMA, decode_image_stub
 
     img = _test_rgb(32, 40)
@@ -381,7 +382,8 @@ def test_jpeg_fill_bytes_before_marker_ok():
     not desync the marker parser."""
     import numpy as np
 
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     img = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 251
     data = encode_jpeg_baseline(img, quality=90)
@@ -421,7 +423,8 @@ def test_jpeg_non_interleaved_scan_raises():
     import numpy as np
     import pytest
 
-    from pyld_spark.operators.codecs import decode_jpeg, encode_jpeg_baseline
+    from pyld_spark.operators.codecs import decode_jpeg
+    from tests.codec_encoders import encode_jpeg_baseline
 
     img = np.zeros((8, 8, 3), dtype=np.uint8)
     data = bytearray(encode_jpeg_baseline(img, quality=90))

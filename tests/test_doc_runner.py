@@ -84,3 +84,36 @@ def test_triples_to_documents_quarantines_non_spec_errors(spark):
         "null-subj": "internal error: AttributeError",
         "bad-json-literal": "invalid JSON literal",
     }
+
+
+def test_map_docs_runs_one_kernel_task_per_slot(spark, tmp_path):
+    """A one-partition input (one parquet row group) is hash-partitioned on
+    its id to one partition per slot before the ``mapInArrow``: exactly one
+    such exchange, and every slot runs the kernel."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+    from pyspark.sql.types import StringType, StructField
+
+    from pyld_spark.operators.doc_runner import doc_schema, map_docs
+
+    path = str(tmp_path / "docs.parquet")
+    ids = [f"doc-{i}" for i in range(64)]
+    pq.write_table(pa.table({"conv_id": ids, "doc": ["{}"] * len(ids)}), path)
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() == 1
+
+    def partition(_doc_id, _doc):
+        return [(str(TaskContext.get().partitionId()),)]
+
+    out = map_docs(docs, partition, doc_schema(StructField("part", StringType(), True)))
+    slots = spark.sparkContext.defaultParallelism
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)", plan)
+    assert exchanges == [("conv_id", str(slots))], plan
+    assert plan.index("MapInArrow") < plan.index("Exchange hashpartitioning"), plan
+    rows = out.collect()
+    assert sorted(r.doc_id for r in rows) == sorted(ids)
+    assert {r.part for r in rows} == {str(p) for p in range(slots)}

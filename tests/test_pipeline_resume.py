@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import glob
 import os
@@ -70,18 +71,95 @@ def test_pipeline_runs_and_resumes(spark, sf_dir, tmp_path, odd_convs):
     assert _lineage_files(wd) == 2
 
 
-def test_fused_assembly_matches_staged(spark, tmp_path, odd_convs):
-    """fuse_assembly=True (assembly inside the triples stage, no docs
-    materialization) produces byte-identical triples/canonicalize tables
-    to the staged pipeline."""
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Run the body's Spark jobs under ``group``; yields a callable that
+    returns how many jobs the group has run so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_lineage_frame_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """The lineage rows reach the write as a local relation: a frame built
+    from a list of tuples plans a ``LogicalRDD`` over a pickled Python RDD,
+    and writing it starts a Python worker for a handful of rows."""
+    p = Pipeline(spark, str(tmp_path / "wd"), run_id="r")
+    rows = [("r", "assemble", 15, 0, 120), ("r", "triples", 900, 2, 340)]
+    p._lineage = list(rows)
+    built = []
+    create = spark.createDataFrame
+
+    def recording(*args, **kwargs):
+        built.append(create(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", recording)
+    p._write_lineage()
+    monkeypatch.undo()
+    [frame] = built
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    lineage = p.lineage()
+    assert lineage.schema.simpleString() == (
+        "struct<run_id:string,stage:string,rows_out:bigint,error_rows:bigint,wall_ms:bigint>"
+    )
+    assert _sorted_rows(lineage) == sorted(rows)
+
+
+def test_stage_frames_reuse_the_written_schema(spark, tmp_path, monkeypatch):
+    """Every stage frame ``run`` returns has the schema a plain parquet read
+    infers, ``doc``'s shape tag included, and reading a stage back after its
+    write runs no Spark job (an inferring read runs one per stage)."""
+    from pyld_spark.transcripts import DOC_SHAPE_META_KEY, synthesize_transcripts
+
+    read_back_jobs = {}
+    record, stage = Pipeline._record_lineage, Pipeline._stage
+
+    def recorded(self, name, *args):
+        record(self, name, *args)
+        # the stage's writes are done; its read-back comes next
+        self.spark.sparkContext.setJobGroup(f"read-back-{name}", name)
+        read_back_jobs[name] = f"read-back-{name}"
+
+    def staged(self, *args, **kwargs):
+        out = stage(self, *args, **kwargs)
+        self.spark.sparkContext.setJobGroup("next-stage", "next-stage")
+        return out
+
+    monkeypatch.setattr(Pipeline, "_record_lineage", recorded)
+    monkeypatch.setattr(Pipeline, "_stage", staged)
+    t = synthesize_transcripts(spark, n_convs=6, turns_per_conv=3, hot_convs=0)
+    wd = str(tmp_path / "wd")
+    with _job_group(spark, "run"):
+        out = Pipeline(spark, wd, run_id="s").run(t)
+    monkeypatch.undo()
+
+    tracker = spark.sparkContext.statusTracker()
+    assert set(read_back_jobs) == set(out)
+    jobs = {name: len(tracker.getJobIdsForGroup(g)) for name, g in read_back_jobs.items()}
+    assert jobs == dict.fromkeys(out, 0), jobs
+    for name, df in out.items():
+        inferred = spark.read.parquet(os.path.join(wd, name)).schema
+        assert df.schema.json() == inferred.json(), name
+    assert out["assemble"].schema["doc"].metadata[DOC_SHAPE_META_KEY] == "transcript-v1"
+
+
+def test_pipeline_run_job_count(spark, tmp_path):
+    """One ``Pipeline.run`` over a small corpus runs at most 14 Spark jobs.
+    At 1510b9d it ran 20: six of them inferred the schema of a stage table
+    that had just been written."""
     from pyld_spark.transcripts import synthesize_transcripts
 
-    t = synthesize_transcripts(spark, n_convs=40, turns_per_conv=6).unionByName(odd_convs)
-    staged = Pipeline(spark, str(tmp_path / "staged")).run(t)
-    fused = Pipeline(spark, str(tmp_path / "fused")).run(t, fuse_assembly=True)
-    assert "assemble" not in fused
-    for stage in ("triples", "canonicalize", "materialize"):
-        assert _sorted_rows(staged[stage]) == _sorted_rows(fused[stage]), stage
+    t = synthesize_transcripts(spark, n_convs=8, turns_per_conv=4, hot_convs=1, hot_turns=12)
+    with _job_group(spark, "pipeline-run") as jobs:
+        Pipeline(spark, str(tmp_path / "wd"), run_id="j").run(t)
+        ran = jobs()
+    assert ran <= 14, ran
 
 
 def test_lineage_counts_are_the_written_rows(spark, tmp_path):

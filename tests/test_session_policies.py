@@ -7,7 +7,8 @@
 - Both decisions live in ``session.py`` only: no other module in the
   package calls ``localCheckpoint``/``checkpoint`` or reads either shuffle
   width (``spark.sql.shuffle.partitions``, ``defaultParallelism``) itself,
-  and no operator takes a per-call ``reliable`` flag.
+  no operator takes a per-call ``reliable`` flag, and the per-document
+  kernel map takes its width from ``repartition_per_slot``.
 """
 
 from __future__ import annotations
@@ -126,3 +127,18 @@ def test_lineage_and_shuffle_width_decided_only_in_session():
         and "reliable" in {a.arg for a in node.args.args + node.args.kwonlyargs}
     ]
     assert not reliable_params, reliable_params
+
+    # the per-document kernel map takes the per-slot width from session.py
+    # and sets no width of its own
+    runner = ast.parse((PACKAGE / "operators" / "doc_runner.py").read_text())
+    widths = {
+        n.func.attr for n in ast.walk(runner)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    } & {"repartition", "coalesce", "repartitionByRange"}
+    assert not widths, widths
+    [map_docs] = [n for n in runner.body
+                  if isinstance(n, ast.FunctionDef) and n.name == "map_docs"]
+    assert "repartition_per_slot" in {
+        n.func.id for n in ast.walk(map_docs)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }

@@ -116,3 +116,54 @@ def test_stream_triples_matches_batch(spark, tmp_path):
     cols = ["doc_id", "subj", "pred", "obj_kind", "obj_value", "obj_datatype"]
     assert streamed_closed.select(cols).exceptAll(batch.select(cols)).count() == 0
     assert batch.select(cols).exceptAll(streamed_closed.select(cols)).count() == 0
+
+
+def test_stateful_stream_runs_the_kernel_map(spark, tmp_path):
+    """The stateful assembly emits untagged docs, so in-stream
+    ``docs_to_triples`` runs the per-document kernel map over its output;
+    the triples equal the batch kernel's over the same documents."""
+    import datetime as dt
+    import os
+
+    from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
+    from pyld_spark.streaming.stream import (
+        assemble_documents_stream_stateful,
+        read_transcript_stream,
+    )
+    from pyld_spark.transcripts import assemble_documents
+
+    t = synthesize_transcripts(spark, n_convs=6, turns_per_conv=3,
+                               hot_convs=0, hot_turns=0).cache()
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    t.coalesce(1).write.parquet(inp)
+    # two far-future sentinels in later micro-batches: the first commits the
+    # watermark, the second fires every conversation's timer
+    mtime = max(os.path.getmtime(os.path.join(inp, f)) for f in os.listdir(inp))
+    for bump, year in ((100, 2030), (200, 2031)):
+        spark.createDataFrame(
+            [(f"conv-sentinel-{year}", 0, "user", "late", None,
+              dt.datetime(year, 1, 1, tzinfo=dt.timezone.utc))], t.schema,
+        ).coalesce(1).write.mode("append").parquet(inp)
+        newest = max((os.path.join(inp, f) for f in os.listdir(inp)
+                      if f.endswith(".parquet")), key=os.path.getmtime)
+        os.utime(newest, (mtime + bump,) * 2)
+
+    docs = assemble_documents_stream_stateful(
+        read_transcript_stream(spark, inp, max_files_per_trigger=1),
+        watermark="96 hours", gap_seconds=1800,
+    )
+    q = (
+        split_quarantine(docs_to_triples(docs))[0].writeStream
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append").trigger(availableNow=True)
+        .format("parquet").option("path", out).start()
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None, q.exception()
+    streamed = spark.read.parquet(out).where(~F.col("doc_id").contains("sentinel"))
+
+    untagged = spark.createDataFrame(
+        [tuple(r) for r in assemble_documents(t).collect()], "conv_id string, doc string")
+    batch = split_quarantine(docs_to_triples(untagged))[0]
+    rows = sorted(tuple(r) for r in streamed.collect())
+    assert rows and rows == sorted(tuple(r) for r in batch.collect())

@@ -124,10 +124,10 @@ warm.unpersist(); warm_docs.unpersist()
 
 fused = {fused}
 if fused:
-    # fuse_assembly shape (plans/pipeline.py run(fuse_assembly=True)):
-    # assembly runs INSIDE the triples stage off the bucketed scan — no
-    # docs materialization, one stage, still exchange-free. t_asm = 0 and
-    # t_triples carries the whole docs->triples path.
+    # fused shape (SCALING_FUSED=1), built here from the operators, not by
+    # Pipeline: assembly runs INSIDE the triples stage off the bucketed
+    # scan — no docs materialization, one stage, still exchange-free.
+    # t_asm = 0 and t_triples carries the whole docs->triples path.
     t_asm = 0.0
     t0 = time.perf_counter()
     triples, _ = split_quarantine(docs_to_triples(assemble_documents(t)))
