@@ -1,5 +1,6 @@
-"""Deduplication operators over the ``documents`` table — the training-data
-pipeline half of the engine (no reference analogue; required extras).
+"""Deduplication operators over the ``documents`` and ``embeddings``
+tables — the training-data pipeline half of the engine (no reference
+analogue; required extras).
 
 All-relational designs (whole-stage codegen, no Python):
 
@@ -11,7 +12,17 @@ All-relational designs (whole-stage codegen, no Python):
   shingle → K permutation-hash minima (xxhash64 with per-permutation seed
   columns) → band buckets → candidate join. At 100 TB this is *the* scale
   path: cost is linear in corpus size + bucket collisions, never pairwise.
-- :func:`simhash_signatures` — 64-bit SimHash from token hash sign-sums.
+- :func:`simhash_signatures` / :func:`simhash_near_pairs` — 64-bit SimHash
+  from token hash sign-sums; pairs by a pigeonhole block join.
+- :func:`embedding_cosine_pairs` and :func:`semantic_dedup` — near-duplicate
+  embeddings by fixed-point cosine, in hyperplane buckets or IVF cells.
+
+Each ``*_md5`` operator is the oracle-checkable twin of its xxhash64
+sibling: md5 exists in every engine, so the DuckDB oracle replays it. A twin
+pair runs one private dataflow (:func:`_exploded_signatures`,
+:func:`_minhash_pairs`, :func:`_hamming_pairs`) and differs only in the
+hash expressions passed to it. The vector expressions (dot products, norms,
+hyperplane signatures) live in :mod:`pyld_spark.operators.vectors`.
 """
 
 from __future__ import annotations
@@ -19,6 +30,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyld_spark.operators.vectors import (
+    cos_q6,
+    fixedpoint_cosine,
+    hyperplane_signature_md5,
+    long_dot,
+    long_sq_norm,
+    quantize_expr,
+)
 from pyld_spark.session import cut_lineage, repartition_by
 
 
@@ -160,12 +179,19 @@ def minhash_lsh_pairs(
     key includes the band hash of ``rows_per_band`` 64-bit minima.
     Returns distinct (doc_a, doc_b) candidates with doc_a < doc_b.
     """
+    return _band_candidates(signatures, id_col, bands, rows_per_band, F.xxhash64)
+
+
+def _band_candidates(signatures, id_col, bands, rows_per_band, band_hash):
+    """Distinct (doc_a < doc_b) pairs sharing a (band, ``band_hash`` of the
+    band's signature entries) bucket. Each basis keeps its own band hash: a
+    band-hash collision adds a candidate pair."""
     banded = signatures.select(
         F.col(id_col).alias("doc"),
         F.posexplode(
             F.array(
                 *[
-                    F.xxhash64(
+                    band_hash(
                         *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                     )
                     for b in range(bands)
@@ -183,6 +209,30 @@ def minhash_lsh_pairs(
     )
 
 
+def _minhash_pairs(sigs, id_col, num_hashes, bands, band_hash):
+    """The MinHash pipeline after the signatures: the LSH candidate pairs
+    joined to both signatures (``sig_a``, ``sig_b``), and the column that
+    counts a pair's agreeing signature entries."""
+    # one small row per doc; the lazy checkpoint makes the three consumers
+    # (banding sides + both verification joins) read the computed signature
+    # table instead of re-running the whole shingle+hash pipeline each —
+    # the plan had FOUR full signature computations and zero exchange reuse
+    sigs = cut_lineage(sigs, eager=False)
+    cands = _band_candidates(sigs, id_col, bands, num_hashes // bands, band_hash)
+    sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
+    n_agree = F.size(
+        F.filter(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+            lambda eq: eq,
+        )
+    )
+    # signature join: the signatures side is |corpus|-sized, so it must NOT
+    # be broadcast at scale — shuffle-join on doc id (AQE may still pick a
+    # broadcast at small SF from its own size estimate, which is correct)
+    return cands.join(sa, "doc_a").join(sb, "doc_b"), n_agree
+
+
 def minhash_dedup_pairs(
     documents: DataFrame,
     text_col: str = "text",
@@ -194,28 +244,12 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Full MinHash pipeline: signatures → LSH candidates → verify candidates
     with estimated Jaccard (signature agreement)."""
-    # one small row per doc; the lazy checkpoint makes the three consumers
-    # (banding sides + both verification joins) read the computed signature
-    # table instead of re-running the whole shingle+hash pipeline each —
-    # the plan had FOUR full signature computations and zero exchange reuse
-    sigs = minhash_signatures(documents, text_col, id_col, k, num_hashes)
-    sigs = cut_lineage(sigs, eager=False)
-    cands = minhash_lsh_pairs(sigs, id_col, bands, num_hashes // bands)
-    sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(num_hashes)
-    # signature join: the signatures side is |corpus|-sized, so it must NOT
-    # be broadcast at scale — shuffle-join on doc id (AQE may still pick a
-    # broadcast at small SF from its own size estimate, which is correct)
+    pairs, n_agree = _minhash_pairs(
+        minhash_signatures(documents, text_col, id_col, k, num_hashes),
+        id_col, num_hashes, bands, F.xxhash64,
+    )
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(est, 4))
+        pairs.withColumn("est_jaccard", F.round(n_agree / F.lit(num_hashes), 4))
         .filter(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
@@ -261,44 +295,13 @@ def minhash_dedup_pairs_md5(
     ANSI-ish SQL. Emits integer ``n_agree`` (not a rounded ratio) so the
     comparison is bit-exact across engines.
     """
-    rows_per_band = num_hashes // bands
-    # lazy checkpoint: same 4x-recompute fix as minhash_dedup_pairs
-    sigs = minhash_signatures_md5(documents, text_col, id_col, k, num_hashes)
-    sigs = cut_lineage(sigs, eager=False)
-    banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(F.concat_ws(
-                        "|",
-                        *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)],
-                    ))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
+    pairs, n_agree = _minhash_pairs(
+        minhash_signatures_md5(documents, text_col, id_col, k, num_hashes),
+        id_col, num_hashes, bands,
+        lambda *entries: F.md5(F.concat_ws("|", *entries)),
     )
-    a = banded.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    b = banded.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
-    n_agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ).cast("bigint")
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_agree", n_agree)
+        pairs.withColumn("n_agree", n_agree.cast("bigint"))
         .filter(F.col("n_agree") >= F.lit(threshold * num_hashes))
         .select("doc_a", "doc_b", "n_agree")
     )
@@ -325,54 +328,33 @@ def embedding_cosine_pairs(
     use 16-24 planes (65k-16M buckets), optionally multiple plane sets
     OR-combined for recall. Never |corpus|².
     """
-    from pyld_spark.operators.similarity import hyperplane_expr_md5, quantize_expr
-
-    def signature(qvec):
-        # dim is a parameter (like lsh_bucketed_topk) — reading it from the
-        # data would fire a driver-side job during plan construction
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(qvec, hyperplane_expr_md5(dim, i, scale),
-                               lambda x, h: x * h),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                ) >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for i in range(n_planes)
-        ]
-        return F.concat(*bits)
-
-    lsum = lambda arr: F.aggregate(arr, F.lit(0).cast("long"), lambda x, v: x + v)  # noqa: E731
-    # per-VECTOR work (squared norm) computed once per row before the join —
-    # the old shape re-evaluated both interpreted norm aggregates per
-    # candidate PAIR inside the join (guide §1.2: per-task work; the norms
-    # are exact integers, so the cosine bits are unchanged)
+    # the squared norm once per vector before the join, not per candidate
+    # pair inside it (an exact integer, so the cosine bits are the same)
     q = (
         embeddings.select(
             F.col(id_col).alias("vid"), quantize_expr(F.col(vec_col), scale).alias("vq")
         )
-        .withColumn("bucket", signature(F.col("vq")))
-        .withColumn("_nrm", lsum(F.transform(F.col("vq"), lambda x: x * x)))
+        .withColumn("bucket", hyperplane_signature_md5(F.col("vq"), dim, n_planes, scale))
+        .withColumn("_nrm", long_sq_norm(F.col("vq")))
     )
+
     # co-partitioned on the bucket key (no forced-broadcast hint: the
     # bucketed table is corpus-sized; the optimizer may still auto-broadcast
     # one side when it genuinely fits)
-    a = repartition_by(q.select(
-        F.col("vid").alias("id_a"), F.col("vq").alias("vq_a"),
-        F.col("_nrm").alias("_na"), "bucket",
-    ), "bucket")
-    b = repartition_by(q.select(
-        F.col("vid").alias("id_b"), F.col("vq").alias("vq_b"),
-        F.col("_nrm").alias("_nb"), "bucket",
-    ), "bucket")
-    dot = lsum(F.zip_with(F.col("vq_a"), F.col("vq_b"), lambda x, y: x * y))
-    cos = dot.cast("double") / F.sqrt(F.col("_na").cast("double") * F.col("_nb").cast("double"))
+    def side(s):
+        return repartition_by(q.select(
+            F.col("vid").alias(f"id_{s}"), F.col("vq").alias(f"vq_{s}"),
+            F.col("_nrm").alias(f"_n{s}"), "bucket",
+        ), "bucket")
+
+    a, b = side("a"), side("b")
+    cos = fixedpoint_cosine(
+        long_dot(F.col("vq_a"), F.col("vq_b")), F.col("_na"), F.col("_nb")
+    )
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_q6", F.floor(cos * 1000000).cast("bigint"))
+        .withColumn("cos_q6", cos_q6(cos))
         .filter(F.col("cos_q6") >= threshold_q6)
         .select("id_a", "id_b", "cos_q6")
         .distinct()
@@ -413,8 +395,7 @@ def simhash_signatures(
 
 
 def _hamming_block_offsets(n_bits: int, n_blocks: int) -> list[tuple[int, int]]:
-    """(offset, length) per pigeonhole block — shared by the long and the
-    bit-string signature variants so both block identically."""
+    """(offset, length) per pigeonhole block of an ``n_bits`` signature."""
     base, extra = divmod(n_bits, n_blocks)
     offsets, off = [], 0
     for i in range(n_blocks):
@@ -471,58 +452,20 @@ def simhash_signatures_md5(
 def simhash_near_pairs_md5(
     signatures: DataFrame, id_col: str = "doc_id", max_hamming: int = 16,
 ) -> DataFrame:
-    """Near-duplicate pairs over bit-string SimHash signatures (same
-    pigeonhole block join as :func:`simhash_near_pairs`; hamming distance =
+    """Near-duplicate pairs over bit-string SimHash signatures (the
+    pigeonhole block join of :func:`simhash_near_pairs`; hamming distance =
     count of differing positions, an integer — bit-exact across engines)."""
-    offsets = _hamming_block_offsets(64, max_hamming + 1)
-    blocks = F.array(
-        *[F.substring(F.col("simbits"), o + 1, ln) for o, ln in offsets]
-    )
-    # Pack the bit-string ONCE per row into two 32-bit halves: the pair
-    # Hamming distance is then xor+bit_count (whole-stage codegen) instead of
-    # an interpreted 64-step aggregate over substrings evaluated per
-    # CANDIDATE pair in the join filter. At max_hamming=16 the pigeonhole
-    # blocks are 4 bits wide (17x16 = 272 join keys), so candidate pairs are
-    # ~N^2/16 per block index — at 5k docs the old expression evaluated ~10^9
-    # interpreted ops in ONE task (25+ min); this shape runs in seconds.
-    # Exactly the same distance: count of differing '0'/'1' chars ==
-    # bit_count of the xor of the parsed halves.
+    # Pack the bit-string ONCE per row into one long (character i is bit
+    # 63 - i): the pair distance is then xor+bit_count (whole-stage codegen)
+    # instead of an interpreted 64-step aggregate over substrings per
+    # CANDIDATE pair. Exactly the same distance: the count of differing
+    # '0'/'1' chars is the bit_count of the xor of the packed longs.
     hi = F.conv(F.substring("simbits", 1, 32), 2, 10).cast("long")
     lo = F.conv(F.substring("simbits", 33, 32), 2, 10).cast("long")
-    # both join sides derive from the signature table — checkpoint it lazily
-    # so the (groupBy-heavy) signature computation runs once, not per side
-    signatures = cut_lineage(signatures, eager=False)
-    blocked = signatures.select(
-        F.col(id_col).alias("doc"), hi.alias("_hi"), lo.alias("_lo"),
-        F.posexplode(blocks).alias("block_idx", "block_val"),
+    pairs = _hamming_pairs(
+        signatures, id_col, F.shiftleft(hi, 32).bitwiseOR(lo), max_hamming
     )
-    # co-partition BOTH sides; no forced-broadcast hint, because the blocked
-    # table is 17 rows/doc and grows with the corpus
-    a = repartition_by(blocked.select(
-        F.col("doc").alias("doc_a"), F.col("_hi").alias("_hi_a"),
-        F.col("_lo").alias("_lo_a"), "block_idx", "block_val",
-    ), "block_idx", "block_val")
-    b = repartition_by(blocked.select(
-        F.col("doc").alias("doc_b"), F.col("_hi").alias("_hi_b"),
-        F.col("_lo").alias("_lo_b"), "block_idx", "block_val",
-    ), "block_idx", "block_val")
-    hamming = (
-        F.bit_count(F.col("_hi_a").bitwiseXOR(F.col("_hi_b")))
-        + F.bit_count(F.col("_lo_a").bitwiseXOR(F.col("_lo_b")))
-    ).cast("bigint")
-    return (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        # filter BEFORE the distinct: the xor+bit_count distance is codegen-
-        # cheap per generated pair, and at max_hamming=16 it drops the vast
-        # majority of the ~sum(block_df^2) candidates, so the distinct
-        # aggregates a small survivor set instead of every generated pair.
-        # distinct-then-filter == filter-then-distinct on a derived column,
-        # so the output is unchanged for every input.
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return pairs.select("doc_a", "doc_b", F.col("hamming").cast("bigint").alias("hamming"))
 
 
 def simhash_near_pairs(
@@ -534,32 +477,47 @@ def simhash_near_pairs(
     by pigeonhole, any pair within the distance budget shares at least one
     exact block, so the join is on (block_idx, block_value), never all-pairs.
     """
+    return _hamming_pairs(signatures, id_col, F.col("simhash"), max_hamming)
+
+
+def _hamming_pairs(signatures, id_col, sim, max_hamming):
+    """Distinct (doc_a < doc_b, hamming) over every pair whose 64-bit
+    ``long`` signatures ``sim`` differ in at most ``max_hamming`` bits, found
+    by the pigeonhole block join of :func:`simhash_near_pairs`."""
     offsets = _hamming_block_offsets(64, max_hamming + 1)
     blocks = F.array(
         *[
-            F.shiftright(F.col("simhash"), o).bitwiseAND(F.lit((1 << ln) - 1))
+            F.shiftright(F.col("_sim"), o).bitwiseAND(F.lit((1 << ln) - 1))
             for o, ln in offsets
         ]
     )
+    # both join sides derive from the signature table — checkpoint it lazily
+    # so the signature computation runs once, not per side
+    signatures = cut_lineage(signatures, eager=False)
     blocked = signatures.select(
-        F.col(id_col).alias("doc"), F.col("simhash"),
-        F.posexplode(blocks).alias("block_idx", "block_val"),
-    )
-    a = blocked.select(
-        F.col("doc").alias("doc_a"), F.col("simhash").alias("sim_a"),
-        "block_idx", "block_val",
-    )
-    b = blocked.select(
-        F.col("doc").alias("doc_b"), F.col("simhash").alias("sim_b"),
-        "block_idx", "block_val",
-    )
+        F.col(id_col).alias("doc"), sim.alias("_sim")
+    ).select("doc", "_sim", F.posexplode(blocks).alias("block_idx", "block_val"))
+
+    # co-partition BOTH sides; no forced-broadcast hint, because the blocked
+    # table is max_hamming + 1 rows/doc and grows with the corpus
+    def side(s):
+        return repartition_by(blocked.select(
+            F.col("doc").alias(f"doc_{s}"), F.col("_sim").alias(f"sim_{s}"),
+            "block_idx", "block_val",
+        ), "block_idx", "block_val")
+
+    a, b = side("a"), side("b")
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         a.join(b, ["block_idx", "block_val"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        # filter before distinct (same output — see the md5 variant): the
-        # distance is one xor+bit_count, the distinct is the expensive part
+        # filter BEFORE the distinct: the xor+bit_count distance is codegen-
+        # cheap per generated pair, and at a wide budget it drops the vast
+        # majority of the ~sum(block_df^2) candidates, so the distinct
+        # aggregates a small survivor set instead of every generated pair.
+        # distinct-then-filter == filter-then-distinct on a derived column,
+        # so the output is unchanged for every input.
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -673,48 +631,22 @@ def semantic_dedup(
     """
     from pyspark.sql import Window
 
-    from pyld_spark.operators.similarity import ivf_centroids, quantize_expr
+    from pyld_spark.operators.similarity import _assign_cells, ivf_centroids
 
     cent = (
         centroids
         if centroids is not None
         else ivf_centroids(embeddings, nlist, id_col, vec_col, scale)
     )
-    idot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     qv = embeddings.select(
         F.col(id_col).alias("_vid"),
         quantize_expr(F.col(vec_col), scale).alias("_vq"),
     )
-    # winner-take-all cell assignment; the winning dot IS max(_cdot)
-    # (ties broken toward the smaller cell_id, which shares that max)
-    assign = (
-        qv.crossJoin(F.broadcast(cent))
-        .select(
-            "_vid",
-            "_vq",
-            "cell_id",
-            idot(F.col("_vq"), F.col("_cent")).alias("_cdot"),
-        )
-        .groupBy("_vid")
-        .agg(
-            F.max_by(
-                "cell_id", F.struct(F.col("_cdot"), -F.col("cell_id"))
-            ).alias("cell_id"),
-            F.max("_cdot").alias("_cdot"),
-            F.first("_vq").alias("_vq"),
-        )
-    )
+    assign = _assign_cells(qv, cent, "_vid", "_vq")
     # one explicit partitioning on cell_id serves the window AND both sides
     # of the pairwise join below; the lazy checkpoint truncates lineage so
     # the three consumers (output rows + both join sides) read the ranked
     # table instead of re-running the broadcast argmax pass each
-    lsum = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda x, v: x + v
-    )
     ranked = cut_lineage(
         # explicit width: the pairwise join below is quadratic per cell
         repartition_by(assign, "cell_id")
@@ -730,7 +662,7 @@ def semantic_dedup(
         )
         # per-vector squared norm once per row, NOT per candidate pair in
         # the join below (exact integer — cosine bits unchanged)
-        .withColumn("_nrm", lsum(F.transform(F.col("_vq"), lambda x: x * x))),
+        .withColumn("_nrm", long_sq_norm(F.col("_vq"))),
         eager=False,
     )
     a = ranked.select(
@@ -746,16 +678,13 @@ def semantic_dedup(
         F.col("_vq").alias("_vq_b"),
         F.col("_nrm").alias("_nb"),
     )
-    dot = lsum(F.zip_with(F.col("_vq_a"), F.col("_vq_b"), lambda x, y: x * y))
-    cos_q6 = F.floor(
-        dot.cast("double")
-        / F.sqrt(F.col("_na").cast("double") * F.col("_nb").cast("double"))
-        * 1000000
-    ).cast("bigint")
+    cos = fixedpoint_cosine(
+        long_dot(F.col("_vq_a"), F.col("_vq_b")), F.col("_na"), F.col("_nb")
+    )
     dropped = (
         a.join(b, "cell_id")
         .filter(F.col("_rank_a") < F.col("_rank_b"))
-        .withColumn("_cos_q6", cos_q6)
+        .withColumn("_cos_q6", cos_q6(cos))
         .filter(F.col("_cos_q6") >= threshold_q6)
         .select(F.col("_vid_b").alias("_vid"))
         .distinct()

@@ -10,9 +10,9 @@ just the kernel call:
    it never fails the task (SURVEY.md §3.1). ``JsonLdError`` keeps its spec
    code; any other exception is coded by its type name.
 2. **The Arrow loop** — :func:`map_docs` (``mapInArrow`` over a document
-   column, a batch input hash-partitioned on the id to one task per slot)
-   and :func:`map_doc_groups` (``groupBy(doc_id).applyInArrow`` over a
-   triples table). Input columns come straight off the Arrow batch
+   column) and :func:`map_doc_groups` (``groupBy(doc_id).applyInArrow`` over
+   a triples table), each input hash-partitioned on the id to one task per
+   slot. Input columns come straight off the Arrow batch
    (``to_pylist``) and the output batch is built once per input batch from
    the declared schema — no pandas round-trip either way.
 3. **The triple-row codec** — :func:`quads_to_rows` (quads → flat triple
@@ -137,7 +137,10 @@ def map_doc_groups(
 
     ``groupBy(doc_id).applyInArrow``: each call sees one whole document,
     decoded by :func:`rows_to_quads`. Decoding errors quarantine like
-    kernel errors."""
+    kernel errors. The triples are hash-partitioned on ``doc_id`` to one
+    partition per task slot first, as in :func:`map_docs`: the group
+    exchange at the session width would run more Python tasks than slots,
+    or, coalesced by AQE, fewer."""
     arrow_schema = to_arrow_schema(schema)
     width = len(schema.fields) - 2
 
@@ -147,7 +150,7 @@ def map_doc_groups(
         rows = _run_doc(key[0].as_py(), lambda: fn(rows_to_quads(table)), width)
         return pa.Table.from_batches([_record_batch(rows, arrow_schema)])
 
-    return triples.groupBy("doc_id").applyInArrow(run, schema)
+    return repartition_per_slot(triples, "doc_id").groupBy("doc_id").applyInArrow(run, schema)
 
 
 def doc_bnode_namespace(doc_id: str) -> str:

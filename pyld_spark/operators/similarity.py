@@ -1,8 +1,8 @@
 """Similarity search over the ``embeddings`` table (training-data extras).
 
 - :func:`brute_force_topk` — exact cosine top-k: cross join bounded by
-  broadcast of the (small) query side, `zip_with` dot products JVM-side.
-  The baseline any ANN variant is measured against.
+  broadcast of the (small) query side. The baseline any ANN variant is
+  measured against.
 - :func:`quantized_dot_topk` — same shape but on integer-quantized vectors:
   bit-exact across engines (the DuckDB oracle replays it), deterministic
   tie-breaks.
@@ -13,7 +13,16 @@
 - :func:`lsh_bucketed_topk` — the scale path: random-hyperplane LSH buckets
   (sign of dot with deterministic hash-derived hyperplanes) shrink the
   candidate set from |corpus| to a bucket; at 100 TB the bucket join
-  replaces the cross join.
+  replaces the cross join. :func:`lsh_bucketed_topk_fixedpoint` is its
+  oracle-checkable twin (md5 hyperplanes, fixed-point cosine).
+- :func:`ivf_topk_quantized` — IVF-flat: winner-take-all cell assignment
+  (shared with :func:`~pyld_spark.operators.dedup.semantic_dedup`), then
+  exact ranking inside the probed cells.
+
+The four cosine top-k operators are one dataflow, :func:`_cosine_topk`, in
+one of two arithmetic bases (double or fixed-point); the vector expressions
+themselves (dot products, norms, hyperplanes, quantization) live in
+:mod:`pyld_spark.operators.vectors`.
 
 All rankings run through :func:`_two_phase_topk`: the rank-then-filter
 window that Spark 3.5+ compiles to a two-phase ``WindowGroupLimit``
@@ -25,24 +34,26 @@ hot path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyld_spark.operators.vectors import (  # noqa: F401 — hyperplane_expr*: public here too
+    cos_q6,
+    double_dot,
+    double_norm,
+    fixedpoint_cosine,
+    hyperplane_expr,
+    hyperplane_expr_md5,
+    hyperplane_signature,
+    hyperplane_signature_md5,
+    long_dot,
+    long_sq_norm,
+    quantize_expr,
+)
 from pyld_spark.session import cut_lineage
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
 
 
 def _two_phase_topk(
@@ -84,6 +95,65 @@ def _two_phase_topk(
     )
 
 
+class _Cosine(NamedTuple):
+    """One arithmetic basis of the cosine top-k dataflow."""
+
+    vector: Callable  # array<float> column → the vector the math runs on
+    norm: Callable  # vector → its norm term, computed once per vector
+    cosine: Callable  # (vec_a, vec_b, norm_a, norm_b) → the ranked cosine
+    out: Callable  # ranked cosine → the emitted (aliased) column
+
+
+_DOUBLE = _Cosine(
+    vector=lambda v: F.transform(v, lambda x: x.cast("double")),
+    norm=double_norm,
+    cosine=lambda a, b, na, nb: double_dot(a, b) / (na * nb),
+    out=lambda c: F.round(c, 4).alias("cosine"),
+)
+
+
+def _fixedpoint(scale: int) -> _Cosine:
+    return _Cosine(
+        vector=lambda v: quantize_expr(v, scale),
+        norm=long_sq_norm,
+        cosine=lambda a, b, na, nb: fixedpoint_cosine(long_dot(a, b), na, nb),
+        out=lambda c: cos_q6(c).alias("cos_q6"),
+    )
+
+
+def _cosine_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    basis: _Cosine,
+    bucket=None,
+) -> DataFrame:
+    """Cosine top-k per query, in ``basis``: the broadcast query side meets
+    the corpus in a cross join, or, given a ``bucket`` signature, in a join
+    on the bucket. Norms are computed once per vector, not per candidate
+    pair; each is the same value either way, so the cosine bits are too."""
+
+    def side(df, key, vec, norm):
+        v = df.select(key, basis.vector(F.col(vec_col)).alias(vec))
+        if bucket is not None:
+            v = v.withColumn("bucket", bucket(F.col(vec)))
+        return v.withColumn(norm, basis.norm(F.col(vec)))
+
+    c = side(embeddings, F.col(id_col).alias("neighbor_id"), "_cv", "_cn")
+    q = side(queries, F.col(query_id_col), "_qv", "_qn")
+    joined = (
+        c.crossJoin(F.broadcast(q)) if bucket is None
+        else c.join(F.broadcast(q), "bucket")
+    )
+    cos = basis.cosine(F.col("_cv"), F.col("_qv"), F.col("_cn"), F.col("_qn"))
+    scored = joined.select(query_id_col, "neighbor_id", cos.alias("cosine"))
+    out = _two_phase_topk(scored, query_id_col, k, "cosine")
+    return out.select(query_id_col, "neighbor_id", "rank", basis.out(F.col("cosine")))
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -97,32 +167,8 @@ def brute_force_topk(
     The query side is broadcast (small); the corpus side streams — no
     shuffle of the big table; ranking is two-phase partial top-k.
     """
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_cvec"),
-    )
-    qd = queries.select(
-        query_id_col,
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qvec"),
-    )
-    cos = _dot(F.col("_cvec"), F.col("_qvec")) / (
-        _norm(F.col("_cvec")) * _norm(F.col("_qvec"))
-    )
-    scored = (
-        c.crossJoin(F.broadcast(qd))
-        .select(query_id_col, "neighbor_id", cos.alias("cosine"))
-    )
-    out = _two_phase_topk(scored, query_id_col, k, "cosine")
-    return out.select(
-        query_id_col, "neighbor_id", "rank", F.round("cosine", 4).alias("cosine")
-    )
-
-
-def quantize_expr(vec_col, scale: int = 1000):
-    """array<float> → array<bigint> by round(x*scale): bit-exact in any
-    engine, so similarity ranks become integer comparisons."""
-    return F.transform(
-        vec_col, lambda x: F.round(x.cast("double") * scale, 0).cast("long")
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col, query_id_col, _DOUBLE
     )
 
 
@@ -142,14 +188,9 @@ def quantized_dot_topk(
     q = queries.select(
         F.col(query_id_col), quantize_expr(F.col(vec_col), scale).alias("_qq")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("_cq"), F.col("_qq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     scored = (
         c.crossJoin(F.broadcast(q))
-        .select(query_id_col, "neighbor_id", dot.alias("dot"))
+        .select(query_id_col, "neighbor_id", long_dot(F.col("_cq"), F.col("_qq")).alias("dot"))
     )
     return _two_phase_topk(scored, query_id_col, k, "dot")
 
@@ -171,50 +212,9 @@ def fixedpoint_cosine_topk(
     ``cos_q6`` = floor(cosine·10⁶) is an integer — no float rounding-rule
     dependence in the comparison. Returns (query_id, neighbor_id, rank,
     cos_q6)."""
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), quantize_expr(F.col(vec_col), scale).alias("_cq")
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col, query_id_col, _fixedpoint(scale)
     )
-    q = queries.select(
-        F.col(query_id_col), quantize_expr(F.col(vec_col), scale).alias("_qq")
-    )
-    lsum = lambda arr: F.aggregate(arr, F.lit(0).cast("long"), lambda a, v: a + v)  # noqa: E731
-    dot = lsum(F.zip_with(F.col("_cq"), F.col("_qq"), lambda x, y: x * y))
-    na = lsum(F.transform(F.col("_cq"), lambda x: x * x))
-    nb = lsum(F.transform(F.col("_qq"), lambda x: x * x))
-    cos = dot.cast("double") / F.sqrt(na.cast("double") * nb.cast("double"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .select(query_id_col, "neighbor_id", cos.alias("cosine"))
-    )
-    out = _two_phase_topk(scored, query_id_col, k, "cosine")
-    return out.select(
-        query_id_col, "neighbor_id", "rank",
-        F.floor(F.col("cosine") * 1000000).cast("bigint").alias("cos_q6"),
-    )
-
-
-def hyperplane_expr_md5(dim: int, plane_idx: int, scale: int = 1000):
-    """Integer hyperplane with a portable hash basis: component j of plane i
-    = (first-8-hex-chars of md5('i:j') as int) mod (2·scale+1) − scale.
-    Integer components × quantized vectors ⇒ the bucket sign decision is an
-    exact integer comparison — replayable in any engine, no float ULP risk."""
-    return F.array(
-        *[
-            F.lit(
-                # hash is deterministic: precompute driver-side, embed as
-                # literals (cheaper than per-row md5 of constants; identical
-                # to the SQL form the oracle uses)
-                _md5_int(f"{plane_idx}:{j}") % (2 * scale + 1) - scale
-            )
-            for j in range(dim)
-        ]
-    )
-
-
-def _md5_int(s: str) -> int:
-    import hashlib
-
-    return int(hashlib.md5(s.encode("ascii")).hexdigest()[:8], 16)
 
 
 def lsh_bucketed_topk_fixedpoint(
@@ -233,53 +233,9 @@ def lsh_bucketed_topk_fixedpoint(
     ranked by fixed-point cosine. The bucket join replaces the cross join;
     at 100 TB cost is |corpus| + per-bucket candidates, never all-pairs.
     Returns (query_id, neighbor_id, rank, cos_q6)."""
-
-    def signature(qvec):
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(qvec, hyperplane_expr_md5(dim, i, scale),
-                               lambda x, h: x * h),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                ) >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for i in range(n_planes)
-        ]
-        return F.concat(*bits)
-
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize_expr(F.col(vec_col), scale).alias("_cq"),
-    ).withColumn("bucket", signature(F.col("_cq")))
-    q = queries.select(
-        F.col(query_id_col), quantize_expr(F.col(vec_col), scale).alias("_qq")
-    ).withColumn("bucket", signature(F.col("_qq")))
-    lsum = lambda arr: F.aggregate(arr, F.lit(0).cast("long"), lambda a, v: a + v)  # noqa: E731
-    dot = lsum(F.zip_with(F.col("_cq"), F.col("_qq"), lambda x, y: x * y))
-    na = lsum(F.transform(F.col("_cq"), lambda x: x * x))
-    nb = lsum(F.transform(F.col("_qq"), lambda x: x * x))
-    cos = dot.cast("double") / F.sqrt(na.cast("double") * nb.cast("double"))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .select(query_id_col, "neighbor_id", cos.alias("cosine"))
-    )
-    out = _two_phase_topk(scored, query_id_col, k, "cosine")
-    return out.select(
-        query_id_col, "neighbor_id", "rank",
-        F.floor(F.col("cosine") * 1000000).cast("bigint").alias("cos_q6"),
-    )
-
-
-def hyperplane_expr(dim: int, plane_idx: int, scale: int = 1000):
-    """Deterministic pseudo-random hyperplane: component j of plane i =
-    (xxhash64(i, j) mod 2001) - 1000 — reproducible anywhere."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: (
-            F.pmod(F.xxhash64(F.lit(plane_idx), j), F.lit(2 * scale + 1)) - scale
-        ).cast("double"),
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col, query_id_col, _fixedpoint(scale),
+        lambda v: hyperplane_signature_md5(v, dim, n_planes, scale),
     )
 
 
@@ -297,32 +253,9 @@ def lsh_bucketed_topk(
     within candidates (two-phase). ``dim`` is a parameter — reading it from
     the data would fire a driver-side job during plan construction. Recall
     < 1 by design; measured against :func:`brute_force_topk` in tests."""
-
-    def signature(vec):
-        sig = F.lit(0).cast("long")
-        for i in range(n_planes):
-            bit = F.when(_dot(vec, hyperplane_expr(dim, i)) >= 0, 1).otherwise(0)
-            sig = sig * 2 + bit
-        return sig
-
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_cvec"),
-    ).withColumn("bucket", signature(F.col("_cvec")))
-    q = queries.select(
-        F.col(query_id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qvec"),
-    ).withColumn("bucket", signature(F.col("_qvec")))
-    cos = _dot(F.col("_cvec"), F.col("_qvec")) / (
-        _norm(F.col("_cvec")) * _norm(F.col("_qvec"))
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .select(query_id_col, "neighbor_id", cos.alias("cosine"))
-    )
-    out = _two_phase_topk(scored, query_id_col, k, "cosine")
-    return out.select(
-        query_id_col, "neighbor_id", "rank", F.round("cosine", 4).alias("cosine")
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col, query_id_col, _DOUBLE,
+        lambda v: hyperplane_signature(v, dim, n_planes),
     )
 
 
@@ -348,6 +281,31 @@ def ivf_centroids(
         .select(
             F.col(id_col).cast("long").alias("cell_id"),
             quantize_expr(F.col(vec_col), scale).alias("_cent"),
+        )
+    )
+
+
+def _assign_cells(
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vq_col: str
+) -> DataFrame:
+    """Winner-take-all IVF cell of each quantized vector: (``id_col``,
+    cell_id, _cdot, ``vq_col``), where ``_cdot`` is the winning exact dot
+    and ties go to the smaller cell_id, which shares that max."""
+    return (
+        vectors.crossJoin(F.broadcast(centroids))
+        .select(
+            id_col,
+            vq_col,
+            "cell_id",
+            long_dot(F.col(vq_col), F.col("_cent")).alias("_cdot"),
+        )
+        .groupBy(id_col)
+        .agg(
+            F.max_by(
+                "cell_id", F.struct(F.col("_cdot"), -F.col("cell_id"))
+            ).alias("cell_id"),
+            F.max("_cdot").alias("_cdot"),
+            F.first(vq_col).alias(vq_col),
         )
     )
 
@@ -385,32 +343,11 @@ def ivf_topk_quantized(
         if centroids is not None
         else ivf_centroids(embeddings, nlist, id_col, vec_col, scale)
     )
-    idot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
     c = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         quantize_expr(F.col(vec_col), scale).alias("_cq"),
     )
-    assign = (
-        c.crossJoin(F.broadcast(cent))
-        .select(
-            "neighbor_id",
-            "_cq",
-            "cell_id",
-            idot(F.col("_cq"), F.col("_cent")).alias("_cdot"),
-        )
-        .groupBy("neighbor_id")
-        .agg(
-            F.max_by(
-                "cell_id", F.struct(F.col("_cdot"), -F.col("cell_id"))
-            ).alias("cell_id"),
-            F.first("_cq").alias("_cq"),
-        )
-    )
+    assign = _assign_cells(c, cent, "neighbor_id", "_cq")
 
     q = queries.select(
         F.col(query_id_col),
@@ -427,7 +364,7 @@ def ivf_topk_quantized(
             query_id_col,
             "_qq",
             "cell_id",
-            idot(F.col("_qq"), F.col("_cent")).alias("_qdot"),
+            long_dot(F.col("_qq"), F.col("_cent")).alias("_qdot"),
         )
         .withColumn("_pr", probe_rank)
         .where(F.col("_pr") <= nprobe)
@@ -439,7 +376,7 @@ def ivf_topk_quantized(
         .select(
             query_id_col,
             "neighbor_id",
-            idot(F.col("_cq"), F.col("_qq")).alias("dot"),
+            long_dot(F.col("_cq"), F.col("_qq")).alias("dot"),
         )
     )
     return _two_phase_topk(scored, query_id_col, k, "dot")
@@ -491,22 +428,17 @@ def kmeans_centroids(
             F.transform("_v", lambda x: x.cast("double")).alias("_c"),
         )
     )
-    idotd = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     # nearest by euclidean distance on the quantized grid:
     # argmin ||v-c||^2 = argmin (||c||^2 - 2 v.c)
     for _ in range(iters):
-        cn = cent.withColumn("_cn", idotd(F.col("_c"), F.col("_c")))
+        cn = cent.withColumn("_cn", double_dot(F.col("_c"), F.col("_c")))
         scoredc = c.crossJoin(F.broadcast(cn)).select(
             "_id",
             "_v",
             "cell_id",
             (
                 F.col("_cn")
-                - 2.0 * idotd(F.transform("_v", lambda x: x.cast("double")), F.col("_c"))
+                - 2.0 * double_dot(F.transform("_v", lambda x: x.cast("double")), F.col("_c"))
             ).alias("_d2"),
         )
         assign = scoredc.groupBy("_id").agg(

@@ -117,3 +117,42 @@ def test_map_docs_runs_one_kernel_task_per_slot(spark, tmp_path):
     rows = out.collect()
     assert sorted(r.doc_id for r in rows) == sorted(ids)
     assert {r.part for r in rows} == {str(p) for p in range(slots)}
+
+
+def test_map_doc_groups_runs_one_python_task_per_slot(spark, tmp_path):
+    """A one-partition triples table (one parquet row group) is
+    hash-partitioned on ``doc_id`` to one partition per slot, and that
+    exchange also serves the group: exactly one exchange, and every slot
+    runs documents (under AQE the group exchange alone coalesces a small
+    input into one task)."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+    from pyspark.sql.types import StringType, StructField
+
+    from pyld_spark.operators.doc_runner import doc_schema, map_doc_groups
+
+    path = str(tmp_path / "triples.parquet")
+    ids = [f"doc-{i}" for i in range(64)]
+    cols = [c.split()[0] for c in TRIPLE_COLS.split(", ")]
+    rows = [(d, "https://ex.org/s", "https://ex.org/p", "literal", "v",
+             XSD + "string", None, "@default") for d in ids for _ in range(2)]
+    pq.write_table(pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)},
+                            schema=pa.schema([(c, pa.string()) for c in cols])), path)
+    triples = spark.read.parquet(path)
+    assert triples.rdd.getNumPartitions() == 1
+
+    def partition(_quads):
+        return [(str(TaskContext.get().partitionId()),)]
+
+    out = map_doc_groups(triples, partition,
+                         doc_schema(StructField("part", StringType(), True)))
+    slots = spark.sparkContext.defaultParallelism
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)", plan)
+    assert exchanges == [("doc_id", str(slots))], plan
+    rows = out.collect()
+    assert sorted(r.doc_id for r in rows) == sorted(ids)
+    assert {r.part for r in rows} == {str(p) for p in range(slots)}

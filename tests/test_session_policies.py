@@ -128,17 +128,18 @@ def test_lineage_and_shuffle_width_decided_only_in_session():
     ]
     assert not reliable_params, reliable_params
 
-    # the per-document kernel map takes the per-slot width from session.py
-    # and sets no width of its own
+    # the per-document kernel map and the per-document groups take the
+    # per-slot width from session.py and set no width of their own
     runner = ast.parse((PACKAGE / "operators" / "doc_runner.py").read_text())
     widths = {
         n.func.attr for n in ast.walk(runner)
         if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
     } & {"repartition", "coalesce", "repartitionByRange"}
     assert not widths, widths
-    [map_docs] = [n for n in runner.body
-                  if isinstance(n, ast.FunctionDef) and n.name == "map_docs"]
-    assert "repartition_per_slot" in {
-        n.func.id for n in ast.walk(map_docs)
-        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
-    }
+    for name in ("map_docs", "map_doc_groups"):
+        [fn] = [n for n in runner.body
+                if isinstance(n, ast.FunctionDef) and n.name == name]
+        assert "repartition_per_slot" in {
+            n.func.id for n in ast.walk(fn)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+        }, name

@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from pyld_spark.operators.canonicalize import canonicalize_documents, canonicalize_triples
-    from pyld_spark.operators.dedup import minhash_dedup_pairs, ngram_jaccard_pairs
+    from pyld_spark.operators.dedup import ngram_jaccard_pairs
     from pyld_spark.operators.expand_stage import docs_to_triples, split_quarantine
     from pyld_spark.operators.linking import entity_mention_counts, extract_mentions, link_entities
     from pyld_spark.operators.similarity import quantized_dot_topk
@@ -39,7 +39,6 @@ def main() -> None:
         F.col("vec_id").alias("query_id"), "embedding"
     )
 
-    from pyld_spark.operators.dedup import embedding_cosine_pairs
     from pyld_spark.operators.frame_stage import RDF_TYPE, frame_subject_filter
     from pyld_spark.transcripts import (
         synthesize_transcripts, write_bucketed_transcripts,
@@ -71,14 +70,10 @@ def main() -> None:
             entity_mention_counts(link_entities(extract_mentions(t))),
         "ngram_jaccard_pairs (inverted-index join)":
             ngram_jaccard_pairs(documents, threshold=0.2),
-        "minhash_dedup_pairs (LSH band bucket join)":
-            minhash_dedup_pairs(documents, threshold=0.2),
         "quantized_dot_topk (broadcast query side + partition-local bounded "
         "top-k [WindowGroupLimit Partial, O(k) state, JVM-side] before the "
         "per-query exchange; no full-candidate per-query window)":
             quantized_dot_topk(embs, queries),
-        "embedding_cosine_pairs (LSH bucket join, never all-pairs)":
-            embedding_cosine_pairs(embs, dim=64, threshold_q6=250000, n_planes=4),
         "frame_subject_filter @type frame (filtered scan seed — no "
         "full-corpus distinct, no semi-join; requireAll=False @type is "
         "decisive per reference early-return)":
@@ -98,6 +93,48 @@ def main() -> None:
             .filter(F.col("event_type") == "error")
             .select("event_id", "user_id"),
     }
+
+    # each hash-basis twin of the dedup/ANN layer, side by side: the two
+    # members of a pair run one shared dataflow and differ only in the
+    # basis expressions (pyld_spark/operators/vectors.py)
+    from pyld_spark.operators import dedup, similarity
+
+    plans.update({
+        "minhash_dedup_pairs, xxhash64 basis (checkpointed signatures; LSH "
+        "band bucket join; agreement count over both signature joins)":
+            dedup.minhash_dedup_pairs(documents, threshold=0.2),
+        "minhash_dedup_pairs_md5, md5 basis (the same dataflow; md5 band "
+        "hash; integer n_agree)":
+            dedup.minhash_dedup_pairs_md5(documents, threshold=0.2),
+        "simhash_near_pairs, xxhash64 long signature (checkpointed "
+        "signatures; pigeonhole block join, both sides co-partitioned on "
+        "(block_idx, block_val); xor+bit_count filter before the distinct)":
+            dedup.simhash_near_pairs(dedup.simhash_signatures(documents)),
+        "simhash_near_pairs_md5, md5 bit string packed into one long (the "
+        "same dataflow)":
+            dedup.simhash_near_pairs_md5(
+                dedup.simhash_signatures_md5(documents), max_hamming=16),
+        "brute_force_topk, double basis (broadcast query cross join; norms "
+        "once per vector; two-phase top-k)":
+            similarity.brute_force_topk(embs, queries),
+        "fixedpoint_cosine_topk, fixed-point basis (the same dataflow; "
+        "exact long dot and squared norms)":
+            similarity.fixedpoint_cosine_topk(embs, queries),
+        "lsh_bucketed_topk, xxhash64 hyperplanes (broadcast query bucket "
+        "join; norms once per vector; two-phase top-k)":
+            similarity.lsh_bucketed_topk(embs, queries, dim=64),
+        "lsh_bucketed_topk_fixedpoint, md5 hyperplanes (the same dataflow)":
+            similarity.lsh_bucketed_topk_fixedpoint(embs, queries, dim=64),
+        "ivf_topk_quantized (broadcast-centroid argmax cell assignment, "
+        "shared with semantic_dedup; probe-cell join; two-phase top-k)":
+            similarity.ivf_topk_quantized(embs, queries),
+        "semantic_dedup (the same cell assignment; one cell_id exchange "
+        "for the rank window and the in-cell pair join)":
+            dedup.semantic_dedup(embs, nlist=16, threshold_q6=250000),
+        "embedding_cosine_pairs (md5-hyperplane bucket join, never "
+        "all-pairs; norms once per vector)":
+            dedup.embedding_cosine_pairs(embs, dim=64, threshold_q6=250000, n_planes=4),
+    })
 
     from pyld_spark.operators.graph_stats import (
         comention_edges, pagerank_fixed_point,
