@@ -6,9 +6,16 @@ implementation from the RDF-canon spec).
 
 Spark role (SURVEY.md §2.9): transcript-derived graphs have *document-local*
 blank nodes, so canonicalization components never span conversations — this
-exact algorithm runs per document in one ``applyInArrow`` group
-(pyld_spark.operators.canonicalize), for every document up to
-``max_exact_quads`` quads; larger ones take that module's WL refinement.
+exact algorithm runs per document, for every document, through the
+per-document runner (pyld_spark.operators.canonicalize).
+
+Work budget (RDFC-1.0, "Dataset Poisoning"): Hash N-Degree Quads can take
+time exponential in a hash class (every permutation of a clique), time
+cubic in a blank-node path and memory quadratic in the depth its calls
+nest to. Each dataset may spend at most :data:`WORK_BUDGET` units of that
+work, with calls nested at most :data:`MAX_DEPTH` deep; past either,
+:meth:`URDNA2015.main` raises ``JsonLdError`` coded :data:`BUDGET_EXCEEDED`,
+which the per-document runner turns into the document's one quarantine row.
 """
 
 from __future__ import annotations
@@ -16,8 +23,26 @@ from __future__ import annotations
 import hashlib
 from itertools import permutations
 
+from pyld_spark.jsonld.errors import JsonLdError
 from pyld_spark.jsonld.nodemap import IdentifierIssuer
 from pyld_spark.jsonld.nquads import serialize_quad
+
+#: The Hash N-Degree Quads work one dataset may take, in units of one issued
+#: id copied: each call spends ``_STEP`` per quad whose related blank nodes
+#: it hashes, and each permutation ``_STEP`` plus the ids its issuer copy
+#: holds. A step costs about what copying ``_STEP`` ids does, so the units
+#: track one thread's time on cliques (permutation-bound) and on paths
+#: (copy-bound) alike, at 25-45 ns each on a 4-core host under load. A
+#: 1,200-quad blank-node path takes 2.63·10⁹; a 9-node clique would take
+#: about 10¹⁰.
+WORK_BUDGET = 3_000_000_000
+_STEP = 100
+#: The deepest the calls may nest. Each call in progress holds an issuer
+#: copy about as large as the depth, so the memory held grows with the
+#: square of the depth: about 55 MB at this one (a cycle of 250,000 blank
+#: nodes would need tens of GB long before it spent the work budget).
+MAX_DEPTH = 1_500
+BUDGET_EXCEEDED = "canonicalization budget exceeded"
 
 
 class _NDegreeResult:
@@ -39,6 +64,7 @@ class URDNA2015:
         self.bnode_to_quads: dict[str, list] = {}
         self.canonical_issuer = IdentifierIssuer("_:c14n")
         self._fd_cache: dict[str, str] = {}
+        self.work = 0
 
     # -- public ------------------------------------------------------------
 
@@ -188,13 +214,23 @@ class URDNA2015:
             try:
                 stack.append(self._hash_n_degree_steps(*stack[-1].send(result)))
                 result = None
+                if len(stack) > MAX_DEPTH:
+                    raise JsonLdError(f"hash n-degree calls nested over {MAX_DEPTH:,} deep",
+                                      BUDGET_EXCEEDED)
             except StopIteration as done:
                 stack.pop()
                 if not stack:
                     return done.value
                 result = done.value
 
+    def _spend(self, units: int):
+        self.work += units
+        if self.work > WORK_BUDGET:
+            raise JsonLdError(f"hash n-degree work over {WORK_BUDGET:,} units",
+                              BUDGET_EXCEEDED)
+
     def _hash_n_degree_steps(self, identifier: str, issuer: IdentifierIssuer):
+        self._spend(_STEP * len(self.bnode_to_quads[identifier]))
         hash_to_related: dict[str, list] = {}
         for quad in self.bnode_to_quads[identifier]:
             for related, position in self._related_bnodes(identifier, quad):
@@ -207,6 +243,7 @@ class URDNA2015:
             chosen_path = ""
             chosen_issuer = None
             for perm in permutations(hash_to_related[related_hash]):
+                self._spend(_STEP + len(issuer.order))
                 issuer_copy = issuer.clone()
                 path = ""
                 recursion_list = []

@@ -132,12 +132,17 @@ def parse_term_groups(g) -> tuple[dict, dict, dict, str]:
     return subj, pred, obj, graph
 
 
+_EOL_RE = re.compile(r"[\r\n]+")
+
+
 def parse_nquads(text: str) -> list:
-    """N-Quads document → list of quads. Duplicate quads per graph are
+    """N-Quads document → list of quads. Lines end at any run of CR and LF
+    (the grammar's ``EOL ::= [#xD#xA]+``), so a raw CR inside a string
+    literal ends its line and fails it. Duplicate quads per graph are
     dropped (reference nquads.py:126-134; Spark path: dropDuplicates)."""
     quads = []
     seen = set()
-    for i, line in enumerate(text.split("\n")):
+    for i, line in enumerate(_EOL_RE.split(text)):
         if _EMPTY_RE.match(line):
             continue
         m = _QUAD_RE.match(line)

@@ -130,10 +130,10 @@ def map_docs(
 
 def map_doc_groups(
     triples: DataFrame,
-    fn: Callable[[list], Iterable[tuple]],
+    fn: Callable[[str, list], Iterable[tuple]],
     schema: StructType,
 ) -> DataFrame:
-    """Run ``fn(quads)`` once per document of a triples table.
+    """Run ``fn(doc_id, quads)`` once per document of a triples table.
 
     ``groupBy(doc_id).applyInArrow``: each call sees one whole document,
     decoded by :func:`rows_to_quads`. Decoding errors quarantine like
@@ -147,7 +147,8 @@ def map_doc_groups(
     def run(key, table):
         import pyarrow as pa
 
-        rows = _run_doc(key[0].as_py(), lambda: fn(rows_to_quads(table)), width)
+        doc_id = key[0].as_py()
+        rows = _run_doc(doc_id, lambda: fn(doc_id, rows_to_quads(table)), width)
         return pa.Table.from_batches([_record_batch(rows, arrow_schema)])
 
     return repartition_per_slot(triples, "doc_id").groupBy("doc_id").applyInArrow(run, schema)

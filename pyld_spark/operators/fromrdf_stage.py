@@ -35,7 +35,7 @@ def triples_to_documents(triples: DataFrame, use_native_types: bool = False) -> 
     """(doc_id, flat triple cols) → (doc_id, expanded JSON-LD array json,
     error_code)."""
 
-    def expanded(quads):
+    def expanded(_doc_id, quads):
         from pyld_spark.jsonld.fromrdf import from_rdf
 
         return [(json.dumps(from_rdf(quads, use_native_types=use_native_types),

@@ -10,7 +10,10 @@ canonicalize reads the assemble docs as well as the triples
 transcript docs get their canonical labels in the same compiled per-row
 projection that emits their triples, with no exchange; only docs with a null
 or repeated turn ``@id`` (and untagged docs) are canonicalized from their
-rows of the triples table.
+rows of the triples table. A doc whose canonicalization is over the work
+budget (:data:`~pyld_spark.jsonld.canon.WORK_BUDGET`) is one row of the
+``canonicalize_quarantine`` table, as a doc the expander rejects is one row
+of ``triples_quarantine``.
 
 Sandbox note: checkpoints are parquet directories under ``workdir`` — the
 drop-in for Iceberg tables on a real cluster (``writeTo(...).createOrReplace``
@@ -199,7 +202,8 @@ class Pipeline:
             "triples", lambda: docs_to_triples(docs), error_split=split_quarantine
         )
         canonical = self._stage(
-            "canonicalize", lambda: canonicalize_documents(docs, triples)
+            "canonicalize", lambda: canonicalize_documents(docs, triples),
+            error_split=split_quarantine,
         )
         entities = self._stage("entities", lambda: entity_table(linked))
 
@@ -322,6 +326,7 @@ class Pipeline:
                 self._read("triples").join(todo, "doc_id", "left_semi"),
             ),
             self._read("triples").select("doc_id").distinct(), "doc_id",
+            error_split=split_quarantine,
         )
         # entities is a corpus-wide aggregate over the (appended) link
         # table — tiny next to the transcripts — so it is re-derived and

@@ -1,7 +1,6 @@
-"""Corpus-scale canonicalization vs exact per-doc URDNA2015: both label
-routes of canonical_labels (per-doc exact URDNA2015 under
-``max_exact_quads``, WL refinement above it) must reproduce the reference
-labels on transcript documents, whose first-degree hashes are distinct."""
+"""Corpus-scale canonicalization vs exact per-doc URDNA2015: canonical_labels
+must reproduce the reference labels on transcript documents, whose
+first-degree hashes are distinct."""
 
 from __future__ import annotations
 
@@ -25,14 +24,14 @@ def _ref_canonical_mapping(doc):
     return URDNA2015().main(quads)
 
 
-def _check_transcript_labels(spark, sf_dir, max_exact_quads):
+def _check_transcript_labels(spark, sf_dir):
     import hashlib
 
     docs = assemble_documents(transcripts_from_events(spark, sf_dir)).limit(10).cache()
     triples, _ = split_quarantine(docs_to_triples(docs))
     labels = {
         (r.doc_id, r.bnode): r.label
-        for r in canonical_labels(triples, max_exact_quads=max_exact_quads).collect()
+        for r in canonical_labels(triples).collect()
     }
     assert labels
     for row in docs.collect():
@@ -47,14 +46,8 @@ def _check_transcript_labels(spark, sf_dir, max_exact_quads):
 
 
 def test_fast_path_matches_exact_on_transcripts(spark, sf_dir):
-    """Default bound: every doc takes the exact per-doc route."""
-    _check_transcript_labels(spark, sf_dir, max_exact_quads=100_000)
-
-
-def test_wl_route_matches_exact_on_transcripts(spark, sf_dir):
-    """Every doc over a bound of 0: the WL route ranks by first-degree hash
-    first, so on these distinct-hash docs it issues URDNA2015's labels."""
-    _check_transcript_labels(spark, sf_dir, max_exact_quads=0)
+    """Every doc takes the exact per-doc route."""
+    _check_transcript_labels(spark, sf_dir)
 
 
 @requires_reference

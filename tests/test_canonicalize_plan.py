@@ -67,8 +67,8 @@ def test_no_masked_quad_or_fd_hash_exchange(triples_parquet):
 
 
 def test_no_fixpoint_without_oversized_docs(triples_parquet):
-    """No doc is over ``max_exact_quads``, so only the exact per-doc route is
-    planned: no masked-quad explode (Generate) and no ranking Window."""
+    """Only the exact per-doc route is planned: no masked-quad explode
+    (Generate) and no ranking Window."""
     plan = canonicalize_triples(triples_parquet)._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan, "masked-quad explode planned without an oversized doc"
     assert "Window" not in plan, "label-ranking window planned without an oversized doc"

@@ -1,10 +1,7 @@
 """Differential fuzz for the Spark canonicalization OPERATOR on random
-graphs: both label routes of operators/canonicalize.py (the exact per-doc
-URDNA2015 and, for oversized docs, the WL refinement) must reproduce the
-per-document URDNA2015 canonical document for arbitrary small bnode graphs,
-not just the transcript ontology and the hand-built automorphic gadgets.
-The WL route is held to that only where every first-degree hash of a doc
-is distinct; elsewhere its order is documented as not URDNA2015's.
+graphs: operators/canonicalize.py must reproduce the per-document URDNA2015
+canonical document for arbitrary small bnode graphs, not just the
+transcript ontology and the hand-built automorphic gadgets.
 
 300 seeded random docs run as ONE batched Spark job (per-example Spark
 jobs would be ~1000x slower than the assertion deserves). Comparison is
@@ -22,11 +19,8 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from pyld_spark.jsonld.canon import URDNA2015
 from pyld_spark.jsonld.nodemap import IdentifierIssuer
-from pyld_spark.operators.canonicalize import (
-    canonical_labels,
-    canonicalize_triples,
-    first_degree_hashes,
-)
+from pyld_spark.jsonld.nquads import parse_nquads
+from pyld_spark.operators.canonicalize import canonical_labels, canonicalize_triples
 from pyld_spark.operators.doc_runner import doc_bnode_namespace
 from tests.recursive_canon import RecursiveURDNA2015
 
@@ -128,14 +122,12 @@ def _urdna2015_mapping(quads):
     return URDNA2015().main(_quads(quads))
 
 
-def _label_mismatches(docs, df, max_exact_quads, only=None):
+def _label_mismatches(docs, df):
     labels: dict = {}
-    for r in canonical_labels(df, max_exact_quads=max_exact_quads).collect():
+    for r in canonical_labels(df).collect():
         labels.setdefault(r.doc_id, {})[r.bnode] = r.label
     mismatches = []
     for doc_id, quads in docs.items():
-        if only is not None and doc_id not in only:
-            continue
         got = _canonical_doc(quads, labels.get(doc_id, {}))
         want = _canonical_doc(quads, _urdna2015_mapping(quads))
         if got != want:
@@ -145,22 +137,7 @@ def _label_mismatches(docs, df, max_exact_quads, only=None):
 
 def test_random_graphs_match_exact_urdna2015(spark):
     docs, df = _corpus(spark, 0xC14, 300)
-    mismatches = _label_mismatches(docs, df, max_exact_quads=100_000)
-    assert not mismatches, f"{len(mismatches)} docs diverge; first: {mismatches[0]}"
-
-
-def test_wl_route_matches_urdna2015_on_distinct_hashes(spark):
-    """``max_exact_quads=0`` sends every doc to the WL route, which ranks by
-    first-degree hash first: on a doc whose first-degree hashes are all
-    distinct it must issue URDNA2015's labels (its simple path)."""
-    docs, df = _corpus(spark, 0xC14, 300)
-    distinct = {
-        r.doc_id for r in first_degree_hashes(df).groupBy("doc_id")
-        .agg((F.count("*") == F.count_distinct("fd_hash")).alias("ok"))
-        .filter("ok").collect()
-    }
-    assert len(distinct) > 250  # the leg checks most of the corpus
-    mismatches = _label_mismatches(docs, df, max_exact_quads=0, only=distinct)
+    mismatches = _label_mismatches(docs, df)
     assert not mismatches, f"{len(mismatches)} docs diverge; first: {mismatches[0]}"
 
 
@@ -218,11 +195,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _relabeled_through_labels(df, max_exact_quads):
+def _relabeled_through_labels(df):
     """``df``'s rows relabeled, on the driver, from the label rows of
     :func:`canonical_labels`: the output ``canonicalize_triples`` owes."""
-    labels = {(r.doc_id, r.bnode): r.label
-              for r in canonical_labels(df, max_exact_quads=max_exact_quads).collect()}
+    labels = {(r.doc_id, r.bnode): r.label for r in canonical_labels(df).collect()}
 
     def new(doc_id, v, is_bnode):
         label = labels.get((doc_id, v)) if is_bnode else None
@@ -231,36 +207,49 @@ def _relabeled_through_labels(df, max_exact_quads):
     return sorted(
         (r.doc_id, new(r.doc_id, r.subj, r.subj.startswith("_:")), r.pred, r.obj_kind,
          new(r.doc_id, r.obj_value, r.obj_kind == "blank node"),
-         r.obj_datatype, r.obj_language, new(r.doc_id, r.graph, r.graph.startswith("_:")))
+         r.obj_datatype, r.obj_language, new(r.doc_id, r.graph, r.graph.startswith("_:")),
+         None)
         for r in df.collect()
     )
 
 
 def test_canonicalize_triples_equals_relabel_through_labels(spark):
-    """The exact route's in-group relabel writes the labels
-    ``canonical_labels`` issues, prefixed with the doc namespace."""
+    """The in-group relabel writes the labels ``canonical_labels`` issues,
+    prefixed with the doc namespace, and quarantines nothing."""
     _, df = _corpus(spark, 0xC14, 300)
-    assert _rows(canonicalize_triples(df)) == _relabeled_through_labels(df, 100_000)
+    assert _rows(canonicalize_triples(df)) == _relabeled_through_labels(df)
 
 
-def test_wl_join_relabel_equals_relabel_through_labels(spark):
-    """The WL route's equi-join relabel, on a doc whose bnodes sit in every
-    position: subject, object (with a self-loop) and graph name. A literal
-    spelled like a bnode id is not relabeled."""
-    quads = [
-        ("_:b0", PREDS[0], "blank node", "_:b1", None, None, "@default"),
-        ("_:b1", PREDS[0], "blank node", "_:b1", None, None, "@default"),
-        ("_:b1", PREDS[1], "blank node", "_:b2", None, None, "_:b2"),
-        ("_:b2", PREDS[0], "IRI", "http://ex.org/anchor", None, None, "_:b0"),
-        ("_:b2", PREDS[1], "literal", "_:b0", None, None, "@default"),
-        ("http://ex.org/s", PREDS[0], "blank node", "_:b0", None, None, "_:b1"),
-    ]
-    df = spark.createDataFrame(
-        [(d, *q) for d in ("wl-a", "wl-b") for q in quads], _SCHEMA)
-    got = _rows(canonicalize_triples(df, max_exact_quads=1))
-    assert got == _relabeled_through_labels(df, max_exact_quads=1)
-    assert not [r for r in got if "_:b" in r[1] + r[7] or (r[3] == "blank node" and "_:b" in r[4])]
-    assert [r[4] for r in got if r[3] == "literal"] == ["_:b0", "_:b0"]
+def _canonize(quads):
+    """URDNA2015's canonical N-Quads of ``quads``, as a dataset: N-Quads
+    parsing drops a repeated quad, so the input is deduplicated too."""
+    return URDNA2015().canonize(list({repr(q): q for q in quads}.values()))
+
+
+def _spelled_fresh(quads):
+    """``quads`` with every ``_:c14nN`` spelled ``_:bN``: ``canonize`` leaves
+    a label already spelled ``_:c14n`` as it is (reference parity), which
+    would make re-canonizing canonical output pass whatever labels it gave."""
+    def fresh(v):
+        return "_:b" + v[6:] if v.startswith("_:c14n") else v
+
+    return [({**s, "value": fresh(s["value"])}, p,
+             {**o, "value": fresh(o["value"])} if o["type"] == "blank node" else o,
+             fresh(g)) for s, p, o, g in quads]
+
+
+def test_canonical_form_is_a_fixpoint():
+    """Reference-free: canonizing the parsed canonical form of a graph
+    gives the same canonical form, ``canonize(parse(canonize(Q))) ==
+    canonize(Q)``, on the 300-doc random-graph corpus."""
+    rng = random.Random(0xC14)
+    diverged = []
+    for i in range(300):
+        q = _quads(_random_doc(rng))
+        canonical = _canonize(q)
+        if _canonize(_spelled_fresh(parse_nquads(canonical))) != canonical:
+            diverged.append(i)
+    assert not diverged, f"{len(diverged)} docs are not a fixpoint; first: doc{diverged[0]}"
 
 
 def _n_degree_results(cls, quads):

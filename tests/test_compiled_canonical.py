@@ -1,13 +1,17 @@
 """In-row canonical labels for tagged transcript docs
 (``canonicalize_documents``) against the general DataFrame canonicalization
-(``canonicalize_triples``), and the plan shape of the in-row route: no
-exchange and no Python node between the scan and the canonical triples."""
+(``canonicalize_triples``), on fixed corpora and on random transcript
+shapes, and the plan shape of the in-row route: no exchange and no Python
+node between the scan and the canonical triples."""
 
 from __future__ import annotations
 
 import datetime
+import json
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
@@ -19,7 +23,9 @@ from pyld_spark.operators.expand_stage import (
     split_quarantine,
 )
 from pyld_spark.transcripts import (
+    CONV_BASE,
     DOC_SHAPE_META_KEY,
+    TRANSCRIPT_CONTEXT,
     TRANSCRIPT_SHAPE_V1,
     assemble_documents,
     synthesize_transcripts,
@@ -73,7 +79,7 @@ def test_in_row_labels_equal_general_canonicalization(corpus):
     # the in-row route alone serves every doc but the fallback ones
     in_row = _compiled_transcript_triples(docs, "conv_id", "doc", canonical=True)
     odd = F.col("doc_id").isin("a-dup", "zz-anon")
-    assert _rows(in_row) == _rows(want.where(~odd))
+    assert _rows(in_row) == _rows(want.where(~odd).drop("error_code"))
     assert in_row.where(odd).count() == 0
 
 
@@ -107,3 +113,39 @@ def test_tagged_plan_has_no_exchange_and_no_python(spark, tmp_path):
     for node in ("MapInArrow", "ArrowEvalPython", "FlatMapGroupsInArrow"):
         assert node not in plan, node
     assert _rows(out) == _rows(canonicalize_triples(triples))
+
+
+_TRANSCRIPT_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+# a literal field: absent (null) or any text, unicode and control characters included
+_field = st.one_of(st.none(), st.text(st.characters(blacklist_categories=("Cs",)), max_size=6))
+_ts = st.one_of(st.none(), st.datetimes(datetime.datetime(1970, 1, 2), datetime.datetime(2100, 1, 1)))
+# 0-40 turns, each turn index (hence each turn @id) distinct within its conversation
+_conversation = st.lists(st.integers(0, 10_000), max_size=40, unique=True).flatmap(
+    lambda idx: st.tuples(*(st.tuples(st.just(i), _field, _field, _field, _ts) for i in idx)))
+
+
+def _tagged_docs(spark, conversations):
+    """Assembled docs of ``conversations``. A conversation without turns has
+    no transcript row, so its doc is the one ``assemble_documents`` would
+    build, written out here with the same shape tag."""
+    rows = [(f"h-{c}", *turn) for c, turns in enumerate(conversations) for turn in turns]
+    docs = assemble_documents(spark.createDataFrame(rows, _TRANSCRIPT_DDL))
+    empty = [(f"h-{c}", '{"@context":' + json.dumps(TRANSCRIPT_CONTEXT, sort_keys=True)
+              + f',"@id":"{CONV_BASE}h-{c}","@type":"Conversation","turns":{{"@list":[]}}}}')
+             for c, turns in enumerate(conversations) if not turns]
+    if empty:
+        docs = docs.unionByName(spark.createDataFrame(empty, "conv_id string, doc string"))
+    return docs.select("conv_id", F.col("doc").alias(
+        "doc", metadata={DOC_SHAPE_META_KEY: TRANSCRIPT_SHAPE_V1}))
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(st.lists(_conversation, min_size=1, max_size=4))
+def test_in_row_labels_equal_general_canonicalization_on_random_shapes(spark, conversations):
+    docs = _tagged_docs(spark, conversations)
+    triples, bad = split_quarantine(docs_to_triples(docs))
+    assert bad.count() == 0
+    want = canonicalize_triples(triples)
+    assert _rows(canonicalize_documents(docs, triples)) == _rows(want)
+    assert want.where(F.col("error_code").isNotNull()).count() == 0

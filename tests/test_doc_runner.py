@@ -144,15 +144,17 @@ def test_map_doc_groups_runs_one_python_task_per_slot(spark, tmp_path):
     triples = spark.read.parquet(path)
     assert triples.rdd.getNumPartitions() == 1
 
-    def partition(_quads):
-        return [(str(TaskContext.get().partitionId()),)]
+    def partition(doc_id, _quads):
+        return [(doc_id, str(TaskContext.get().partitionId()))]
 
-    out = map_doc_groups(triples, partition,
-                         doc_schema(StructField("part", StringType(), True)))
+    out = map_doc_groups(triples, partition, doc_schema(
+        StructField("kernel_doc_id", StringType(), True), StructField("part", StringType(), True)))
     slots = spark.sparkContext.defaultParallelism
     plan = out._jdf.queryExecution().executedPlan().toString()
     exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)", plan)
     assert exchanges == [("doc_id", str(slots))], plan
     rows = out.collect()
     assert sorted(r.doc_id for r in rows) == sorted(ids)
+    # the kernel is handed its group's doc id
+    assert all(r.kernel_doc_id == r.doc_id for r in rows)
     assert {r.part for r in rows} == {str(p) for p in range(slots)}

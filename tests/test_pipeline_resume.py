@@ -11,6 +11,7 @@ import shutil
 import pytest
 
 from pyld_spark.operators.canonicalize import canonicalize_triples
+from pyld_spark.operators.expand_stage import split_quarantine
 from pyld_spark.plans.pipeline import Pipeline
 from pyld_spark.transcripts import transcripts_from_events
 
@@ -31,7 +32,8 @@ def test_pipeline_runs_and_resumes(spark, sf_dir, tmp_path, odd_convs):
     n_triples = out["triples"].count()
     n_canon = out["canonicalize"].count()
     # in-row labels for most docs, the general plan for the two odd ones
-    assert _sorted_rows(out["canonicalize"]) == _sorted_rows(canonicalize_triples(out["triples"]))
+    assert _sorted_rows(out["canonicalize"]) == _sorted_rows(
+        split_quarantine(canonicalize_triples(out["triples"]))[0])
     n_mat = out["materialize"].count()
     assert n_triples == n_canon
     assert n_mat > n_canon  # + mention triples
@@ -150,16 +152,17 @@ def test_stage_frames_reuse_the_written_schema(spark, tmp_path, monkeypatch):
 
 
 def test_pipeline_run_job_count(spark, tmp_path):
-    """One ``Pipeline.run`` over a small corpus runs at most 14 Spark jobs.
+    """One ``Pipeline.run`` over a small corpus runs at most 15 Spark jobs.
     At 1510b9d it ran 20: six of them inferred the schema of a stage table
-    that had just been written."""
+    that had just been written. Then 14, until the canonicalize stage
+    gained its quarantine table, whose write (empty here) is one job."""
     from pyld_spark.transcripts import synthesize_transcripts
 
     t = synthesize_transcripts(spark, n_convs=8, turns_per_conv=4, hot_convs=1, hot_turns=12)
     with _job_group(spark, "pipeline-run") as jobs:
         Pipeline(spark, str(tmp_path / "wd"), run_id="j").run(t)
         ran = jobs()
-    assert ran <= 14, ran
+    assert ran <= 15, ran
 
 
 def test_lineage_counts_are_the_written_rows(spark, tmp_path):

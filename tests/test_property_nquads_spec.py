@@ -10,10 +10,13 @@ compares the parser against the reference's and skips without it.
   ``EOL ::= [#xD#xA]+`` and a string literal may not hold a raw CR or LF
   (https://www.w3.org/TR/n-quads/#grammar-production-STRING_LITERAL_QUOTE),
   so neither may appear anywhere but at a line end.
+- The parser ends a line at any run of CR and LF, and rejects a raw CR or
+  LF inside a string literal (literal cases).
 """
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -92,3 +95,27 @@ def test_serialization_is_one_quad_per_line(dataset):
     assert "\r" not in text, text
     assert text.count("\n") == len(dataset), text
     assert all(line.endswith(" .") for line in text.split("\n")[:-1]), text
+
+
+_LF_DOC = ('<http://e/a> <http://e/p> "x" .\n'
+           '_:b0 <http://e/p> "y"@en <http://e/g> .\n'
+           '<http://e/a> <http://e/p> _:b0 _:g .\n')
+_LF_QUADS = [
+    (_iri("http://e/a"), _iri("http://e/p"),
+     {"type": "literal", "value": "x", "datatype": XSD_STRING}, "@default"),
+    (_bnode("_:b0"), _iri("http://e/p"),
+     {"type": "literal", "value": "y", "datatype": RDF_LANGSTRING, "language": "en"},
+     "http://e/g"),
+    (_iri("http://e/a"), _iri("http://e/p"), _bnode("_:b0"), "_:g"),
+]
+
+
+@pytest.mark.parametrize("eol", ["\n", "\r\n", "\r", "\n\r", "\r\n\r\n"])
+def test_every_eol_run_ends_a_line(eol):
+    assert parse_nquads(_LF_DOC.replace("\n", eol)) == _LF_QUADS
+
+
+@pytest.mark.parametrize("raw", ["\r", "\n"])
+def test_raw_line_break_in_a_literal_is_rejected(raw):
+    with pytest.raises(ValueError, match="invalid N-Quads line 1"):
+        parse_nquads(f'<http://e/a> <http://e/p> "a{raw}b" .\n')

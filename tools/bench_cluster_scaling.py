@@ -19,7 +19,9 @@ measured stage from upstream pipelining stalls):
   1. assemble:   bucketed transcripts → JSON-LD docs → parquet (timed)
   2. triples:    docs parquet → mapInArrow expand/toRDF → count (timed;
                  headline triples/sec)
-  3. canonicalize: cached triples → per-doc c14n labels + relabel (timed)
+  3. canonicalize: triples parquet → one doc_id exchange → per-doc
+                 URDNA2015 relabel inside each doc's group (timed; the plan
+                 is built without a probe job, so all of it is the count)
 
 Levels are run ALTERNATING with SCALING_TRIALS trials each and best-of is
 reported per level: run-to-run noise on this shared box is ±10% (measured on

@@ -59,7 +59,7 @@ def main() -> None:
         "docs_to_triples (assembly + one MapInArrow, no extra exchange)":
             triples,
         "canonicalize_triples (one doc_id exchange, one task per slot; per-doc "
-        "URDNA2015 applyInArrow relabels its own rows — no join)":
+        "URDNA2015 in map_doc_groups relabels its own rows — no join, no probe job)":
             canonicalize_triples(triples),
         "canonicalize_documents over bucketed tagged transcript docs (in-row "
         "fd hashes, ranks and labels — ZERO exchanges, no Python node)":

@@ -6,14 +6,14 @@ scaling probe).
 
 Times, each from cold parquet scan to count():
   A. fd-hash aggregation alone                (first_degree_hashes)
-  B. labels (size probe + per-doc URDNA2015)  (canonical_labels)
+  B. labels (per-doc URDNA2015, no probe job) (canonical_labels)
   C. relabeled triples                        (canonicalize_triples)
 
-A times the fd hashes alone (B plans them only for a doc over
-``max_exact_quads``). B and C run the same groups; C returns each doc's
-relabeled rows where B returns its label rows, so C-B is the cost of the
-in-group relabel and of writing out the fat table. Run AFTER any benchmark
-finishes (never concurrently):
+A times the relational fd hashes alone, which neither B nor C plans. B and
+C run the same per-document groups of ``doc_runner.map_doc_groups``; C
+returns each doc's relabeled rows where B returns its label rows, so C-B is
+the cost of the in-group relabel and of writing out the fat table. Run
+AFTER any benchmark finishes (never concurrently):
 
     python tools/profile_canonicalize.py [n_convs] [turns] [cores_max]
 """
